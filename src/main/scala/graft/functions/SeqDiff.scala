@@ -1,28 +1,34 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass diff of an aligned-sequence string against a reference —
-  * the codegen kernel behind [[graft.seq.SequenceModel.diff]] for the
-  * dominant literal-zero-offset case. Returns
+  * the kernel behind every [[graft.seq.SequenceModel.diff]] call. `seq`
+  * is placed at the int `offset` (a literal or a per-row column, the
+  * input_format.md offset of a short read inside a longer reference):
+  * code point `i` (1-based) sits at absolute position `offset + i`, is
+  * compared against the reference there and reported at that position.
+  * Returns
   * `struct<muts: array<struct<pos:int, sym:string>>, missing: array<int>>`,
-  * value-identical to the higher-order-function chain it replaces:
+  * value-identical to the higher-order-function chain (kept in test
+  * scope as the executable spec):
   *
   * {{{
   *   chars   = split(seq, "")                     // one piece per CODE POINT
-  *   zipped  = zip_with(chars, sequence(1, size(chars)), (s,p) => (p, s))
-  *   muts    = filter(zipped, s != substr(ref, p, 1) && s ∉ missingSyms)
-  *   missing = transform(filter(zipped, s ∈ missingSyms), p)
+  *   zipped  = zip_with(chars, sequence(1, size(chars)),
+  *                      (s,p) => (p + offset, s))
+  *   muts    = filter(zipped, s != substr(ref, pos, 1) && s ∉ missingSyms)
+  *   missing = transform(filter(zipped, s ∈ missingSyms), pos)
   * }}}
   *
   * Equivalence obligations (each pinned by SeqDiffSpec against the HOF
-  * chain on non-ASCII corpus-like text):
+  * chain on non-ASCII corpus-like text, for literal and column offsets):
   *  - `split(seq, "")` yields one piece per Unicode CODE POINT (combining
   *    marks are their own pieces, astral chars are ONE piece), with NO
   *    trailing empty piece, and `"" -> [""]` (verified against
@@ -31,52 +37,71 @@ import org.apache.spark.unsafe.types.UTF8String
   *    single empty symbol;
   *  - `substr(ref, pos, 1)` indexes by code point and yields "" past the
   *    end — mirrored by pre-splitting `ref` into code-point pieces once at
-  *    construction;
+  *    construction. Positions below 1 (only reachable with a negative
+  *    offset, which ingest rejects) compare against "" here, whereas
+  *    `substr` would read the reference from its end;
   *  - UTF8String equality is byte equality; pieces sliced from the input
   *    share its bytes, so comparisons never re-encode. Parquet strings are
   *    valid UTF-8 by contract (invalid lead bytes would advance 1 byte,
   *    matching numBytesForFirstByte);
   *  - null sequence -> null result (the HOF columns are all null), so the
-  *    struct's getFields propagate null exactly like the old columns.
+  *    struct's getFields propagate null exactly like the old columns. A
+  *    null offset also yields null (ingest coalesces an absent offset
+  *    to 0).
+  *
+  * Input types are checked at analysis: a non-string sequence or a
+  * non-int offset is a typed AnalysisException, never a runtime cast
+  * failure or a silently widened `pos`.
   *
   * Why not the HOF chain: zip_with/filter/transform do not participate in
   * whole-stage codegen — every element pays interpreted Expression eval
   * (a regex split, a per-element literal substr, an array_contains), which
-  * made the diff derivation the dominant cost of every in-query diffed
-  * table. This kernel is one loop over the UTF-8 bytes.
+  * made the diff derivation the dominant cost of every diffed table. This
+  * kernel is one loop over the UTF-8 bytes.
   */
 case class SeqDiff(
-    child: Expression,
+    seq: Expression,
+    offset: Expression,
     ref: String,
     missingSyms: Seq[String])
-    extends UnaryExpression {
+    extends BinaryExpression {
+
+  override def left: Expression = seq
+  override def right: Expression = offset
 
   override def dataType: DataType = SeqDiff.outType
 
   override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (seq.dataType, offset.dataType) match {
+      case (StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
+      case (s, o) => TypeCheckResult.TypeCheckFailure(
+        s"SeqDiff requires a string sequence and an int offset, " +
+          s"got ${s.catalogString} and ${o.catalogString}")
+    }
 
   @transient private lazy val refPieces: Array[UTF8String] =
     SeqDiff.codePointPieces(ref)
   @transient private lazy val missPieces: Array[UTF8String] =
     missingSyms.map(UTF8String.fromString).toArray
 
-  override def eval(input: InternalRow): Any = {
-    val s = child.eval(input)
-    if (s == null) null
-    else SeqDiff.compute(s.asInstanceOf[UTF8String], refPieces, missPieces)
-  }
+  override protected def nullSafeEval(s: Any, off: Any): Any =
+    SeqDiff.compute(s.asInstanceOf[UTF8String], off.asInstanceOf[Int],
+      refPieces, missPieces)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val refsRef = ctx.addReferenceObj("refPieces", refPieces,
       "org.apache.spark.unsafe.types.UTF8String[]")
     val missRef = ctx.addReferenceObj("missPieces", missPieces,
       "org.apache.spark.unsafe.types.UTF8String[]")
-    nullSafeCodeGen(ctx, ev, seq =>
-      s"${ev.value} = graft.functions.SeqDiff.compute($seq, $refsRef, $missRef);")
+    nullSafeCodeGen(ctx, ev, (s, off) =>
+      s"${ev.value} = graft.functions.SeqDiff.compute($s, $off, $refsRef, $missRef);")
   }
 
-  override protected def withNewChildInternal(newChild: Expression): SeqDiff =
-    copy(child = newChild)
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SeqDiff =
+    copy(seq = newLeft, offset = newRight)
 }
 
 object SeqDiff {
@@ -112,10 +137,12 @@ object SeqDiff {
 
   /** The per-row kernel: iterate the sequence's code points once, emitting
     * (pos, sym) for symbols that differ from the reference and are not
-    * missing symbols, and pos for missing symbols. `seq` must be non-null.
+    * missing symbols, and pos for missing symbols, where the first code
+    * point sits at absolute position `offset + 1`. `seq` must be non-null.
     */
   def compute(
       seq: UTF8String,
+      offset: Int,
       refPieces: Array[UTF8String],
       missPieces: Array[UTF8String]): InternalRow = {
     val bytes = seq.getBytes
@@ -145,11 +172,11 @@ object SeqDiff {
     }
 
     if (bytes.length == 0) {
-      // split("", "") == [""]: one empty piece at position 1
-      emit(UTF8String.EMPTY_UTF8, 1)
+      // split("", "") == [""]: one empty piece at the first position
+      emit(UTF8String.EMPTY_UTF8, offset + 1)
     } else {
       var i = 0
-      var pos = 1
+      var pos = offset + 1
       while (i < bytes.length) {
         val len = math.min(
           UTF8String.numBytesForFirstByte(bytes(i)), bytes.length - i)

@@ -1853,7 +1853,7 @@ object PipelineQueries {
       "SELECT CAST(10 AS BIGINT) AS n_probes, true AS recall_ok") { (s, dir) =>
       val emb = t(s, dir, "embeddings").localCheckpoint()
       val cents = graft.ann.Ivf.train(emb, "embedding", dim = 64, cells = 16, iters = 2)
-      // parameters picked by tools/PqCalib recall sweep: 8-dim subspaces
+      // parameters from the recall sweep recorded in b41a080: 8-dim subspaces
       // quantize much tighter than 16-dim ones on this data (m=8/k=16 →
       // 0.80 recall@5 at sf0.01 vs 0.40 for m=4/k=8)
       val books = graft.ann.Pq.train(emb, "embedding", dim = 64, m = 8, k = 16, iters = 2)
@@ -3105,7 +3105,7 @@ object PipelineQueries {
         .orderBy(col("cx").desc, col("tok")).limit(32)
       // NOTE (round 18): a per-doc collect_set + codegen'd Generate pair
       // expansion was built and MEASURED against this self-join
-      // (tools/LiftProbe): the set-agg variant lost ~0.2 s locally and
+      // (f8050e6): the set-agg variant lost ~0.2 s locally and
       // 0.6 s in the closing bench, because this query's floor is the
       // shared tokenize+distinct checkpoint (~0.9 s), not the pair join —
       // both self-join sides are already vocab-capped at ≤32 rows per doc

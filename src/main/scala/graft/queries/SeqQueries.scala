@@ -66,7 +66,7 @@ object SeqQueries {
   private def diffedDocs(s: SparkSession, dir: String, langFilter: Option[String]): DataFrame = {
     val base = t(s, dir, "documents")
     val f = langFilter.map(l => base.filter(col("lang") === l)).getOrElse(base)
-    // rebalance the one-file scan before the per-row regex+zip_with diff
+    // rebalance the one-file scan before the per-row SeqDiff
     // derivation (the established narrow-input-before-heavy-map pattern)
     SequenceModel.diff(
       f.repartition(s.sparkContext.defaultParallelism)
@@ -124,9 +124,9 @@ object SeqQueries {
       // materialize at the two ingest boundaries (diff-at-insert, then the
       // finalize-time rebase) — exactly where the reference persists storage.
       // Without the cut, every downstream reference to `muts` textually
-      // inlines the whole regexp+zip_with derivation chain (CollapseProject),
-      // and the 6 aggregation passes of adapt+mutations() re-evaluate it
-      // per row — 20s instead of ~2s at sf0.1.
+      // inlines the whole diff derivation (CollapseProject), and the 6
+      // aggregation passes of adapt+mutations() re-evaluate it per row —
+      // 20s instead of ~2s at sf0.1 with the former interpreted chain.
       val raw = SequenceModel.diff(
         base.repartition(s.sparkContext.defaultParallelism)
           .select(col("doc_id"), seqCol.as("seq")), "seq", aRef)

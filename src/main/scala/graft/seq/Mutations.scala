@@ -42,7 +42,7 @@ object Mutations {
     * (deltas / miss / mut / ambig splits) are narrow block reads: without
     * the cut, Catalyst pushes each consumer's tag filter below the
     * aggregate (tag is a grouping column) and the expensive upstream
-    * derivation — a regex + zip_with diff chain when sequences are diffed
+    * derivation — the per-row SeqDiff kernel when sequences are diffed
     * in-query, or 4 full fact-table scans at 100 TB — re-executes per
     * consumer (the q_seq_mutations plan read its parquet input 12×).
     *

@@ -1,6 +1,6 @@
 package graft.seq
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims}
 import org.apache.spark.sql.functions._
 
 /** The diffed sequence representation — the heart of the reference re-cast
@@ -33,10 +33,10 @@ object SequenceModel {
   /** Diff a raw aligned-sequence string column against `ref` at ingest
     * (≙ the reference's diff-at-insert, sequence_column.h:196-203).
     *
-    * Implementation note: built from `zip_with`/`filter` whose array
-    * arguments are evaluated once per row; the only per-element work is
-    * char compare against a foldable literal array. `offset` supports
-    * short reads placed inside a longer reference (input_format.md offset).
+    * One [[graft.functions.SeqDiff]] codegen kernel call per row yields
+    * both `muts` and `missing`. `offset` (an int literal or column) places
+    * a short read inside a longer reference (input_format.md offset); a
+    * non-int offset fails at analysis. Ingest rejects negative offsets.
     */
   def diff(
       df: DataFrame,
@@ -45,61 +45,18 @@ object SequenceModel {
       missingSyms: Set[String] = Set(),
       offset: Column = lit(0),
       prefix: String = ""): DataFrame = {
-    // The dominant case — a literal int 0 offset (every in-query diff and
-    // the streaming-ingest path) — runs the single-pass SeqDiff codegen
-    // kernel: the HOF chain below evaluates interpreted per CHARACTER
-    // (regex split, per-element literal substr, array_contains), which
-    // made the diff derivation the top cost of every in-query diffed
-    // table. A non-trivial offset (Database ingest with input_format
-    // offsets, where a wider offset type even changes the struct's pos
-    // type) keeps the legacy chain; SeqDiffSpec pins kernel ≡ chain on
-    // adversarial UTF-8.
-    // strict Int 0 (a Long 0L would widen the struct's pos type — legacy)
-    val zeroIntOffset =
-      org.apache.spark.sql.GraftShims.literalValue(offset).contains(0)
-    if (zeroIntOffset) {
-      val d = org.apache.spark.sql.GraftShims.column(graft.functions.SeqDiff(
-        org.apache.spark.sql.GraftShims.expression(col(seqCol)),
-        ref, missingSyms.toSeq.sorted))
-      df.withColumn(s"${prefix}cov_start",
-          when(col(seqCol).isNotNull, (offset + 1).cast("int")))
-        .withColumn(s"${prefix}cov_end", (offset + length(col(seqCol))).cast("int"))
-        .withColumn("__seqdiff", d)
-        .withColumn(s"${prefix}muts", col("__seqdiff").getField("muts"))
-        .withColumn(s"${prefix}missing", col("__seqdiff").getField("missing"))
-        .drop("__seqdiff")
-        .drop(seqCol)
-    } else diffLegacy(df, seqCol, ref, missingSyms, offset, prefix)
-  }
-
-  /** The higher-order-function diff chain — the offset-general path, and
-    * the executable spec the SeqDiff kernel is property-tested against.
-    */
-  private[graft] def diffLegacy(
-      df: DataFrame,
-      seqCol: String,
-      ref: String,
-      missingSyms: Set[String],
-      offset: Column,
-      prefix: String): DataFrame = {
-    val chars = split(col(seqCol), "")
-    val zipped = zip_with(chars, sequence(lit(1), size(chars)),
-      (s, p) => struct((p + offset).as("pos"), s.as("sym")))
-    val missLit = array(missingSyms.toSeq.sorted.map(lit): _*)
-    val muts = filter(zipped, x =>
-      x.getField("sym") =!= refAt(ref, x.getField("pos")) &&
-        !array_contains(missLit, x.getField("sym")))
-    val missing = transform(
-      filter(zipped, x => array_contains(missLit, x.getField("sym"))),
-      x => x.getField("pos"))
+    val d = GraftShims.column(graft.functions.SeqDiff(
+      GraftShims.expression(col(seqCol)), GraftShims.expression(offset),
+      ref, missingSyms.toSeq.sorted))
     // a null sequence has NO coverage anywhere: cov_start must be null too,
     // or the +1 prefix-sum delta at cov_start is never cancelled by the
     // (null) cov_end and every position ≥ cov_start gains phantom coverage
-    df.withColumn(s"${prefix}cov_start",
-        when(col(seqCol).isNotNull, (offset + 1).cast("int")))
-      .withColumn(s"${prefix}cov_end", (offset + length(col(seqCol))).cast("int"))
-      .withColumn(s"${prefix}muts", muts)
-      .withColumn(s"${prefix}missing", missing)
+    df.withColumn(s"${prefix}cov_start", when(col(seqCol).isNotNull, offset + 1))
+      .withColumn(s"${prefix}cov_end", offset + length(col(seqCol)))
+      .withColumn("__seqdiff", d)
+      .withColumn(s"${prefix}muts", col("__seqdiff").getField("muts"))
+      .withColumn(s"${prefix}missing", col("__seqdiff").getField("missing"))
+      .drop("__seqdiff")
       .drop(seqCol)
   }
 
@@ -296,7 +253,7 @@ object SequenceModel {
     // the tagged-event table is consumed entirely by the collect above —
     // release its lazily-checkpointed blocks so adaptation in a long-lived
     // ingest session doesn't accumulate pinned RDDs
-    org.apache.spark.sql.GraftShims.unpersistLocalCheckpoint(ev)
+    GraftShims.unpersistLocalCheckpoint(ev)
 
     if (winners.isEmpty) (diffed, ref)
     else {

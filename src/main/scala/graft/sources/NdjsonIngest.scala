@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** NDJSON ingest → versioned parquet, the append path of the engine
   * (reference: src/silo/append/ndjson_line_reader.h, table_inserter.h,
@@ -65,6 +65,10 @@ object NdjsonIngest {
 
   final case class DuplicatePrimaryKey(keys: Seq[String])
     extends RuntimeException(s"duplicate primary keys: ${keys.mkString(", ")}")
+
+  final case class NegativeOffset(records: Seq[String])
+    extends RuntimeException(
+      s"negative sequence offsets: ${records.mkString(", ")}")
 
   final case class SchemaMismatch(expected: String, got: String)
     extends RuntimeException(
@@ -150,6 +154,25 @@ object NdjsonIngest {
       .select(col(pk).cast("string")).limit(10)
       .collect().map(_.getString(0)).toSeq
     if (dups.nonEmpty) throw DuplicatePrimaryKey(dups)
+  }
+
+  /** Reject a negative aligned-sequence `offset` (any top-level struct
+    * column with an `offset` field) in one pass; throws NegativeOffset
+    * listing a sample of `key.sequence` records. A read cannot start
+    * before the reference: its symbols would sit at positions < 1.
+    */
+  def validateOffsets(df: DataFrame, pk: String): Unit = {
+    val seqs = df.schema.fields.collect {
+      case StructField(n, st: StructType, _, _) if st.fieldNames.contains("offset") => n
+    }
+    if (seqs.nonEmpty) {
+      val bad = df
+        .select(col(pk).cast("string").as("k"),
+          coalesce(seqs.map(n => when(col(s"$n.offset") < 0, lit(n))): _*).as("s"))
+        .filter(col("s").isNotNull).limit(10)
+        .collect().map(r => s"${r.getString(0)}.${r.getString(1)}").toSeq
+      if (bad.nonEmpty) throw NegativeOffset(bad)
+    }
   }
 
   /** Append a FULL SNAPSHOT as a new table version (the chain resets to

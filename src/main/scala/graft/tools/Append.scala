@@ -101,7 +101,8 @@ object Append {
       withLock(dataDir) {
         // 2. VALIDATE before any commit: FAILFAST schema parse (the read
         // mode aborts on malformed lines, ≙ table_inserter's per-record
-        // validation), batch-internal duplicate pks, then duplicates
+        // validation), batch-internal duplicate pks and negative
+        // sequence offsets, then duplicates
         // against every existing record — old keys must abort too
         // (duplicate_primary_key_exception.h; Database.build re-checks
         // the FULL input on every later build, so nothing unsound could
@@ -110,6 +111,7 @@ object Append {
         val batch = NdjsonIngest.read(spark, tmp.toString, schema)
           .localCheckpoint() // parse once; reused by validate + count
         NdjsonIngest.validatePrimaryKey(batch, pk)
+        NdjsonIngest.validateOffsets(batch, pk)
         val n = batch.count()
         val existing = NdjsonIngest.read(spark,
           Database.splitInputs(Serve.currentInput(dataDir)), schema)

@@ -13,25 +13,16 @@ object GraftShims {
   def expression(c: Column): Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
-  /** The literal value a Column wraps, if it is a plain literal — the
-    * Column→Expression shim returns an UNRESOLVED ColumnNodeExpression
-    * (foldable=false, no dataType), so literal-ness must be read off the
-    * ColumnNode. Value equality is strict (an Int 0 is not a Long 0L),
-    * which callers rely on for type-exact dispatch.
-    */
-  def literalValue(c: Column): Option[Any] = c.node match {
-    case l: org.apache.spark.sql.internal.Literal => Some(l.value)
-    case _ => None
-  }
-
   /** Release the block-manager blocks pinned by a `localCheckpoint()`ed
     * Dataset once its consumers are done — Dataset has no public API for
     * this (unpersist() only touches cacheManager entries), so a long-lived
     * session would otherwise hold every checkpointed intermediate until
-    * GC. A no-op for non-checkpointed frames.
+    * GC. Only the checkpoint itself releases: a frame merely DERIVED from
+    * one (its LogicalRDD deeper in the plan) is a no-op, so a caller can
+    * never drop blocks another consumer still reads.
     */
   def unpersistLocalCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.foreach {
+    df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()

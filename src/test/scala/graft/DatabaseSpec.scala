@@ -431,6 +431,81 @@ class DatabaseSpec extends SparkSpec {
       .postings.count() === 9L)
   }
 
+  // a self-contained one-sequence dataset (main = ACGTACGT) whose NDJSON
+  // records each carry the given main struct
+  private def offsetDataset(mains: (String, String)*): String = {
+    import java.nio.file.Files
+    val d = Files.createTempDirectory("graft_offsets")
+    Files.writeString(d.resolve("database_config.yaml"),
+      """schema:
+        |  instanceName: offsets
+        |  metadata:
+        |    - name: primaryKey
+        |      type: string
+        |  primaryKey: primaryKey
+        |""".stripMargin)
+    Files.writeString(d.resolve("reference_genomes.json"),
+      """{"nucleotideSequences":[{"name":"main","sequence":"ACGTACGT"}]}""")
+    Files.writeString(d.resolve("input.ndjson"), mains.map { case (k, m) =>
+      s"""{"primaryKey":"$k","main":$m}"""
+    }.mkString("", "\n", "\n"))
+    d.toString
+  }
+
+  test("ingest diffs 0, positive and absent offsets like the HOF chain") {
+    val d = offsetDataset(
+      "k0" -> """{"sequence":"ACGAACGT","offset":0}""", // 4: T→A
+      "k1" -> """{"sequence":"GTNCT","offset":2}""", // covers 3..7; 5 missing; 7: G→T
+      "k2" -> """{"sequence":"TCGTACGT"}""") // absent offset = 0; 1: A→T
+    val cat = Database.build(spark, d, s"$d/input.ndjson")
+    // no position adapts, so the stored diffs are against the global ref
+    assert(cat.sequences("default")("main").localRef === None)
+    val stored = Seq("primaryKey", "main_cov_start", "main_cov_end",
+      "main_muts", "main_missing")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(stored.map(col): _*).orderBy("primaryKey").collect().toSeq
+    val (schema, _) = Database.inputSchema(spark, d)
+    val raw = graft.sources.NdjsonIngest.read(spark, s"$d/input.ndjson", schema)
+      .withColumn("__seq", col("main.sequence"))
+    val chain = SeqDiffChain.diffLegacy(raw, "__seq", "ACGTACGT", Set("N"),
+      coalesce(col("main.offset"), lit(0)), "main_")
+    assert(rows(cat.tables("default")) === rows(chain))
+    assert(rows(cat.tables("default")).map(_.toString) === Seq(
+      "[k0,1,8,ArraySeq([4,A]),ArraySeq()]",
+      "[k1,3,7,ArraySeq([7,T]),ArraySeq(5)]",
+      "[k2,1,8,ArraySeq([1,T]),ArraySeq()]"))
+    val muts = Planner.plan(
+      "default.mutations(minProportion := 0.01, sequenceNames := {main})", cat)
+      .collect().map(r => (r.getAs[String]("mutationFrom"),
+        r.getAs[String]("mutationTo"), r.getAs[Any]("position").toString,
+        r.getAs[Any]("coverage").toString, r.getAs[Any]("count").toString,
+        r.getAs[Double]("proportion")))
+      .sortBy(_._3).toSeq
+    assert(muts === Seq(
+      ("A", "T", "1", "2", "1", 0.5),
+      ("T", "A", "4", "3", "1", 0.3333), // proportions round to 4 places
+      ("G", "T", "7", "3", "1", 0.3333)))
+  }
+
+  test("a negative sequence offset fails the build with NegativeOffset") {
+    val d = offsetDataset(
+      "k0" -> """{"sequence":"ACGT","offset":0}""",
+      "k1" -> """{"sequence":"ACGT","offset":-2}""")
+    val e = intercept[graft.sources.NdjsonIngest.NegativeOffset](
+      Database.build(spark, d, s"$d/input.ndjson"))
+    assert(e.records === Seq("k1.main"))
+    // the append CLI rejects it too, before committing anything
+    val ok = offsetDataset("k0" -> """{"sequence":"ACGT"}""")
+    val batch = java.nio.file.Files.createTempFile("negoffset", ".ndjson")
+    java.nio.file.Files.writeString(batch,
+      """{"primaryKey":"k2","main":{"sequence":"ACGT","offset":-1}}""" + "\n")
+    intercept[graft.sources.NdjsonIngest.NegativeOffset](
+      graft.tools.Append.run(spark, Map("dataDirectory" -> ok,
+        "appendFile" -> batch.toString)))
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(ok, "append-000001.ndjson")))
+  }
+
   test("phylo tree from the dataset's newick file") {
     val m = run(
       "default.filter(country = 'Switzerland').mostRecentCommonAncestor('primaryKey')")

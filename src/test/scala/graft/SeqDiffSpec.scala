@@ -1,14 +1,15 @@
 package graft
 
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.seq.SequenceModel
 
 /** Equivalence property suite for the SeqDiff codegen kernel vs the
-  * higher-order-function chain it replaced (SequenceModel.diffLegacy):
+  * higher-order-function chain it replaced ([[SeqDiffChain.diffLegacy]]):
   * identical schema and identical rows on adversarial UTF-8 input —
   * multi-byte code points, combining marks, astral-plane symbols, empty
-  * and null sequences — plus corpus-like text, under both codegen and
-  * interpreted evaluation.
+  * and null sequences — plus corpus-like text, for literal and per-row
+  * column offsets, under both codegen and interpreted evaluation.
   */
 class SeqDiffSpec extends SparkSpec {
 
@@ -22,7 +23,7 @@ class SeqDiffSpec extends SparkSpec {
     "sartear",
     "exact match of the reference prefix sartearaeeaaaeao",
     "héllo wörld", // 2-byte code points
-    "éx", // combining mark: separate code point, separate piece
+    "éx", // combining mark: separate code point, separate piece
     "a𝄞b𝄞", // astral (4-byte) symbols
     "你好世界", // CJK
     "NNNNN", // missing symbols only
@@ -33,59 +34,86 @@ class SeqDiffSpec extends SparkSpec {
     "é" * 61 // multi-byte, one past the 60-char probe window
   )
 
-  private def frames(ref: String, missing: Set[String]) = {
+  // `off` is a per-row int offset: 0, then growing past the references
+  private def base: DataFrame = {
     import spark.implicits._
-    val base = (corpus.map(Option(_)) :+ (None: Option[String]))
-      .zipWithIndex.toDF("seq", "id")
-    val kernel = SequenceModel.diff(base, "seq", ref, missing)
-    val legacy = SequenceModel.diffLegacy(base, "seq", ref,
-      missing, lit(0), "")
+    (corpus.map(Option(_)) :+ (None: Option[String]))
+      .zipWithIndex.map { case (s, i) => (s, i, i * 5) }
+      .toDF("seq", "id", "off")
+  }
+
+  private def frames(ref: String, missing: Set[String],
+      offset: Column = lit(0), input: DataFrame = base) = {
+    val kernel = SequenceModel.diff(input, "seq", ref, missing, offset)
+    val legacy = SeqDiffChain.diffLegacy(input, "seq", ref, missing, offset, "")
     (kernel, legacy)
   }
 
-  private def assertSame(ref: String, missing: Set[String]): Unit = {
-    val (kernel, legacy) = frames(ref, missing)
-    assert(kernel.schema === legacy.schema,
-      s"schema drift for ref=$ref missing=$missing")
-    val k = kernel.orderBy("id").collect().toSeq
-    val l = legacy.orderBy("id").collect().toSeq
-    assert(k === l, s"row drift for ref=$ref missing=$missing")
+  private def assertSame(kernel: DataFrame, legacy: DataFrame): Unit = {
+    assert(kernel.schema === legacy.schema, "schema drift")
+    assert(kernel.orderBy("id").collect().toSeq ===
+      legacy.orderBy("id").collect().toSeq, "row drift")
   }
 
-  test("kernel path is ACTUALLY selected for the literal-zero offset") {
-    // guards the dispatch itself: a silently-failing gate would make every
-    // equivalence test below pass trivially (legacy == legacy)
-    val (kernel, legacy) = frames(REF, Set("N"))
-    assert(kernel.queryExecution.analyzed.toString.contains("seqdiff"),
-      "diff() did not route through the SeqDiff kernel")
-    assert(!legacy.queryExecution.analyzed.toString.contains("seqdiff"))
-  }
-
-  test("kernel == HOF chain: ascii reference, no missing symbols") {
-    assertSame(REF, Set())
-  }
-
-  test("kernel == HOF chain: ascii reference, missing symbol N") {
-    assertSame(REF, Set("N"))
-  }
-
-  test("kernel == HOF chain: multi-byte reference, two missing symbols") {
-    assertSame(REF_UNI, Set("N", "é"))
-  }
-
-  test("kernel == HOF chain under interpreted (non-codegen) eval") {
-    val (kernel, legacy) = frames(REF, Set("N"))
+  private def interpreted[T](body: => T): T = {
     val conf = spark.conf
     val oldWs = conf.get("spark.sql.codegen.wholeStage", "true")
     val oldFm = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
     try {
       conf.set("spark.sql.codegen.wholeStage", "false")
       conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      assert(kernel.orderBy("id").collect().toSeq ===
-        legacy.orderBy("id").collect().toSeq)
+      body
     } finally {
       conf.set("spark.sql.codegen.wholeStage", oldWs)
       conf.set("spark.sql.codegen.factoryMode", oldFm)
+    }
+  }
+
+  test("every diff() plan contains seqdiff") {
+    // SeqDiff is the only diff implementation: no offset shape may route
+    // around it (and the chain, the spec it is compared against, never
+    // contains it, so no equivalence test below is trivially chain≡chain)
+    for (offset <- Seq(lit(0), lit(7), col("off"))) {
+      val (kernel, legacy) = frames(REF, Set("N"), offset)
+      assert(kernel.queryExecution.analyzed.toString.contains("seqdiff"),
+        s"diff() with offset $offset did not run the SeqDiff kernel")
+      assert(!legacy.queryExecution.analyzed.toString.contains("seqdiff"))
+    }
+  }
+
+  test("kernel == HOF chain: ascii reference, no missing symbols") {
+    val (k, l) = frames(REF, Set())
+    assertSame(k, l)
+  }
+
+  test("kernel == HOF chain: ascii reference, missing symbol N") {
+    val (k, l) = frames(REF, Set("N"))
+    assertSame(k, l)
+  }
+
+  test("kernel == HOF chain: multi-byte reference, two missing symbols") {
+    val (k, l) = frames(REF_UNI, Set("N", "é"))
+    assertSame(k, l)
+  }
+
+  test("kernel == HOF chain under interpreted (non-codegen) eval") {
+    val (k, l) = frames(REF, Set("N"))
+    interpreted(assertSame(k, l))
+  }
+
+  test("kernel == HOF chain: literal positive offset") {
+    for (ref <- Seq(REF, REF_UNI)) {
+      val (k, l) = frames(ref, Set("N", "é"), lit(3))
+      assertSame(k, l)
+      interpreted(assertSame(k, l))
+    }
+  }
+
+  test("kernel == HOF chain: per-row int column offset") {
+    for (ref <- Seq(REF, REF_UNI)) {
+      val (k, l) = frames(ref, Set("N", "é"), col("off"))
+      assertSame(k, l)
+      interpreted(assertSame(k, l))
     }
   }
 
@@ -96,26 +124,29 @@ class SeqDiffSpec extends SparkSpec {
     val rnd = new scala.util.Random(42)
     val rows = (1 to 300).map { i =>
       val n = rnd.nextInt(80)
-      (Seq.fill(n)(alphabet(rnd.nextInt(alphabet.size))).mkString, i)
+      (Seq.fill(n)(alphabet(rnd.nextInt(alphabet.size))).mkString, i,
+        rnd.nextInt(40))
     }
-    val base = rows.toDF("seq", "id")
-    val kernel = SequenceModel.diff(base, "seq", REF, Set("N"))
-    val legacy = SequenceModel.diffLegacy(base, "seq", REF, Set("N"),
-      lit(0), "")
-    assert(kernel.schema === legacy.schema)
-    assert(kernel.orderBy("id").collect().toSeq ===
-      legacy.orderBy("id").collect().toSeq)
+    val input = rows.toDF("seq", "id", "off")
+    for (offset <- Seq(lit(0), col("off"))) {
+      val (k, l) = frames(REF, Set("N"), offset, input)
+      assertSame(k, l)
+    }
   }
 
-  test("non-zero / non-literal offset falls back to the legacy chain") {
+  test("non-int offsets and non-string sequences fail at analysis time") {
     import spark.implicits._
-    val base = Seq(("abc", 7), ("sNa", 0)).toDF("seq", "off")
-    val viaCol = SequenceModel.diff(base, "seq", REF, Set("N"),
-      offset = col("off"))
-    val viaLegacy = SequenceModel.diffLegacy(base, "seq", REF, Set("N"),
-      col("off"), "")
-    assert(viaCol.schema === viaLegacy.schema)
-    assert(viaCol.orderBy("off").collect().toSeq ===
-      viaLegacy.orderBy("off").collect().toSeq)
+    def rejects(input: DataFrame, offset: Column): Unit = {
+      val e = intercept[AnalysisException](
+        SequenceModel.diff(input, "seq", REF, Set("N"), offset))
+      assert(e.getMessage.contains("SeqDiff requires a string sequence and an int offset"),
+        e.getMessage)
+    }
+    // a long or double zero would once have silently widened `pos`
+    rejects(base, lit(0L))
+    rejects(base, lit(0.0))
+    rejects(base, lit("0"))
+    rejects(base, col("seq"))
+    rejects(Seq((1, 0)).toDF("seq", "id"), lit(0))
   }
 }
