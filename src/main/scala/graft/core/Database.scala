@@ -223,8 +223,7 @@ object Database {
       splitInputs(ndjsonPath), schema)
     // PK uniqueness is validated over the FULL input even on incremental
     // builds: an appended row duplicating an OLD key must abort
-    graft.sources.NdjsonIngest.validatePrimaryKey(raw, cfg.primaryKey)
-    graft.sources.NdjsonIngest.validateOffsets(raw, cfg.primaryKey)
+    graft.sources.NdjsonIngest.validateIngest(raw, cfg.primaryKey)
 
     // diff-at-ingest per sequence; parse "pos:seq" insertion entries.
     // A function of the frame, not the frame itself: the incremental

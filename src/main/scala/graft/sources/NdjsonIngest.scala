@@ -139,7 +139,22 @@ object NdjsonIngest {
   }
 
   /** Validate PK uniqueness; throws DuplicatePrimaryKey listing a sample. */
-  def validatePrimaryKey(df: DataFrame, pk: String): Unit = {
+  def validatePrimaryKey(df: DataFrame, pk: String): Unit =
+    validateRows(df, pk, Nil)
+
+  /** validatePrimaryKey for aligned-sequence NDJSON input: the null-key
+    * scan also rejects a negative `offset` in any top-level struct column
+    * with an `offset` field (NegativeOffset, listing a sample of
+    * `key.sequence` records), so the check costs no extra pass. A read
+    * cannot start before the reference: its symbols would sit at
+    * positions < 1.
+    */
+  def validateIngest(df: DataFrame, pk: String): Unit =
+    validateRows(df, pk, df.schema.fields.collect {
+      case StructField(n, st: StructType, _, _) if st.fieldNames.contains("offset") => n
+    })
+
+  private def validateRows(df: DataFrame, pk: String, seqs: Seq[String]): Unit = {
     // NULL pks are rejected outright, not just deduplicated: the
     // append clash check is an equality semi-join that can never match
     // a NULL key, so one-null-per-batch would accumulate one null row
@@ -148,31 +163,18 @@ object NdjsonIngest {
     // append layers with zero capacity (an unsound merged count lower
     // bound and top-k loss cap). A key that can't be compared for
     // equality can't be a key.
-    if (df.filter(col(pk).isNull).limit(1).count() > 0)
+    val negative = coalesce(seqs.map(n => when(col(s"$n.offset") < 0, lit(n))) :+
+      lit(null).cast("string"): _*)
+    val flagged = df.filter(col(pk).isNull || negative.isNotNull)
+      .select(col(pk).cast("string"), negative).limit(10).collect()
+    if (flagged.exists(_.isNullAt(0)))
       throw DuplicatePrimaryKey(Seq("NULL (primary keys must be non-null)"))
+    if (flagged.nonEmpty)
+      throw NegativeOffset(flagged.map(r => s"${r.getString(0)}.${r.getString(1)}").toSeq)
     val dups = df.groupBy(col(pk)).count().filter(col("count") > 1)
       .select(col(pk).cast("string")).limit(10)
       .collect().map(_.getString(0)).toSeq
     if (dups.nonEmpty) throw DuplicatePrimaryKey(dups)
-  }
-
-  /** Reject a negative aligned-sequence `offset` (any top-level struct
-    * column with an `offset` field) in one pass; throws NegativeOffset
-    * listing a sample of `key.sequence` records. A read cannot start
-    * before the reference: its symbols would sit at positions < 1.
-    */
-  def validateOffsets(df: DataFrame, pk: String): Unit = {
-    val seqs = df.schema.fields.collect {
-      case StructField(n, st: StructType, _, _) if st.fieldNames.contains("offset") => n
-    }
-    if (seqs.nonEmpty) {
-      val bad = df
-        .select(col(pk).cast("string").as("k"),
-          coalesce(seqs.map(n => when(col(s"$n.offset") < 0, lit(n))): _*).as("s"))
-        .filter(col("s").isNotNull).limit(10)
-        .collect().map(r => s"${r.getString(0)}.${r.getString(1)}").toSeq
-      if (bad.nonEmpty) throw NegativeOffset(bad)
-    }
   }
 
   /** Append a FULL SNAPSHOT as a new table version (the chain resets to

@@ -110,8 +110,7 @@ object Append {
         // BEFORE writing and so do we)
         val batch = NdjsonIngest.read(spark, tmp.toString, schema)
           .localCheckpoint() // parse once; reused by validate + count
-        NdjsonIngest.validatePrimaryKey(batch, pk)
-        NdjsonIngest.validateOffsets(batch, pk)
+        NdjsonIngest.validateIngest(batch, pk)
         val n = batch.count()
         val existing = NdjsonIngest.read(spark,
           Database.splitInputs(Serve.currentInput(dataDir)), schema)

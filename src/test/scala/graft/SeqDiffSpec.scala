@@ -23,7 +23,7 @@ class SeqDiffSpec extends SparkSpec {
     "sartear",
     "exact match of the reference prefix sartearaeeaaaeao",
     "héllo wörld", // 2-byte code points
-    "éx", // combining mark: separate code point, separate piece
+    "e\u0301x", // combining mark: separate code point, separate piece
     "a𝄞b𝄞", // astral (4-byte) symbols
     "你好世界", // CJK
     "NNNNN", // missing symbols only
