@@ -3,15 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup queries absorb JVM/codegen/JIT cost before timing
     // starts (JMH-style): one trivial scan plus one query each from the
@@ -132,7 +124,7 @@ object Bench {
       val w = new java.io.PrintWriter("BENCH_QUERIES.json")
       try w.println(fullLine) finally w.close()
     } catch { case scala.util.control.NonFatal(_) => () } // unwritable cwd must not fail the bench
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"queries_file":"BENCH_QUERIES.json","sf":"$sfDir"}""")
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n_queries":${results.size},"queries_file":"BENCH_QUERIES.json","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -41,7 +41,6 @@ object ConnectedComponents {
       edges: DataFrame, eaCol: String, ebCol: String,
       nodes: DataFrame, nodeCol: String,
       maxIter: Int = 25): DataFrame = {
-    val debug = sys.env.contains("GRAFT_CC_LOG")
     // materialize the (possibly expensive) edge derivation ONCE — the
     // reversed union and every round's join are narrow reads of these
     // blocks, so nothing upstream of the edge list ever re-executes
@@ -90,7 +89,6 @@ object ConnectedComponents {
     // broadcast conversion of the tiny per-round joins beats the
     // per-stage scheduling it adds — measured both ways.)
     while (it < maxIter + 1 && !converged) {
-      val t0 = System.nanoTime()
       // ONE step per materialized round: chaining two steps into one plan
       // was tried and lost — the step subtree appears 2x per consumer, so
       // a 2-step plan re-plans/recomputes up to 4 subtree copies and cost
@@ -99,15 +97,11 @@ object ConnectedComponents {
       val next = step(labels)
         .observe(obs, sum(col("comp").cast("decimal(38,0)")).as("s"))
         .localCheckpoint()
-      val t1 = System.nanoTime()
       val s = labelSum(obs.get)
       converged = s.compareTo(lastSum) == 0
       lastSum = s
       labels = next
       it += 1
-      if (debug) System.err.println(
-        f"GRAFT_CC round=$it sum=$s ckpt=${(t1 - t0) / 1e9}%.3fs " +
-          f"obsWait=${(System.nanoTime() - t1) / 1e9}%.3fs")
     }
     if (!converged)
       throw new IllegalStateException(

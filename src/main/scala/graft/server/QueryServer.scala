@@ -612,9 +612,16 @@ object QueryServer {
     * actually changed — the hot-swap contract without paying catalog
     * construction per request. `version()` should read the versioned
     * tables' committed pointers (e.g. `NdjsonIngest.commits(dir).last`);
-    * `build(v)` constructs the catalog for that version. Thread-safe:
-    * concurrent requests during a swap may build twice, but each request
-    * still gets a consistent (catalog, version) pair.
+    * `build(v)` constructs the catalog for that version.
+    *
+    * Thread-safe and single-flight: a cache hit takes no lock; a miss
+    * takes one lock, re-reads the version and re-checks the cache under
+    * it, so requests arriving during a swap wait for the one build of the
+    * new version instead of each running their own (concurrent builds of
+    * one version would write the same index layer dir); a request that
+    * waited on the lock serves the version current when it got it.
+    * Single-flight holds within this process only: another process
+    * rebuilding the same data directory is not coordinated here.
     *
     * A commit can land BETWEEN `version()` and `build(v)` — an unpinned
     * build (one reading `latest` pointers) would then hold newer data than
@@ -630,24 +637,30 @@ object QueryServer {
       build: String => Catalog): () => (Catalog, String) = {
     val cache =
       new java.util.concurrent.atomic.AtomicReference[(String, Catalog)]()
+    val buildLock = new Object
     () => {
-      var v = version()
-      var out: (Catalog, String) = null
-      var attempts = 0
-      while (out == null) {
-        val cur = cache.get
-        if (cur != null && cur._1 == v) out = (cur._2, v)
-        else {
-          val c = build(v)
-          val after = version()
-          attempts += 1
-          if (after == v || attempts >= 4) {
-            cache.compareAndSet(cur, (v, c))
-            out = (c, v)
-          } else v = after
+      val seen = version()
+      val hit = cache.get
+      if (hit != null && hit._1 == seen) (hit._2, seen)
+      else buildLock.synchronized {
+        var v = version()
+        var out: (Catalog, String) = null
+        var attempts = 0
+        while (out == null) {
+          val cur = cache.get
+          if (cur != null && cur._1 == v) out = (cur._2, v)
+          else {
+            val c = build(v)
+            val after = version()
+            attempts += 1
+            if (after == v || attempts >= 4) {
+              cache.set((v, c))
+              out = (c, v)
+            } else v = after
+          }
         }
+        out
       }
-      out
     }
   }
 }

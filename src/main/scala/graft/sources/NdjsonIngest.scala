@@ -27,34 +27,27 @@ object NdjsonIngest {
     * at most this many distinct values in a layer get a COMPLETE `g:`
     * histogram — country/date/type/status-like columns at real scales —
     * computed in the same single stats aggregation (BoundedHistogram).
-    * Default 1024 (was 256): the round-15 audit
-    * ([[graft.tools.HistogramCapAudit]], 10-layer × 20k-row chain,
-    * ~800-distinct column) measured the 256→1024 move as ~32 KB of
-    * sidecar per layer, the grouped count dropping 0.47 s (grouping
-    * scan) → 0.05 s (metadata), and unrelated routed plan time moving
-    * ≤ 20 ms across the whole 10-layer chain — noise against the scan
-    * the larger cap avoids, and it keeps country×day-scale rollups
+    * 1024 (was 256): the audit recorded in commit 5e1c027 (10-layer ×
+    * 20k-row chain, ~800-distinct column) measured the 256→1024 move as
+    * ~32 KB of sidecar per layer, the grouped count dropping 0.47 s
+    * (grouping scan) → 0.05 s (metadata), and unrelated routed plan time
+    * moving ≤ 20 ms across the whole 10-layer chain — noise against the
+    * scan the larger cap avoids, and it keeps country×day-scale rollups
     * zero-footer at production cardinalities.
-    * Override per-JVM with `-Dgraft.histogramMaxEntries=N` (ingest-side
-    * only: already-written sidecars keep whatever they recorded).
     */
-  val HistogramMaxEntries: Int =
-    sys.props.get("graft.histogramMaxEntries").map(_.toInt).getOrElse(1024)
+  val HistogramMaxEntries: Int = 1024
 
   /** Per-layer byte budget for the HISTOGRAM portion of a `_stats`
     * sidecar. The per-column cap bounds one histogram (~32 KB at cap
-    * 1024, measured by tools/HistogramCapAudit), but a 500-column table
+    * 1024, measured in commit 5e1c027), but a 500-column table
     * would still write ~16 MB of sidecar per layer — parsed by EVERY
     * plan over the chain. Past the budget the WIDEST histograms drop
     * first (fewest-groups-per-byte — the narrow status/category columns
     * that actually serve grouped counts always survive); a dropped
     * histogram only costs a fallback to the grouping scan, never an
     * answer. Envelopes/ledgers are O(columns) and never dropped.
-    * Override per-JVM with `-Dgraft.histogramBudgetBytes=N`.
     */
-  val HistogramBudgetBytes: Long =
-    sys.props.get("graft.histogramBudgetBytes").map(_.toLong)
-      .getOrElse(256L * 1024)
+  val HistogramBudgetBytes: Long = 256L * 1024
 
   /** Max BLOOM aggregates per commit (the pk + id-shaped extras, see
     * writeLayerStats): each partial buffer is 2^BuildLogBits bits =

@@ -54,8 +54,6 @@ object Append {
   private val config = new KeyedConfig(Keys,
     tolerate = Serve.Keys.toSet ++ Preprocess.Keys.toSet)
 
-  def cliName(key: String): String = KeyedConfig.cliName(key)
-  def envName(key: String): String = KeyedConfig.envName(key)
   def resolve(args: Seq[String], env: Map[String, String]): Map[String, String] =
     config.resolve(args, env)
 
@@ -181,26 +179,11 @@ object Append {
       .maxOption.getOrElse(0L) + 1
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.contains("--help")) {
-      println("graft.tools.Append — append NDJSON records to a data directory")
-      println(Keys.map(k => f"  ${cliName(k)}%-30s ${envName(k)}").mkString("\n"))
-      return
-    }
-    val m = resolve(args.toSeq, sys.env)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-append")
-      .getOrCreate()
-    try {
+  def main(args: Array[String]): Unit =
+    config.main(args, "Append",
+      "append NDJSON records to a data directory") { (spark, m) =>
       val (file, n) = run(spark, m)
       if (n == 0) println("[append] empty batch — nothing committed")
       else println(s"[append] committed $n records as $file")
-    } finally spark.stop()
-  }
+    }
 }

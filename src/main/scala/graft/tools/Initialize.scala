@@ -31,13 +31,12 @@ object Initialize {
     "databaseConfig", "referenceGenomeFilename",
     "lineageDefinitionFilenames", "phyloTreeFilename")
 
-  private val config = new KeyedConfig(Keys)
+  private val config = new KeyedConfig(Keys,
+    defaults = Map("inputDirectory" -> "./"),
+    fileKeys = Seq("initializeConfig"))
 
-  def cliName(key: String): String = KeyedConfig.cliName(key)
-  def envName(key: String): String = KeyedConfig.envName(key)
   def resolve(args: Seq[String], env: Map[String, String]): Map[String, String] =
-    config.resolve(args, env, defaults = Map("inputDirectory" -> "./"),
-      fileKeys = Seq("initializeConfig"))
+    config.resolve(args, env)
 
   /** Run one initialize; returns the validated output directory. */
   def run(spark: SparkSession, m: Map[String, String]): String = {
@@ -100,25 +99,10 @@ object Initialize {
     outDir
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.contains("--help")) {
-      println("graft.tools.Initialize — assemble + validate an empty data directory")
-      println(Keys.map(k => f"  ${cliName(k)}%-36s ${envName(k)}").mkString("\n"))
-      return
-    }
-    val m = resolve(args.toSeq, sys.env)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-initialize")
-      .getOrCreate()
-    try {
+  def main(args: Array[String]): Unit =
+    config.main(args, "Initialize",
+      "assemble + validate an empty data directory") { (spark, m) =>
       val out = run(spark, m)
       println(s"[initialize] empty data directory ready at $out")
-    } finally spark.stop()
-  }
+    }
 }

@@ -1,12 +1,14 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
+
 /** Reference-style runtime-config layering shared by the CLI entry
-  * points (Serve, Append): defaults < default-runtime-config file <
-  * runtime-config file < environment < command line, with CLI/env
-  * spellings derived mechanically from the dotted YAML key paths
-  * exactly like the reference's CommandLineArguments /
-  * EnvironmentVariables `configKeyPathToString` pair
-  * (config/source/yaml_file.cpp:140, environment_variables.cpp:45).
+  * points (Serve, Append, Preprocess, Initialize): defaults <
+  * default-runtime-config file < runtime-config file < environment <
+  * command line, with CLI/env spellings derived mechanically from the
+  * dotted YAML key paths exactly like the reference's
+  * CommandLineArguments / EnvironmentVariables `configKeyPathToString`
+  * pair (config/source/yaml_file.cpp:140, environment_variables.cpp:45).
   */
 /** `tolerate` (by-name — the CLI objects reference each other's key
   * sets, and eager evaluation at construction would cycle their object
@@ -17,10 +19,16 @@ package graft.tools
   * subcommand knows still fails loudly (it is a typo, not a sibling's
   * setting). Tolerated keys never enter the parse result: only this
   * subcommand's own keys do.
+  *
+  * `fileKeys`: which keys name LAYERED CONFIG FILES, weakest first
+  * (Serve/Append/Preprocess use the runtime-config pair; Initialize the
+  * reference's single `initializeConfig`).
   */
 final class KeyedConfig(val keys: Seq[String],
     boolKeys: Set[String] = Set.empty,
-    tolerate: => Set[String] = Set.empty) {
+    tolerate: => Set[String] = Set.empty,
+    defaults: Map[String, String] = Map.empty,
+    fileKeys: Seq[String] = Seq("defaultRuntimeConfig", "runtimeConfig")) {
   import KeyedConfig._
 
   private lazy val tolerated = tolerate
@@ -85,12 +93,7 @@ final class KeyedConfig(val keys: Seq[String],
     * The config-file PATHS themselves resolve from env/CLI first, like
     * the reference's `--runtime-config` option.
     */
-  def resolve(args: Seq[String], env: Map[String, String],
-      defaults: Map[String, String] = Map.empty,
-      // which keys name LAYERED CONFIG FILES, weakest first (Serve/
-      // Append use the runtime-config pair; Initialize the reference's
-      // single `initializeConfig`)
-      fileKeys: Seq[String] = Seq("defaultRuntimeConfig", "runtimeConfig"))
+  def resolve(args: Seq[String], env: Map[String, String])
       : Map[String, String] = {
     val cli = parseArgs(args)
     val fromEnv = parseEnv(env)
@@ -100,6 +103,25 @@ final class KeyedConfig(val keys: Seq[String],
       .foldLeft(Map.empty[String, String])(_ + _)
     defaults ++ fileLayers ++ fromEnv ++ cli
   }
+
+  /** The shared `main` of the data-directory CLIs (`name` is the
+    * object in `graft.tools`): `--help` prints `summary` and every key's
+    * CLI and env spelling; otherwise the settings resolve from `args`
+    * and the process env, `body` runs on a [[graft.GraftSession]], and
+    * the session stops when `body` returns or throws.
+    */
+  def main(args: Array[String], name: String, summary: String)(
+      body: (SparkSession, Map[String, String]) => Unit): Unit =
+    if (args.contains("--help")) {
+      val width = keys.map(cliName(_).length).max
+      println(s"graft.tools.$name — $summary")
+      keys.foreach(k =>
+        println(s"  ${cliName(k).padTo(width, ' ')} ${envName(k)}"))
+    } else {
+      val m = resolve(args.toSeq, sys.env)
+      val spark = graft.GraftSession(s"graft-${name.toLowerCase}")
+      try body(spark, m) finally spark.stop()
+    }
 }
 
 object KeyedConfig {

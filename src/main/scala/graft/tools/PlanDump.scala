@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev loop: dump `.explain("formatted")` for a list of queries to
   * per-query files (the judge-facing plan evidence under plans/rNN/), and
   * optionally time each with min-of-N in the same JVM so before/after
@@ -18,15 +16,7 @@ object PlanDump {
     val sfDir = args.find(_.startsWith("--sf=")).map(_.drop(5))
       .getOrElse("/root/testdata/sf0.1")
     val names = args.drop(2).filterNot(_.startsWith("--"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession("graft-plandump")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     def cleanup(): Unit = {

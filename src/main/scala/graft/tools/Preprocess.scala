@@ -28,8 +28,6 @@ object Preprocess {
   private val config = new KeyedConfig(Keys,
     tolerate = Serve.Keys.toSet ++ Append.Keys.toSet)
 
-  def cliName(key: String): String = KeyedConfig.cliName(key)
-  def envName(key: String): String = KeyedConfig.envName(key)
   def resolve(args: Seq[String], env: Map[String, String]): Map[String, String] =
     config.resolve(args, env)
 
@@ -52,25 +50,10 @@ object Preprocess {
     (rows, Database.inputFingerprint(spark, input))
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.contains("--help")) {
-      println("graft.tools.Preprocess — eagerly build a data directory's state")
-      println(Keys.map(k => f"  ${cliName(k)}%-30s ${envName(k)}").mkString("\n"))
-      return
-    }
-    val m = resolve(args.toSeq, sys.env)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-preprocess")
-      .getOrCreate()
-    try {
+  def main(args: Array[String]): Unit =
+    config.main(args, "Preprocess",
+      "eagerly build a data directory's state") { (spark, m) =>
       val (rows, version) = run(spark, m)
       println(s"[preprocess] built state for $rows rows (data version $version)")
-    } finally spark.stop()
-  }
+    }
 }

@@ -66,19 +66,16 @@ object Serve {
   // skip them instead of failing (see KeyedConfig.tolerate)
   private val config = new KeyedConfig(Keys,
     boolKeys = Set("api.accessLog"),
-    tolerate = Append.Keys.toSet ++ Preprocess.Keys.toSet)
+    tolerate = Append.Keys.toSet ++ Preprocess.Keys.toSet,
+    defaults = Map("api.port" -> "8081"))
 
-  def cliName(key: String): String = KeyedConfig.cliName(key)
-  def envName(key: String): String = KeyedConfig.envName(key)
   def parseArgs(args: Seq[String]): Map[String, String] =
     config.parseArgs(args)
-  def parseEnv(env: Map[String, String]): Map[String, String] =
-    config.parseEnv(env)
   def parseYamlFile(path: String): Map[String, String] =
     config.parseYamlFile(path)
 
   def resolve(args: Seq[String], env: Map[String, String]): Map[String, String] =
-    config.resolve(args, env, defaults = Map("api.port" -> "8081"))
+    config.resolve(args, env)
 
   /** Map the resolved settings onto [[QueryServer.ServerConfig]];
     * `accessSink` receives access-log/monitor lines when enabled.
@@ -268,25 +265,12 @@ object Serve {
     server
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.contains("--help")) {
-      println("graft.tools.Serve — HTTP query API over a data directory")
-      println(Keys.map(k => f"  ${cliName(k)}%-44s ${envName(k)}").mkString("\n"))
-      return
+  def main(args: Array[String]): Unit =
+    config.main(args, "Serve",
+      "HTTP query API over a data directory") { (spark, m) =>
+      val server = boot(spark, m)
+      println(s"[serve] listening on port ${server.boundPort}")
+      // serve until killed; the JDK server threads are non-daemon anyway
+      Thread.currentThread().join()
     }
-    val m = resolve(args.toSeq, sys.env)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-serve")
-      .getOrCreate()
-    val server = boot(spark, m)
-    println(s"[serve] listening on port ${server.boundPort}")
-    // serve until killed; the JDK server threads are non-daemon anyway
-    Thread.currentThread().join()
-  }
 }

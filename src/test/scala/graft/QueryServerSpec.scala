@@ -552,6 +552,36 @@ class QueryServerSpec extends SparkSpec {
     assert(builds.get === 2)
   }
 
+  test("cachedSupplier builds once per version under concurrent requests") {
+    // every request arriving while the new version builds must wait for
+    // that one build: a build per request wrote the same index layer dir
+    // from several threads at once
+    val ver = new java.util.concurrent.atomic.AtomicInteger(1)
+    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+    val supplier = QueryServer.cachedSupplier(
+      () => "commit-" + ver.get,
+      _ => {
+        builds.incrementAndGet()
+        Thread.sleep(300) // long enough for every request to arrive mid-build
+        Catalog(Map.empty)
+      })
+    supplier()
+    assert(builds.get === 1)
+    ver.incrementAndGet()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = (1 to 8).map(_ => new Thread(() => {
+      start.await()
+      labels.add(supplier()._2)
+      ()
+    }))
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join(60000))
+    assert(labels.asScala.toSeq === Seq.fill(8)("commit-2"))
+    assert(builds.get === 2)
+  }
+
   test("result-ordering header reports the plan's root sort keys") {
     // ordered (limit on top preserves the child ordering, like Acero's
     // fetch-node passthrough)
@@ -796,11 +826,11 @@ class QueryServerSpec extends SparkSpec {
 
   test("serve CLI: defaults < yaml < env < cli layering, then an " +
     "end-to-end boot — 503 while loading, 200 after, access log on") {
-    import graft.tools.Serve
+    import graft.tools.{KeyedConfig, Serve}
     // ---- layering (pure) ----
-    assert(Serve.cliName("api.maxQueuedHttpConnections") ===
+    assert(KeyedConfig.cliName("api.maxQueuedHttpConnections") ===
       "--api-max-queued-http-connections")
-    assert(Serve.envName("api.maxQueuedHttpConnections") ===
+    assert(KeyedConfig.envName("api.maxQueuedHttpConnections") ===
       "GRAFT_API_MAX_QUEUED_HTTP_CONNECTIONS")
     val yaml = java.nio.file.Files.createTempFile("runtime", ".yaml")
     java.nio.file.Files.writeString(yaml,
@@ -874,10 +904,10 @@ class QueryServerSpec extends SparkSpec {
 
   test("append CLI: batch validated then committed as append-<seq>; the " +
     "live server hot-swaps; duplicate pks abort with state untouched") {
-    import graft.tools.{Append, Serve}
+    import graft.tools.{Append, KeyedConfig, Serve}
     // CLI/env spellings derive mechanically, like Serve's
-    assert(Append.cliName("appendFile") === "--append-file")
-    assert(Append.envName("appendFile") === "GRAFT_APPEND_FILE")
+    assert(KeyedConfig.cliName("appendFile") === "--append-file")
+    assert(KeyedConfig.envName("appendFile") === "GRAFT_APPEND_FILE")
     assert(Append.resolve(Seq("--data-directory", "/x"),
       Map("GRAFT_APPEND_FILE" -> "/y")) ===
       Map("dataDirectory" -> "/x", "appendFile" -> "/y"))

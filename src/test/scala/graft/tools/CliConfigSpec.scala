@@ -47,6 +47,28 @@ class CliConfigSpec extends SparkSpec {
       Seq("--runtime-config", bad.toString), Map.empty))
   }
 
+  test("GraftSession pins UTC and nanosAsLong, and sizes shuffle " +
+    "partitions to the master's core count") {
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") ===
+      spark.sparkContext.defaultParallelism.toString)
+    assert(graft.GraftSession.defaultMaster(Map.empty) === "local[*]")
+    assert(graft.GraftSession.defaultMaster(
+      Map("SPARK_GRAFT_CPUS" -> "6")) === "local[6]")
+    assert(graft.GraftSession.defaultMaster(Map("SPARK_GRAFT_CPUS" -> "6",
+      "SPARK_MASTER" -> "spark://h:7077")) === "spark://h:7077")
+  }
+
+  test("--help lists every key's CLI and env spelling") {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(Append.main(Array("--help")))
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    assert(lines.head.startsWith("graft.tools.Append "))
+    assert(lines.tail.map(_.trim.split("\\s+").toSeq) === Append.Keys.map(k =>
+      Seq(KeyedConfig.cliName(k), KeyedConfig.envName(k))))
+  }
+
   test("currentInput orders append commits NUMERICALLY by sequence, " +
     "not lexicographically") {
     val dir = java.nio.file.Files.createTempDirectory("apporder")
