@@ -120,11 +120,15 @@ object Bench {
     // below (same timed region, same query set, full line unchanged):
     // write the identical payload to a file and emit one COMPACT final
     // line that survives tail truncation.
+    // the summary names the file by its absolute path: a reader need not
+    // know the working directory the bench ran in
+    val queriesFile = new java.io.File("BENCH_QUERIES.json").getAbsoluteFile
     try {
-      val w = new java.io.PrintWriter("BENCH_QUERIES.json")
+      val w = new java.io.PrintWriter(queriesFile)
       try w.println(fullLine) finally w.close()
     } catch { case scala.util.control.NonFatal(_) => () } // unwritable cwd must not fail the bench
-    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n_queries":${results.size},"queries_file":"BENCH_QUERIES.json","sf":"$sfDir"}""")
+    val queriesPath = queriesFile.getPath.replace("\\", "\\\\").replace("\"", "\\\"")
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n_queries":${results.size},"queries_file":"$queriesPath","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.lang.Planner.{Catalog, SeqBinding}
+import graft.lang.Planner.{Catalog, SeqBinding, SeqIndex}
 import graft.seq.SequenceModel
+import graft.sources.NdjsonIngest
 import graft.trees.{LineageTree, PhyloTree}
 
 /** Full preprocessing pipeline — the Spark analog of the reference's
@@ -202,32 +203,133 @@ object Database {
           StructField(s"unaligned_$n", StringType)))
   }
 
-  /** As above; with `stateDir` the row-level posting indexes persist as
-    * parquet index tables under `stateDir/index/<sequence>` — written once
-    * at preprocessing, LOADED (not rebuilt) on every later build, the
-    * reference's serialize-indexes-with-state property
-    * (sequence_column.h:147-163).
+  /** The served table's dir under a state dir: the diffed, adapted and
+    * lineage-cleaned rows as a parquet layer chain (the
+    * [[NdjsonIngest]] layer store, `_stats` sidecars
+    * included), next to the posting indexes under `index/<sequence>`.
+    */
+  def tableDir(stateDir: String): String = s"$stateDir/table"
+
+  /** Compact the served table's chain once it exceeds this many layers
+    * (the posting indexes' threshold): every Append build adds one.
+    */
+  private val TableCompactAt = 8
+
+  /** What a served-table commit was built from: the input fingerprint
+    * (also the commit's pointer tag), the per-file input manifest, and
+    * the local reference each sequence's stored diffs are based on. One
+    * record per build at `<tableDir>/_source/<hash of fingerprint>.json`,
+    * written BEFORE the pointer flip, so a committed tag always names a
+    * complete record; a crash in between leaves an unreferenced record,
+    * never a commit without one.
+    */
+  private final case class TableSource(fingerprint: String,
+      manifest: Map[String, String], localRefs: Map[String, String])
+
+  private def sourceFile(tableDir: String, fingerprint: String): java.nio.file.Path = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val h = md.digest(fingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString.take(16)
+    Paths.get(tableDir, "_source", s"$h.json")
+  }
+
+  private def writeSource(tableDir: String, src: TableSource): Unit = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.createObjectNode()
+    node.put("fingerprint", src.fingerprint)
+    val man = node.putObject("manifest")
+    src.manifest.toSeq.sorted.foreach { case (k, v) => man.put(k, v) }
+    val lrs = node.putObject("localRefs")
+    src.localRefs.toSeq.sorted.foreach { case (k, v) => lrs.put(k, v) }
+    val dst = sourceFile(tableDir, src.fingerprint)
+    Files.createDirectories(dst.getParent)
+    val tmp = Files.createTempFile(dst.getParent, ".source", ".tmp")
+    Files.write(tmp, mapper.writeValueAsBytes(node))
+    Files.move(tmp, dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The committed table's source record; None when no table is
+    * committed or its record is missing or unreadable (the caller
+    * rebuilds).
+    */
+  private def readSource(tableDir: String): Option[TableSource] =
+    NdjsonIngest.latestTag(tableDir).flatMap { tag =>
+      val node =
+        try Option(new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(sourceFile(tableDir, tag).toFile))
+        catch { case _: java.io.IOException => None }
+      node.filter(n => n.has("fingerprint") && n.get("fingerprint").asText == tag)
+        .map { n =>
+          def strMap(field: String): Map[String, String] =
+            Option(n.get(field)).map { m =>
+              val it = m.fields()
+              val b = Map.newBuilder[String, String]
+              while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asText }
+              b.result()
+            }.getOrElse(Map.empty)
+          TableSource(tag, strMap("manifest"), strMap("localRefs"))
+        }
+    }
+
+  /** Reclaim the served table's dead generations: layer dirs outside the
+    * committed chain ([[NdjsonIngest.gcVersions]]) and the
+    * source records of superseded or uncommitted builds. Only safe when
+    * no reader can hold an older catalog, i.e. at a cold start
+    * ([[graft.tools.Preprocess]]); never at serve time.
+    */
+  def gcTable(stateDir: String): Unit = {
+    val dir = tableDir(stateDir)
+    if (NdjsonIngest.hasLatest(dir)) {
+      NdjsonIngest.gcVersions(dir)
+      val live = NdjsonIngest.latestTag(dir).map(sourceFile(dir, _))
+      Option(new java.io.File(dir, "_source").listFiles()).getOrElse(Array())
+        .filterNot(f => live.contains(f.toPath)).foreach(_.delete())
+    }
+  }
+
+  /** As above; with `stateDir` the build persists its state there:
+    *  - `table/`: the served `default` table, diffed, adapted and cleaned
+    *    once and stored as parquet layers — the reference keeps aligned
+    *    sequences stored as diffs in the state it serializes and loads
+    *    (sequence_column.h:147-163). `default` is registered as that
+    *    chain (and in `versionedDirs`, so its `_stats` sidecars route
+    *    filters and counts), never as a plan over the NDJSON input;
+    *  - `index/<sequence>/`: the row-level posting indexes, derived from
+    *    the written table.
+    * Each dir is classified independently against the current input
+    * (Loaded, Append or Fresh — see below), so a crash that left them at
+    * different commit points heals on the next build.
     */
   def build(spark: SparkSession, configDir: String, ndjsonPath: String,
       stateDir: Option[String]): Catalog = {
     val cfg = parseConfig(s"$configDir/database_config.yaml")
     val (nucRefs, aaRefs) = parseReferenceGenomes(spark, s"$configDir/reference_genomes.json")
     val allRefs = nucRefs ++ aaRefs
+    val seqNames = allRefs.keys.toSeq.sorted
 
     val schema = schemaFor(cfg, nucRefs, aaRefs)
 
+    // lineage definitions (column metadata and/or relation tables)
+    val lineageCols = cfg.metadata.filter(_.lineageFile.isDefined)
+    def lineagePath(f: MetaField) = lineagePathOf(configDir, f)
+    val lineageDefs = lineageCols.map { f =>
+      f.name -> LineageTree.fromYamlFile(lineagePath(f).toString)
+    }.toMap
+
     // ndjsonPath may be a COMMA-SEPARATED list (the serve/append layout:
     // the original input plus append-*.ndjson commits); brace-glob
-    // commas are not separators
-    val raw = graft.sources.NdjsonIngest.read(spark,
-      splitInputs(ndjsonPath), schema)
-    // PK uniqueness is validated over the FULL input even on incremental
-    // builds: an appended row duplicating an OLD key must abort
-    graft.sources.NdjsonIngest.validateIngest(raw, cfg.primaryKey)
+    // commas are not separators. Every read validates null/duplicate
+    // pks and negative offsets before anything derived from it commits.
+    def readInput(files: Seq[String]): DataFrame = {
+      val raw = NdjsonIngest.read(spark, files, schema)
+      NdjsonIngest.validateIngest(raw, cfg.primaryKey)
+      raw
+    }
 
     // diff-at-ingest per sequence; parse "pos:seq" insertion entries.
-    // A function of the frame, not the frame itself: the incremental
-    // index path re-runs the same pipeline over just the appended files.
+    // A function of the frame: an Append build runs the same pipeline
+    // over just the appended files.
     def diffAll(frame: DataFrame): DataFrame =
       allRefs.toSeq.sortBy(_._1).foldLeft(frame) { case (df, (name, ref)) =>
       val missing = if (nucRefs.contains(name)) Set("N") else Set("X")
@@ -249,107 +351,130 @@ object Database {
           prefix = s"${name}_")
         .drop(name)
     }
-    val diffed = diffAll(raw)
 
-    // ---- persisted-index state, per sequence binding ----------------
-    // With a stateDir, each binding's index dir carries a meta.json with
-    // the fingerprint + per-file manifest it was derived from. Comparing
-    // that manifest against the current input classifies this build:
-    //  - Loaded: fingerprint matches — postings load, nothing recomputed;
+    // local-reference adaptation (reference: sequence_column.cpp:157-196
+    // finalize): per position, re-base stored diffs onto the majority
+    // symbol; queries translate back to the global reference, so results
+    // are unchanged while divergent datasets store far fewer diffs.
+    def adapt(diffed: DataFrame): (DataFrame, Map[String, String]) =
+      seqNames.foldLeft((diffed, Map.empty[String, String])) {
+        case ((df, lrs), name) =>
+          val (ref, isAa) = (allRefs(name), aaRefs.contains(name))
+          val (d2, lr) = SequenceModel.adaptLocalReference(df, ref, s"${name}_",
+            if (isAa) SequenceModel.AaOrder else SequenceModel.NucOrder,
+            if (isAa) graft.seq.Ambiguity.aaValidMutation
+            else graft.seq.Ambiguity.nucValidMutation)
+          (d2, if (lr == ref) lrs else lrs + (name -> lr))
+      }
+    // appended rows re-base onto the committed table's FROZEN local
+    // reference: re-deriving the majority from the grown data could
+    // flip adapted symbols and invalidate every persisted row and
+    // posting
+    def rebase(diffed: DataFrame, lrs: Map[String, String]): DataFrame =
+      seqNames.foldLeft(diffed) { (df, name) =>
+        lrs.get(name).fold(df)(lr =>
+          SequenceModel.applyLocalReference(df, allRefs(name), lr, s"${name}_"))
+      }
+
+    // treatUnknownLineagesAsNull: unknown values null out at ingest
+    def clean(df0: DataFrame): DataFrame =
+      lineageCols.filter(_.treatUnknownLineagesAsNull).foldLeft(df0) { case (df, f) =>
+        val d = lineageDefs(f.name)
+        val known = (d.tree.nodes ++ d.aliases.keySet).toSeq.sorted
+        df.withColumn(f.name,
+          when(col(f.name).isin(known: _*), col(f.name)))
+      }
+
+    // ---- persisted state: classification per dir ----------------------
+    // The table dir's source record and each index dir's meta.json carry
+    // the fingerprint + per-file manifest they were derived from.
+    // Comparing that manifest against the current input classifies the
+    // dir for this build:
+    //  - Loaded: fingerprint matches — nothing is read or recomputed;
     //  - Append: every old file unchanged, new files appeared, config
-    //    unchanged — postings are derived for the NEW files only and
-    //    merged as one additional index layer (the reference's chunk-wise
-    //    index extension, storage/table.cpp bulkInsert);
+    //    unchanged — only the NEW files' rows are derived and committed
+    //    as one more layer (the reference's chunk-wise extension,
+    //    storage/table.cpp bulkInsert);
     //  - Fresh: anything else (changed/removed files, config edit, no or
     //    pre-layered meta) — full rebuild into a fresh generation.
-    // Classification is PER index dir, so a crash that left bindings at
-    // different commit points heals: each dir independently loads,
-    // appends, or rebuilds.
-    sealed trait IdxState { def meta: Option[graft.lang.Planner.SeqIndex.IndexMeta] = None }
-    case object Fresh extends IdxState
-    final case class Loaded(m: graft.lang.Planner.SeqIndex.IndexMeta) extends IdxState {
-      override def meta = Some(m)
-    }
-    final case class Append(m: graft.lang.Planner.SeqIndex.IndexMeta, newFiles: Seq[String])
-        extends IdxState {
-      override def meta = Some(m)
-    }
+    sealed trait DirState
+    case object Fresh extends DirState
+    case object Loaded extends DirState
+    final case class Appended(newFiles: Seq[String]) extends DirState
     lazy val dataManifest = inputManifest(spark, ndjsonPath)
-    // The postings depend on the CONFIG as much as on the data — a
+    // The state depends on the CONFIG as much as on the data — a
     // reference-genome or primary-key edit changes every diff — so the
     // fingerprint spans both the NDJSON input and the CONFIG FILES.
     // The config files are enumerated EXPLICITLY, never as the whole
     // directory: in the serve/append layout the config dir IS the data
     // dir, and a directory-wide fingerprint would fold in input.ndjson,
     // append-* commits, and the state/ the build itself writes — every
-    // build would then invalidate the next one's persisted indexes and
+    // build would then invalidate the next one's persisted state and
     // the Loaded/Append classifications could never fire. Lazy: builds
     // without a stateDir never pay the listing.
     lazy val cfgFp = {
       val known = Seq("database_config.yaml", "reference_genomes.json",
         "phylogenetic_tree.nwk", "phylogenetic_tree.json")
         .map(n => Paths.get(configDir, n))
-      val lineages = cfg.metadata.filter(_.lineageFile.isDefined)
-        .map(lineagePathOf(configDir, _))
-      val files = (known ++ lineages).filter(Files.isRegularFile(_))
+      val files = (known ++ lineageCols.map(lineagePath)).filter(Files.isRegularFile(_))
         .map(_.toString).distinct
       inputFingerprint(spark, files.mkString(","))
     }
     lazy val inputFp = manifestFingerprint(dataManifest) + "|" + cfgFp
-    val states: Map[String, IdxState] = allRefs.keys.map { name =>
-      name -> (stateDir match {
-        case None => Fresh
-        case Some(sd) =>
-          graft.lang.Planner.SeqIndex.readMeta(spark, s"$sd/index/$name") match {
-            case None => Fresh
-            case Some(m) if m.fingerprint.contains(inputFp) => Loaded(m)
-            case Some(m) =>
-              val newFiles = (dataManifest.keySet -- m.manifest.keySet).toSeq.sorted
-              val oldUnchanged = m.manifest.nonEmpty && m.manifest.forall {
-                case (k, v) => dataManifest.get(k).contains(v)
-              }
-              // the stored fingerprint must equal what the stored manifest
-              // + the CURRENT config hash to — that one check covers both
-              // "manifest consistent with the committed postings" and
-              // "config unchanged since"
-              val consistent = m.fingerprint.contains(
-                manifestFingerprint(m.manifest) + "|" + cfgFp)
-              if (oldUnchanged && newFiles.nonEmpty && consistent)
-                Append(m, newFiles)
-              else Fresh
-          }
-      })
-    }.toMap
-
-    // local-reference adaptation (reference: sequence_column.cpp:157-196
-    // finalize): per position, re-base stored diffs onto the majority
-    // symbol; queries translate back to the global reference, so results
-    // are unchanged while divergent datasets store far fewer diffs.
-    // When a persisted index exists (Loaded/Append) the local reference
-    // is FROZEN to the one in meta.json: re-deriving the majority from
-    // the grown data could flip adapted symbols and invalidate every
-    // persisted posting — and freezing also skips adaptLocalReference's
-    // two full-data aggregation passes on every warm start.
-    val (adapted, localRefs) = allRefs.toSeq.sortBy(_._1)
-      .foldLeft((diffed, Map.empty[String, String])) {
-        case ((df, lrs), (name, ref)) =>
-          states(name).meta match {
-            case Some(m) =>
-              m.localRef.filter(_ != ref) match {
-                case Some(lr) =>
-                  (SequenceModel.applyLocalReference(df, ref, lr, s"${name}_"),
-                    lrs + (name -> lr))
-                case None => (df, lrs)
-              }
-            case None =>
-              val isAa = aaRefs.contains(name)
-              val (d2, lr) = SequenceModel.adaptLocalReference(df, ref, s"${name}_",
-                if (isAa) SequenceModel.AaOrder else SequenceModel.NucOrder,
-                if (isAa) graft.seq.Ambiguity.aaValidMutation
-                else graft.seq.Ambiguity.nucValidMutation)
-              (d2, if (lr == ref) lrs else lrs + (name -> lr))
-          }
+    def classify(fingerprint: Option[String], manifest: Map[String, String]): DirState =
+      if (fingerprint.contains(inputFp)) Loaded
+      else {
+        val newFiles = (dataManifest.keySet -- manifest.keySet).toSeq.sorted
+        val oldUnchanged = manifest.nonEmpty && manifest.forall {
+          case (k, v) => dataManifest.get(k).contains(v)
+        }
+        // the stored fingerprint must equal what the stored manifest +
+        // the CURRENT config hash to — that one check covers both
+        // "manifest consistent with the committed state" and "config
+        // unchanged since"
+        val consistent = fingerprint.contains(
+          manifestFingerprint(manifest) + "|" + cfgFp)
+        if (oldUnchanged && newFiles.nonEmpty && consistent) Appended(newFiles)
+        else Fresh
       }
+
+    // ---- the served table ----------------------------------------------
+    // A Loaded table reads no NDJSON at all (its input was validated when
+    // the commit was written); an Append reads and validates only the new
+    // files — the commit's clash check against the committed chain keeps
+    // primary keys unique over the whole input; a Fresh build diffs,
+    // adapts and cleans the full input once and commits it as a snapshot.
+    // `delta` holds an Append's committed rows for the posting indexes.
+    final case class Delta(newFiles: Seq[String], rows: DataFrame, n: Long)
+    val (table, localRefs, delta) = stateDir.map(tableDir) match {
+      case None =>
+        val (adapted, lrs) = adapt(diffAll(readInput(splitInputs(ndjsonPath))))
+        (clean(adapted), lrs, None)
+      case Some(td) =>
+        val committed = readSource(td)
+        committed.fold[DirState](Fresh)(c => classify(Some(c.fingerprint), c.manifest)) match {
+          case Loaded =>
+            (NdjsonIngest.readLatest(spark, td), committed.get.localRefs, None)
+          case Appended(newFiles) =>
+            val lrs = committed.get.localRefs
+            writeSource(td, TableSource(inputFp, dataManifest, lrs))
+            val v = NdjsonIngest.appendDelta(
+              clean(rebase(diffAll(readInput(newFiles)), lrs)), td,
+              cfg.primaryKey, tag = Some(inputFp), validated = true)
+            val served = NdjsonIngest.readLatest(spark, td)
+            val rows = spark.read.schema(served.schema).parquet(s"$td/v$v")
+            val n = NdjsonIngest.chainRowCount(td, Seq(s"v$v"))
+              .getOrElse(rows.count())
+            NdjsonIngest.compactVersions(spark, td, TableCompactAt)
+            (NdjsonIngest.readLatest(spark, td), lrs, Some(Delta(newFiles, rows, n)))
+          case Fresh =>
+            val (adapted, lrs) = adapt(diffAll(readInput(splitInputs(ndjsonPath))))
+            writeSource(td, TableSource(inputFp, dataManifest, lrs))
+            NdjsonIngest.appendVersion(clean(adapted), td, cfg.primaryKey,
+              tag = Some(inputFp), validated = true)
+            (NdjsonIngest.readLatest(spark, td), lrs, None)
+        }
+    }
 
     val bindings: Map[String, SeqBinding] =
       nucRefs.map { case (n, r) =>
@@ -358,12 +483,6 @@ object Database {
           n -> SeqBinding(r, s"${n}_", isAminoAcid = true,
             localRef = localRefs.get(n)) }
 
-    // lineage definitions (column metadata and/or relation tables)
-    val lineageCols = cfg.metadata.filter(_.lineageFile.isDefined)
-    def lineagePath(f: MetaField) = lineagePathOf(configDir, f)
-    val lineageDefs = lineageCols.map { f =>
-      f.name -> LineageTree.fromYamlFile(lineagePath(f).toString)
-    }.toMap
     // raw YAML kept for the GET /lineageDefinition/{column} echo
     // (reference: app/src/lineage_definition_handler.cpp:52-57)
     val lineageYaml = lineageCols
@@ -388,15 +507,6 @@ object Database {
       .filter(f => f.lineageIndexType != "table")
       .map(f => f.name -> lineageDefs(f.name).aliases).toMap
 
-    // treatUnknownLineagesAsNull: unknown values null out at ingest
-    val cleaned = lineageCols.filter(_.treatUnknownLineagesAsNull)
-      .foldLeft(adapted) { case (df, f) =>
-        val d = lineageDefs(f.name)
-        val known = (d.tree.nodes ++ d.aliases.keySet).toSeq.sorted
-        df.withColumn(f.name,
-          when(col(f.name).isin(known: _*), col(f.name)))
-      }
-
     // the reference accepts Newick (.nwk) or Auspice JSON v2 (.json)
     // trees, dispatched by extension (phylo_tree.cpp:378-394)
     val phyloTrees = cfg.metadata.filter(_.isPhyloTreeField).map { f =>
@@ -411,57 +521,36 @@ object Database {
     // reference building its vertical/insertion indexes during
     // preprocessing) so selective position predicates route through them
     // (Planner.indexRoute); the per-sequence count maps are bounded by
-    // genome × alphabet. With a stateDir, each binding resolves per its
-    // classified state: Loaded restores the persisted parquet layers
-    // (one bounded count-map collect, zero posting recomputation);
-    // Append derives postings for the NEW files only and merges them as
-    // one additional layer (the reference's chunk-wise index extension,
-    // storage/table.cpp bulkInsert → sequence_column.h:147-163 — at
-    // 100 TB, appending 0.1% of the data recomputes 0.1% of the index,
-    // not 100%); Fresh rebuilds into a new generation dir. Stale
-    // postings still never answer a routed query: load expects the
-    // CURRENT fingerprint, and append flips the pointer only after its
-    // layer is fully written.
-    lazy val nRows = cleaned.count() // shared across bindings — count once
-    // For Append states: the appended files' diffed frame (and row
-    // count), derived ONCE and shared — every binding's append sees the
-    // same newFiles set in the common case, and diffAll carries all
-    // sequence columns.
-    val newDiffCache =
-      scala.collection.mutable.Map[Seq[String], (DataFrame, Long)]()
-    def diffedNewFor(newFiles: Seq[String]): (DataFrame, Long) =
-      newDiffCache.getOrElseUpdate(newFiles, {
-        val rawNew = graft.sources.NdjsonIngest.read(spark, newFiles, schema)
-        val d = diffAll(rawNew)
-        // localCheckpoint: the appended slice is small by construction
-        // (it is the delta); several bindings each write a layer from it
-        (d.localCheckpoint(), d.count())
-      })
+    // genome × alphabet. With a stateDir each index dir resolves per its
+    // own classification, and only over the same local reference as the
+    // table: Loaded restores the persisted parquet layers (one bounded
+    // count-map collect); Append derives postings from the table's new
+    // layer only — when this build appended exactly the files the index
+    // lacks — and merges them as one more index layer (at 100 TB,
+    // appending 0.1% of the data recomputes 0.1% of the index); anything
+    // else rebuilds from the written table. Stale postings never answer a
+    // routed query: load expects the CURRENT fingerprint, and append
+    // flips the pointer only after its layer is fully written.
+    lazy val nRows = stateDir
+      .flatMap(sd => NdjsonIngest.chainRowCount(tableDir(sd),
+        NdjsonIngest.latestLayers(tableDir(sd))))
+      .getOrElse(table.count())
     val mutIndexes = bindings.map { case (name, b) =>
-      val insCol = Option(s"${b.prefix}ins").filter(cleaned.columns.contains)
+      val insCol = Option(s"${b.prefix}ins").filter(table.columns.contains)
       val idxDir = stateDir.map(d => s"$d/index/$name")
-      val ref = b.ref
-      val resolved: Option[graft.lang.Planner.SeqIndex] =
-        (states(name), idxDir) match {
-          case (Loaded(_), Some(dir)) =>
-            graft.lang.Planner.SeqIndex.load(spark, dir,
-              expectFingerprint = Some(inputFp))
-          case (Append(m, newFiles), Some(dir)) =>
-            val (diffedNew0, newRows) = diffedNewFor(newFiles)
-            // re-base the new rows onto the index's FROZEN local
-            // reference so their postings mean the same thing as the
-            // persisted layers'
-            val diffedNew = m.localRef.filter(_ != ref)
-              .map(lr => SequenceModel.applyLocalReference(
-                diffedNew0, ref, lr, b.prefix))
-              .getOrElse(diffedNew0)
-            graft.lang.Planner.SeqIndex.append(spark, dir, diffedNew,
-              cfg.primaryKey, b.prefix, insCol, newRows,
-              newFingerprint = inputFp, newManifest = dataManifest)
-          case _ => None
-        }
-      name -> resolved.getOrElse(graft.lang.Planner.SeqIndex.build(
-        cleaned, cfg.primaryKey, b.prefix, insCol,
+      val state = idxDir.flatMap(SeqIndex.readMeta(spark, _))
+        .filter(_.localRef == localRefs.get(name))
+        .map(m => classify(m.fingerprint, m.manifest))
+      val resolved: Option[SeqIndex] = (state, idxDir, delta) match {
+        case (Some(Loaded), Some(dir), _) =>
+          SeqIndex.load(spark, dir, expectFingerprint = Some(inputFp))
+        case (Some(Appended(files)), Some(dir), Some(d)) if d.newFiles == files =>
+          SeqIndex.append(spark, dir, d.rows, cfg.primaryKey, b.prefix, insCol,
+            d.n, newFingerprint = inputFp, newManifest = dataManifest)
+        case _ => None
+      }
+      name -> resolved.getOrElse(SeqIndex.build(
+        table, cfg.primaryKey, b.prefix, insCol,
         tableRows = Some(nRows), indexDir = idxDir,
         fingerprint = idxDir.map(_ => inputFp),
         manifest = if (idxDir.isDefined) dataManifest else Map(),
@@ -469,13 +558,14 @@ object Database {
     }
 
     Catalog(
-      tables = Map("default" -> cleaned) ++ lineageTables,
+      tables = Map("default" -> table) ++ lineageTables,
       sequences = Map("default" -> bindings),
       lineageTrees = lineageTrees,
       phyloTrees = phyloTrees,
       lineageAliases = lineageAliases,
       primaryKeys = Map("default" -> cfg.primaryKey),
       lineageYaml = lineageYaml,
-      mutIndexes = Map("default" -> mutIndexes))
+      mutIndexes = Map("default" -> mutIndexes),
+      versionedDirs = stateDir.map(sd => "default" -> tableDir(sd)).toMap)
   }
 }

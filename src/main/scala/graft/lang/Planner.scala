@@ -378,7 +378,9 @@ object Planner {
     /** Read a posting sub-table or synthesize an empty frame with the
       * right schema: a mutation/insertion-free layer's partitioned write
       * leaves no parquet files (just _SUCCESS), so schema inference would
-      * fail; detect that by listing instead of catching.
+      * fail; detect that by listing instead of catching. The schema is
+      * known either way, so the read never infers it (inference costs a
+      * footer-reading Spark job per sub-table on every load).
       */
     private def readOrEmpty(spark: org.apache.spark.sql.SparkSession,
         path: String, schema: StructType): DataFrame = {
@@ -387,7 +389,7 @@ object Planner {
       val hasParquet = fs.exists(p) && fs.listStatus(p).exists(f =>
         f.getPath.getName.startsWith("pos=") ||
           f.getPath.getName.endsWith(".parquet"))
-      if (hasParquet) spark.read.parquet(path)
+      if (hasParquet) spark.read.schema(schema).parquet(path)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
@@ -459,13 +461,18 @@ object Planner {
         */
       mutIndexes: Map[String, Map[String, SeqIndex]] = Map(),
       /** table → versioned (delta-chain) table dir whose layers carry the
-        * `_stats` min/max sidecars. A `filter` whose input is the BARE
-        * table scan routes its first numeric between/equality conjunct
-        * through [[graft.sources.NdjsonIngest.readLatestRange]], so
+        * `_stats` sidecars; the registered frame must be the chain's plain
+        * [[graft.sources.NdjsonIngest.readLatest]]. A `filter` whose input
+        * is the BARE table scan routes its stats-decidable conjuncts
+        * (numeric ranges, string equalities, null tests) through
+        * [[graft.sources.NdjsonIngest.readChainRanges]], so
         * non-intersecting layers are pruned before their parquet footers
         * are even opened (Delta-style file skipping at the layer
         * granularity; every conjunct still applies row-wise afterwards —
-        * the pruned chain is a SUPERSET of the matching rows).
+        * the pruned chain is a SUPERSET of the matching rows); counts and
+        * grouped counts answer from the sidecars where they can. A
+        * Database build with a state dir registers its served `default`
+        * table here ([[graft.core.Database.tableDir]]).
         */
       versionedDirs: Map[String, String] = Map(),
       /** table → versioned dir whose registered frame is the

@@ -552,8 +552,12 @@ object PipelineQueries {
          |  END, 4) AS rep_ratio
          |FROM sh ORDER BY doc_id""".stripMargin) { (s, dir) =>
       // TF.shingles is distinct by design (posting-list semantics); the
-      // repetition signal needs the raw multiset, built inline
-      val toks = TF.tokens(col("text"))
+      // repetition signal needs the raw multiset, built inline. The
+      // tokens are bound in their own select: inlined into the lambda,
+      // every try_element_at would re-tokenize the document (O(tokens²));
+      // CollapseProject keeps the binding because the lambda reads it
+      // more than once
+      val toks = col("toks")
       // try_element_at: transform evaluates every i before the filter
       // drops the tail windows, and plain element_at throws past-end
       val all = filter(
@@ -562,6 +566,7 @@ object PipelineQueries {
             try_element_at(toks, i + 2), try_element_at(toks, i + 3))),
         (_, i) => i < size(toks) - 2)
       t(s, dir, "documents")
+        .select(col("doc_id"), TF.tokens(col("text")).as("toks"))
         .select(col("doc_id"), all.as("sh"))
         .select(col("doc_id"),
           size(col("sh")).cast("int").as("n_shingles"),

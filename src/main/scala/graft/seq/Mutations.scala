@@ -1,15 +1,15 @@
 package graft.seq
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The `mutations()` / `insertions()` pipeline-breakers over a diffed
   * sequence DataFrame (reference: operators/mutations_node.cpp, §2.4 of
   * SURVEY.md; query_documentation.md:186-244).
   *
-  * Reproduces the reference's counting arithmetic exactly, expressed as
-  * DataFrame aggregations:
+  * Reproduces the reference's counting arithmetic exactly: one grouped
+  * event aggregation over the rows, then a fold over the position axis:
   *  - explicit diff counts from the exploded muts arrays (O(|diffs|));
   *  - coverage per position via the coverage-interval PREFIX-SUM trick
   *    (mutations_node.cpp:63-136): +1 at cov_start, −1 at cov_end+1,
@@ -20,15 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Mutations {
 
-  /** Per (position, symbol≠ref[pos]) over the (already filtered) rows:
-    * count, coverage, proportion; emit rows with proportion ≥ minProportion.
-    * `genomeLength` bounds the position axis (= ref.length).
-    *
-    * Coverage uses a two-level distributed prefix sum over the position
-    * axis (bucketed windows + broadcast bucket offsets), so neither the row
-    * count nor the position-axis length ever funnels through a single
-    * partition.
-    */
   /** Grouped per-position event counts from ONE pass over the filtered
     * rows: (pos, tag, sym, cnt) with tag 0 = stored diff (sym set),
     * 1 = interior-missing position, 2 = coverage start (+1 delta),
@@ -37,14 +28,9 @@ object Mutations {
     * Every per-row input mutations() needs — the coverage interval
     * deltas, the missing counts, and (when no vertical index supplies it)
     * the diff multiset — derives from this ONE scan + ONE shuffle. The
-    * grouped result is tiny (O(position axis × symbols)) and is
-    * materialized with localCheckpoint so the downstream consumers
-    * (deltas / miss / mut / ambig splits) are narrow block reads: without
-    * the cut, Catalyst pushes each consumer's tag filter below the
-    * aggregate (tag is a grouping column) and the expensive upstream
-    * derivation — the per-row SeqDiff kernel when sequences are diffed
-    * in-query, or 4 full fact-table scans at 100 TB — re-executes per
-    * consumer (the q_seq_mutations plan read its parquet input 12×).
+    * grouped result is bounded by genome × alphabet, so its consumers
+    * fold it in one place ([[axisTotals]]) rather than splitting it into
+    * per-tag shuffles and joins.
     *
     * Null sequences carry null muts/missing/cov bounds: the concat of a
     * null event array is null and explodes to nothing, exactly matching
@@ -75,61 +61,30 @@ object Mutations {
       .groupBy(col("e.pos").as("pos"), col("e.tag").as("tag"),
         col("e.sym").as("sym"))
       .agg(count(lit(1)).as("cnt"))
-      // LAZY checkpoint: the first consuming action materializes the tiny
-      // grouped result and the rest read its blocks — no extra eager job
-      // (measured: an eager cut here cost more than it saved at bench
-      // scale), while still cutting the plan so the tag filters cannot be
-      // pushed below the aggregate into per-consumer re-scans
-      .localCheckpoint(eager = false)
   }
 
   /** Per-position raw coverage (prefix-sum over [cov_start, cov_end]
-    * deltas) and interior-missing counts: (pos, covraw, miss). Shared by
-    * `mutations()` and ingest-time local-reference adaptation.
+    * deltas) and interior-missing counts: (pos, covraw, miss) for every
+    * position 1..genomeLength.
     */
   def positionCoverage(filtered: DataFrame, genomeLength: Int,
-      prefix: String = ""): DataFrame =
-    coverageFromEvents(filtered.sparkSession,
-      eventCounts(filtered, prefix, withMuts = false), genomeLength)
-
-  private[seq] def coverageFromEvents(spark: org.apache.spark.sql.SparkSession,
-      ev: DataFrame, genomeLength: Int): DataFrame = {
-    // null sequences have null coverage bounds — they contribute nothing
-    val deltas = ev.filter(col("tag").isin(2, 3))
-      .groupBy("pos")
-      .agg(sum(when(col("tag") === 2, col("cnt")).otherwise(-col("cnt"))).as("d"))
-
-    val positions = spark.range(1, genomeLength + 1)
-      .select(col("id").cast("int").as("pos"))
-    // two-level cumulative sum: window partitioned by 64k-position buckets
-    // (parallel), plus a broadcast-joined running offset over the tiny
-    // bucket-totals table — no single-partition window even if the
-    // position axis grows far beyond genome scale
-    val bucketW = Window.partitionBy("bucket").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val withBucket = positions.join(deltas, Seq("pos"), "left")
-      .na.fill(0, Seq("d"))
-      .withColumn("bucket", (col("pos") / 65536).cast("int"))
-    val bucketTotals = withBucket.groupBy("bucket")
-      .agg(sum("d").as("bsum"))
-    val bucketOffsets = bucketTotals
-      .withColumn("offset",
-        coalesce(sum("bsum").over(
-          Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select("bucket", "offset")
-    val covRaw = withBucket
-      .withColumn("incum", sum("d").over(bucketW))
-      .join(broadcast(bucketOffsets), Seq("bucket"))
-      .withColumn("covraw", col("incum") + col("offset"))
-
-    val missCounts = ev.filter(col("tag") === 1)
-      .select(col("pos"), col("cnt").as("miss"))
-
-    covRaw.join(missCounts, Seq("pos"), "left")
-      .na.fill(0, Seq("miss"))
-      .select("pos", "covraw", "miss")
+      prefix: String = ""): DataFrame = {
+    val schema = StructType(Seq(StructField("pos", IntegerType),
+      StructField("covraw", LongType), StructField("miss", LongType)))
+    onAxis(eventCounts(filtered, prefix, withMuts = false), schema) { rows =>
+      val t = axisTotals(rows, genomeLength)
+      (1 to genomeLength).iterator.map(p => Row(p, t.covraw(p), t.miss(p)))
+    }
   }
+
+  /** Fold grouped events in ONE task: they are bounded by genome ×
+    * alphabet, and one task costs one job where per-tag shuffles and
+    * joins over them cost a dozen.
+    */
+  private def onAxis(events: DataFrame, schema: StructType)(
+      f: Iterator[Row] => Iterator[Row]): DataFrame =
+    events.select(col("pos"), col("tag"), col("sym"), col("cnt")).coalesce(1)
+      .mapPartitions(f)(org.apache.spark.sql.Encoders.row(schema))
 
   /** `diffRows`, when given, replaces the fact-table explode as the
     * source of the filtered set's (position, sym) diff multiset — the
@@ -137,12 +92,18 @@ object Mutations {
     * passes `postings ⋉ F_ids` so the wide `muts` arrays are never read.
     * Coverage stays row-wise (the interval prefix sum needs cov_start/
     * cov_end/missing from the filtered rows themselves).
+    *
+    * ONE pass over the filtered rows groups every per-row input into
+    * (pos, tag, sym, cnt) events (see eventCounts); the rest — the
+    * coverage prefix sum, ambiguity and residual counts, the
+    * count/coverage join — runs in a single task over them
+    * ([[countRows]]). The final projection and the proportion filter stay
+    * Spark expressions.
     */
   def mutations(filtered: DataFrame, ref: String, minProportion: Double,
       prefix: String = "", invalidSyms: Set[String] = Set(),
       localRef: String = "",
       diffRows: Option[DataFrame] = None): DataFrame = {
-    val genomeLength = ref.length
     // storage may be re-based onto an adapted local reference
     // (sequence_column.cpp:157-196 finalize): rows with no stored diff at a
     // position carry the LOCAL reference symbol there; the residual count
@@ -150,75 +111,90 @@ object Mutations {
     // while mutationFrom and the "is a mutation" test stay on the GLOBAL
     // reference (addMutationsToOutput, mutations_node.cpp:325-328)
     val lr = if (localRef.isEmpty) ref else localRef
-
-    // ONE pass over the filtered rows feeds coverage AND (without a
-    // vertical index) the diff multiset — see eventCounts. With diffRows
-    // supplied, the events still collapse coverage's former 3 scans
-    // (2 delta sides + missing explode) into 1.
-    val ev = eventCounts(filtered, prefix, withMuts = diffRows.isEmpty)
-    // grouped diff multiset: (position, sym, dcnt)
-    val diffCounts = diffRows match {
-      case Some(dr) => dr.groupBy(col("position"), col("sym"))
-        .agg(count(lit(1)).as("dcnt"))
-      case None => ev.filter(col("tag") === 0)
-        .select(col("pos").as("position"), col("sym"), col("cnt").as("dcnt"))
-    }
-    // ambiguity codes (R, Y, … / B, J, Z) are INVALID_MUTATION_SYMBOLS in
-    // the reference: they are excluded from the emitted mutations AND from
-    // the coverage denominator (mutations_node.cpp:303-307 sums only
-    // VALID_MUTATION_SYMBOLS counts into `total`)
-    val isAmbig =
-      if (invalidSyms.isEmpty) lit(false)
-      else col("sym").isin(invalidSyms.toSeq.sorted: _*)
-    val mutCounts = diffCounts.filter(!isAmbig)
-      .select(col("position"), col("sym").as("mutation_to"),
-        col("dcnt").as("count"))
-    val ambigCounts = diffCounts.filter(isAmbig)
-      .groupBy(col("position").as("apos")).agg(sum(col("dcnt")).as("amb"))
-
-    val cov = coverageFromEvents(filtered.sparkSession, ev, genomeLength)
-      .join(ambigCounts, col("pos") === col("apos"), "left")
-      .na.fill(0, Seq("amb"))
-      .select(col("pos"),
-        (col("covraw") - col("miss") - col("amb")).as("coverage"),
-        (col("covraw") - col("miss")).as("covnm"))
-
-    val counts =
-      if (lr == ref) mutCounts
-      else {
-        // residual rows (covered, not missing, no stored diff) carry the
-        // local reference symbol — at positions where it differs from the
-        // global reference they are mutations and must be emitted. The
-        // adapted-position test compares the two reference strings directly
-        // (two O(1) substrings per position row) instead of an In-list
-        // literal, so plan size and filter cost stay O(1) even when most of
-        // a 30k genome adapts (the motivating divergent-dataset case)
-        val diffTotals = diffCounts.groupBy(col("position").as("dpos"))
-          .agg(sum(col("dcnt")).as("dtot"))
-        val residual = cov
-          .filter(SequenceModel.refAt(lr, col("pos")) =!=
-            SequenceModel.refAt(ref, col("pos")))
-          .join(diffTotals, col("pos") === col("dpos"), "left")
-          .na.fill(0, Seq("dtot"))
-          .select(col("pos").as("position"),
-            SequenceModel.refAt(lr, col("pos")).as("mutation_to"),
-            (col("covnm") - col("dtot")).as("count"))
-          .filter(col("count") > 0)
-        mutCounts.unionByName(residual)
-          .groupBy("position", "mutation_to")
-          .agg(sum("count").as("count"))
-      }
-
-    counts.join(cov, col("position") === col("pos")).drop("pos", "covnm")
+    val events = eventCounts(filtered, prefix, withMuts = diffRows.isEmpty)
+    // with a vertical index the diff multiset arrives as tag-0 events
+    val all = diffRows.fold(events)(dr => events.unionByName(
+      dr.groupBy(col("position").cast("int").as("pos"), lit(0).as("tag"),
+        col("sym").cast("string").as("sym"))
+        .agg(count(lit(1)).as("cnt"))))
+    val schema = StructType(Seq(StructField("position", IntegerType),
+      StructField("mutation_to", StringType), StructField("count", LongType),
+      StructField("coverage", LongType)))
+    onAxis(all, schema)(rows => countRows(rows, ref, lr, invalidSyms))
       .select(
         col("position"),
         SequenceModel.refAt(ref, col("position")).as("mutation_from"),
-        col("mutation_to"),
-        col("count").cast("bigint").as("count"),
-        col("coverage").cast("bigint").as("coverage"),
+        col("mutation_to"), col("count"), col("coverage"),
         round(col("count").cast("double") / col("coverage"), 4).as("proportion"))
       .filter(col("proportion") >= minProportion &&
         col("mutation_to") =!= col("mutation_from"))
+  }
+
+  /** Grouped events (pos, tag, sym, cnt) folded onto the position axis
+    * 1..n: raw coverage `covraw(p)` (prefix sum of the +1/−1 interval
+    * deltas, tags 2 and 3), interior-missing rows `miss(p)` (tag 1), and
+    * every stored diff inside the axis (tag 0). Shared by [[mutations]]
+    * and [[SequenceModel.adaptLocalReference]]; both run it over a
+    * genome × alphabet-bounded event set in one place.
+    */
+  private[seq] final case class AxisTotals(covraw: Array[Long],
+      miss: Array[Long], diffs: Seq[(Int, String, Long)])
+
+  private[seq] def axisTotals(rows: Iterator[Row], n: Int): AxisTotals = {
+    val delta = new Array[Long](n + 1)
+    val miss = new Array[Long](n + 1)
+    val diffs = Seq.newBuilder[(Int, String, Long)]
+    rows.foreach { r =>
+      val p = r.getInt(0)
+      if (p >= 1 && p <= n) r.getInt(1) match {
+        case 0 => diffs += ((p, r.getString(2), r.getLong(3)))
+        case 1 => miss(p) += r.getLong(3)
+        case 2 => delta(p) += r.getLong(3)
+        case 3 => delta(p) -= r.getLong(3)
+        case _ =>
+      }
+    }
+    val covraw = new Array[Long](n + 1)
+    (1 to n).foreach(p => covraw(p) = covraw(p - 1) + delta(p))
+    AxisTotals(covraw, miss, diffs.result())
+  }
+
+  /** The counting arithmetic of [[mutations]] over all grouped events of
+    * one filtered set: (position, mutation_to, count, coverage) for every
+    * position 1..ref.length with a diff or residual count.
+    *  - coverage: covered minus interior-missing rows, minus ambiguity-
+    *    code diffs, which the reference excludes from the denominator
+    *    (mutations_node.cpp:303-307);
+    *  - counts: the non-ambiguous diffs, plus — where the local reference
+    *    differs from the global one — the residual rows (covered, not
+    *    missing, no stored diff), which carry the local symbol.
+    */
+  private def countRows(rows: Iterator[Row], ref: String, lr: String,
+      invalidSyms: Set[String]): Iterator[Row] = {
+    val n = ref.length
+    val t = axisTotals(rows, n)
+    val covnm = Array.tabulate(n + 1)(p => t.covraw(p) - t.miss(p))
+    val amb = new Array[Long](n + 1)
+    val dtot = new Array[Long](n + 1)
+    val counts = scala.collection.mutable.LinkedHashMap[(Int, String), Long]()
+    t.diffs.foreach { case (p, sym, cnt) =>
+      dtot(p) += cnt
+      // a null symbol is neither valid nor ambiguous once an invalid set
+      // is given (the SQL `isin` was null for it)
+      if (sym != null && invalidSyms.contains(sym)) amb(p) += cnt
+      else if (sym != null || invalidSyms.isEmpty)
+        counts((p, sym)) = counts.getOrElse((p, sym), 0L) + cnt
+    }
+    if (lr != ref) (1 to n).foreach { p =>
+      val residual = covnm(p) - dtot(p)
+      if (lr.charAt(p - 1) != ref.charAt(p - 1) && residual > 0) {
+        val k = (p, lr.substring(p - 1, p))
+        counts(k) = counts.getOrElse(k, 0L) + residual
+      }
+    }
+    counts.iterator.map { case ((p, sym), c) =>
+      Row(p, sym, c, covnm(p) - amb(p))
+    }
   }
 
   /** `insertions()`: per distinct (position, inserted string): count over

@@ -227,34 +227,24 @@ object SequenceModel {
     val genomeLength = ref.length
     // per-position: residual = rows equal to the current reference
     //             = covered − missing − all stored diffs.
-    // ONE tagged-event pass feeds both coverage and the diff counts
-    // (Mutations.eventCounts) — the adaptation used to scan `diffed` 4×.
-    val ev = Mutations.eventCounts(diffed, prefix, withMuts = true)
-    val cov = Mutations.coverageFromEvents(diffed.sparkSession, ev, genomeLength)
-    val diffCounts = ev.filter(col("tag") === 0)
-      .select(col("pos"), col("sym"), col("cnt"))
-    val diffTotals = diffCounts.groupBy(col("pos").as("dpos"))
-      .agg(sum("cnt").as("dtot"))
-    val resid = cov.join(diffTotals, col("pos") === col("dpos"), "left")
-      .na.fill(0, Seq("dtot"))
-      .select(col("pos"), (col("covraw") - col("miss") - col("dtot")).as("resid"))
+    // ONE tagged-event pass feeds both coverage and the diff counts; the
+    // grouped events are bounded by genome × alphabet, so the arithmetic
+    // runs on the driver over one collect (Mutations.axisTotals)
+    val t = Mutations.axisTotals(
+      Mutations.eventCounts(diffed, prefix, withMuts = true)
+        .select("pos", "tag", "sym", "cnt").collect().iterator,
+      genomeLength)
+    val resid = Array.tabulate(genomeLength + 1)(p => t.covraw(p) - t.miss(p))
+    t.diffs.foreach { case (p, _, cnt) => resid(p) -= cnt }
     // candidates that strictly beat the residual; reference tie-break =
     // first in enum order among equal counts
-    val winners = diffCounts
-      .filter(col("sym").isin(candidateSyms.toSeq.sorted.map(_.toString): _*))
-      .join(resid, Seq("pos"))
-      .filter(col("cnt") > col("resid"))
-      .withColumn("rk", expr(s"instr('$symbolOrder', sym)"))
-      .groupBy("pos")
-      .agg(min(struct(negate(col("cnt")), col("rk"), col("sym"))).as("best"))
-      .select(col("pos"), col("best.sym").as("newSym"))
-      .collect()                       // ≤ genome-length rows, driver-side
-      .map(r => r.getInt(0) -> r.getString(1)).toMap
-    // the tagged-event table is consumed entirely by the collect above —
-    // release its lazily-checkpointed blocks so adaptation in a long-lived
-    // ingest session doesn't accumulate pinned RDDs
-    GraftShims.unpersistLocalCheckpoint(ev)
-
+    val cands = candidateSyms.map(_.toString)
+    val winners = t.diffs
+      .filter { case (p, sym, cnt) => cands.contains(sym) && cnt > resid(p) }
+      .groupBy(_._1).map { case (p, ds) =>
+        p -> ds.minBy { case (_, sym, cnt) =>
+          (-cnt, symbolOrder.indexOf(sym) + 1, sym) }._2
+      }
     if (winners.isEmpty) (diffed, ref)
     else {
       val localRef = (1 to genomeLength)

@@ -234,7 +234,10 @@ final class QueryServer(catalogSupplier: () => (Catalog, String),
       midStreamErrorChunk: Option[String => Array[Byte]])(
       produce: (DataFrame, java.io.OutputStream, () => Unit) => Unit): Unit = {
     val spark = df.sparkSession
-    val group = "http-query-" + java.util.UUID.randomUUID()
+    // named after the request id, so a job links back to its request;
+    // the unique suffix keeps two requests sending the same
+    // X-Request-Id from ever cancelling each other's jobs
+    val group = s"http-query-${requestId(ex)}-${java.util.UUID.randomUUID()}"
     val queue = new java.util.concurrent.LinkedBlockingQueue[AnyRef](
       config.queueDepth)
     // writer-side abort signal: a disconnected client must unblock a

@@ -191,8 +191,8 @@ object NdjsonIngest {
     * poison the stream in a dup-PK abort loop.
     */
   def appendVersion(df: DataFrame, tableDir: String, pk: String,
-      tag: Option[String] = None): Long = {
-    validatePrimaryKey(df, pk)
+      tag: Option[String] = None, validated: Boolean = false): Long = {
+    if (!validated) validatePrimaryKey(df, pk)
     commitLayer(df, tableDir, tag, resetChain = true, kind = "snapshot",
       bloomCol = Some(pk))
   }
@@ -208,10 +208,14 @@ object NdjsonIngest {
     * PK uniqueness is validated batch-internally with a small groupBy,
     * then against the existing table with a broadcast semi-join of the
     * batch's keys — ONE scan of the big side, no full-table shuffle.
+    * `validated` (here and on [[appendVersion]]) skips the batch-internal
+    * check when the caller already ran [[validatePrimaryKey]] or
+    * [[validateIngest]] over the same rows; the check against the
+    * existing table always runs.
     */
   def appendDelta(df: DataFrame, tableDir: String, pk: String,
-      tag: Option[String] = None): Long = {
-    validatePrimaryKey(df, pk)
+      tag: Option[String] = None, validated: Boolean = false): Long = {
+    if (!validated) validatePrimaryKey(df, pk)
     withTableLock(tableDir) {
     val layers = latestLayers(tableDir)
     if (layers.nonEmpty) {
@@ -519,7 +523,10 @@ object NdjsonIngest {
     df.write.mode(SaveMode.ErrorIfExists)
       .options(bloomCol.map(c => ParquetBloom.options(Seq(c))).getOrElse(Map.empty))
       .parquet(s"$tableDir/v$next")
-    writeLayerStats(df, s"$tableDir/v$next", bloomCol)
+    // the stats pass reads the layer just written, not `df`: a lazy
+    // caller plan (parse + derive) would otherwise run a second time
+    writeLayerStats(df.sparkSession.read.schema(df.schema)
+      .parquet(s"$tableDir/v$next"), s"$tableDir/v$next", bloomCol)
     // every commitLayer caller passes the chain's pk as the bloom
     // column — record it once so the chain is self-describing
     bloomCol.foreach(writePkBreadcrumb(tableDir, _))

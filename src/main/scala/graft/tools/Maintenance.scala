@@ -147,13 +147,18 @@ object Maintenance {
   /** Version-chain table dirs under `root` (bounded walk): a chain dir
     * carries a `latest` pointer file and a `_log` dir. The walk never
     * descends into a discovered chain (its `v*` layer dirs can be
-    * arbitrarily wide) or into `_`-prefixed internals.
+    * arbitrarily wide) or into `_`-prefixed internals. A Database build's
+    * served table ([[graft.core.Database.tableDir]], a chain with
+    * `_source` records) is skipped: a live catalog reads its layers, so
+    * only the cold-start [[Preprocess]] may reclaim them.
     */
   def discoverChains(root: String, maxDepth: Int = 4): Seq[String] = {
     def walk(dir: java.io.File, depth: Int): Seq[String] = {
       if (depth > maxDepth || !dir.isDirectory) Nil
       else if (new java.io.File(dir, "latest").isFile &&
-          new java.io.File(dir, "_log").isDirectory) Seq(dir.getPath)
+          new java.io.File(dir, "_log").isDirectory)
+        if (new java.io.File(dir, "_source").isDirectory) Nil
+        else Seq(dir.getPath)
       else Option(dir.listFiles()).getOrElse(Array())
         .filter(f => f.isDirectory && !f.getName.startsWith("_") &&
           !f.getName.startsWith("."))

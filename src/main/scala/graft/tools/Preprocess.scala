@@ -7,9 +7,9 @@ import graft.core.Database
   * subcommand (app/src/main.cpp;
   * src/silo/preprocessing/preprocessing.cpp): build the database state
   * from a data directory EAGERLY and exit, so a later `api` (Serve)
-  * boot finds the persisted posting/sequence indexes under
+  * boot finds the served table and the persisted posting indexes under
   * `<dataDirectory>/state` and classifies its first build as a pure
-  * load instead of paying index construction at serve time.
+  * load instead of paying ingest and index construction at serve time.
   *
   * {{{
   * graft.tools.Preprocess --data-directory /data
@@ -40,13 +40,19 @@ object Preprocess {
     val catalog = Database.build(spark, dataDir, input,
       stateDir = Some(stateDir))
     // preprocessing is the one guaranteed COLD START in the lifecycle —
-    // no reader can hold a pre-rebuild index generation — so this is
-    // where superseded posting-index generations reclaim (SeqIndex.gc's
-    // stated contract); a serve-time gc could race a live reader
+    // no reader can hold a pre-rebuild table or index generation — so
+    // this is where superseded generations reclaim (SeqIndex.gc's and
+    // Database.gcTable's stated contract); a serve-time gc could race a
+    // live reader
     Option(new java.io.File(stateDir, "index").listFiles())
       .getOrElse(Array.empty).filter(_.isDirectory)
       .foreach(d => graft.lang.Planner.SeqIndex.gc(spark, d.getPath))
-    val rows = catalog.tables("default").count()
+    Database.gcTable(stateDir)
+    // the committed layers' recorded row counts, not another scan
+    val table = Database.tableDir(stateDir)
+    val rows = graft.sources.NdjsonIngest.chainRowCount(table,
+        graft.sources.NdjsonIngest.latestLayers(table))
+      .getOrElse(catalog.tables("default").count())
     (rows, Database.inputFingerprint(spark, input))
   }
 

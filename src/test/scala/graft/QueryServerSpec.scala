@@ -66,6 +66,33 @@ class QueryServerSpec extends SparkSpec {
     assert(r.headers().firstValue("Content-Type").get() === "application/x-ndjson")
   }
 
+  test("a request's Spark jobs run in a job group named after its " +
+    "X-Request-Id, unique per request") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      def send() = http.send(HttpRequest.newBuilder(url("/query"))
+        .POST(HttpRequest.BodyPublishers.ofString(
+          "default.groupBy({n := count()}, {country}).orderBy({country})"))
+        .header("X-Request-Id", "probe-42").build(),
+        HttpResponse.BodyHandlers.ofString())
+      // the same client id twice: two groups, so cancelling one request's
+      // group can never cancel the other's jobs
+      assert(send().statusCode() === 200)
+      assert(send().statusCode() === 200)
+      def mine = groups.asScala.filter(_.startsWith("http-query-probe-42-")).toSet
+      val deadline = System.currentTimeMillis() + 10000
+      while (mine.size < 2 && System.currentTimeMillis() < deadline) Thread.sleep(20)
+      assert(mine.size === 2, groups.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("row-per-line NDJSON with nulls and ordering") {
     val r = post("/query", "default.project({primary_key, age}).orderBy({desc(age)}).limit(2)")
     assert(r.body().trim.split("\n").toSeq ===

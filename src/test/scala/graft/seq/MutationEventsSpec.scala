@@ -7,7 +7,7 @@ import graft.SparkSpec
   * (Mutations.eventCounts): proves the exact-count equivalences the
   * optimization relies on, and the routed-path column contract (muts
   * never evaluated when a vertical index supplies the diff multiset) at
-  * RUNTIME — the events sit behind a lazy-checkpoint plan cut, so the
+  * RUNTIME — the events fold inside one mapPartitions task, so the
   * plan-string greps DatabaseSpec used before cannot see them.
   */
 class MutationEventsSpec extends SparkSpec {
