@@ -6,6 +6,8 @@ import org.apache.spark.sql.types._
 import graft.lang.Ast._
 import graft.operators.RelationalOps
 import graft.seq.{Ambiguity, Mutations, SeqPredicates}
+import graft.sources.NdjsonIngest
+import graft.sources.NdjsonIngest.Zone
 import graft.trees.{LineageTree, PhyloTree}
 
 /** SaneQL → DataFrame planner — the analog of the reference's
@@ -574,16 +576,12 @@ final class Planner(catalog: Planner.Catalog) {
     */
   final case class ZonePred(dir: String, chain: Seq[String],
       schema: org.apache.spark.sql.types.StructType, pred: Option[Expr],
-      ranges: Seq[(String, Double, Double)],
-      strEqs: Seq[(String, Seq[String])],
-      nullCs: Seq[(String, Boolean)],
-      // disjunctive conjuncts as zone arms: every rewrite consuming the
-      // note must thread these — they narrow the scan everywhere, and
-      // feed the count/top-k bounds only in the provably-exact shapes
-      // (orGroupPassCount: a complete arm passing all rows, all arms
-      // excluded, or same-column complete range arms with a contained
-      // envelope)
-      orGroups: Seq[Seq[graft.sources.NdjsonIngest.ZoneArm]] = Nil,
+      // the predicate's stats-decidable conjuncts; its or-groups narrow
+      // the scan everywhere and feed the count/top-k bounds only in the
+      // provably-exact shapes (orGroupPassCount: a complete arm passing
+      // all rows, all arms excluded, or same-column complete range arms
+      // with a contained envelope)
+      zone: Zone = Zone.empty,
       post: Seq[PostStage] = Nil,
       // Some(pk) marks a MERGE-ON-READ chain: rewrites must read through
       // readChainRangesMerged (excluded layers as pk-only shadows) and
@@ -603,21 +601,19 @@ final class Planner(catalog: Planner.Catalog) {
   /** The orderBy stage's note to an immediately-following limit: the sort
     * was a single first key over the BARE registered versioned scan whose
     * chain carries layer stats (or over a fully stats-decidable filter of
-    * one — `zone`), so `limit(k)` may re-plan the whole prefix as a
-    * stats-bounded top-k chain read
-    * ([[graft.sources.NdjsonIngest.readChainTopK]] — the reference's
+    * one — both a `zone` note, conjunct-free for the bare scan), so
+    * `limit(k)` may re-plan the whole prefix as a stats-bounded top-k
+    * chain read (`NdjsonIngest.chainTopKLayers` — the reference's
     * RangeSelection over a sorted column, range_selection.h:15-40). Every
     * other pipeline stage drops the note (the default None), so the
     * rewrite only ever fires on the exact shapes it is proven for.
     */
-  final case class SortedScan(dir: String, chain: Seq[String],
-      column: String, descending: Boolean,
+  final case class SortedScan(column: String, descending: Boolean,
       // (name, descending) per tiebreak key — the BOUND logic is
       // tiebreak-agnostic (strict exclusion never depends on how ties
       // order), so mixed-direction tiebreaks route like ascending ones
       tiebreak: Seq[(String, Boolean)],
-      schema: org.apache.spark.sql.types.StructType, skip: Long = 0,
-      zone: Option[ZonePred] = None,
+      zone: ZonePred, skip: Long = 0,
       // stages interposed BETWEEN the orderBy and the limit (plain
       // projections, maps — both order-preserving): the rewrite replays
       // them AFTER its orderBy, so they may freely drop sort keys or
@@ -648,18 +644,28 @@ final class Planner(catalog: Planner.Catalog) {
       origin: Option[String] = None): Column =
     scalar(e, df, Ambiguity.ModeNone, origin)
 
-  /** A conjunct-free ZonePred for the BARE registered merge-free scan —
-    * what a row-membership-invariant stage (project/map) seeds when it
-    * runs directly off the table so a LATER orderBy+limit or count can
-    * still bound its read from the chain's metadata.
+  /** A conjunct-free ZonePred when `in` is the BARE registered scan of a
+    * versioned chain: a merge-free one from [[Catalog.versionedDirs]]
+    * (`merged = false`) or a merge-on-read one from
+    * [[Catalog.mergedVersionedDirs]] with its pk (`merged = true`). The
+    * chain is the one the registered frame actually reads. A plain
+    * versioned chain holding upsert/tombstone layers gives no note: the
+    * raw layer union would un-merge them, so it stays on the registered
+    * frame (conservative, always sound). Also what a
+    * row-membership-invariant stage (project/map) seeds when it runs
+    * directly off the table, so a LATER orderBy+limit or count can still
+    * bound its read from the chain's metadata.
     */
-  private def bareScanNote(in: Tbl): Option[ZonePred] = for {
+  private def bareNote(in: Tbl, merged: Boolean): Option[ZonePred] = for {
     t <- in.origin
-    dir <- catalog.versionedDirs.get(t)
     if catalog.tables.get(t).exists(_ eq in.df)
-    chain <- frameLayers(in.df, dir)
-    if graft.sources.NdjsonIngest.chainMergeFree(dir, chain)
-  } yield ZonePred(dir, chain, in.df.schema, None, Nil, Nil, Nil)
+    dir <- (if (merged) catalog.mergedVersionedDirs
+      else catalog.versionedDirs).get(t)
+    mergedPk <-
+      if (merged) catalog.primaryKeys.get(t).map(Option(_)) else Some(None)
+    chain <- frameLayers(in.df, dir, allowTombstones = merged)
+    if merged || NdjsonIngest.chainMergeFree(dir, chain)
+  } yield ZonePred(dir, chain, in.df.schema, None, mergedPk = mergedPk)
 
   /** Ungrouped metadata count for a pipeline value: the bare registered
     * merge-free chain's recorded row counts, a fully-decidable filter's
@@ -672,22 +678,9 @@ final class Planner(catalog: Planner.Catalog) {
   private def metaCountOf(in: Tbl): Option[Long] = in.union match {
     case Some((l, r)) =>
       for (a <- metaCountOf(l); b <- metaCountOf(r)) yield a + b
-    case None => in.zone match {
-      case Some(zp) if zp.mergedPk.isDefined => None
-      case Some(zp) => graft.sources.NdjsonIngest.chainMatchCount(
-        zp.dir, zp.chain, zp.ranges, zp.strEqs,
-        nullCols = zp.nullCs.collect { case (c, true) => c },
-        notNullCols = zp.nullCs.collect { case (c, false) => c },
-        orGroups = zp.orGroups)
-      case None => for {
-        t <- in.origin
-        dir <- catalog.versionedDirs.get(t)
-        if catalog.tables.get(t).exists(_ eq in.df)
-        chain <- frameLayers(in.df, dir)
-        if graft.sources.NdjsonIngest.chainMergeFree(dir, chain)
-        total <- graft.sources.NdjsonIngest.chainRowCount(dir, chain)
-      } yield total
-    }
+    case None => in.zone.orElse(bareNote(in, merged = false))
+      .filter(_.mergedPk.isEmpty)
+      .flatMap(zp => NdjsonIngest.chainMatchCount(zp.dir, zp.chain, zp.zone))
   }
 
   /** Grouped metadata counts (1 or 2 group columns) as sidecar TOKENS,
@@ -703,38 +696,21 @@ final class Planner(catalog: Planner.Catalog) {
         yield (a ++ b).groupBy(_._1).toSeq
           .map { case (g, xs) => (g, xs.map(_._2).sum) }
     case None =>
-      val ctx: Option[(String, Seq[String], Seq[(String, Double, Double)],
-          Seq[(String, Seq[String])], Seq[(String, Boolean)],
-          Seq[Seq[graft.sources.NdjsonIngest.ZoneArm]])] =
-        in.zone match {
-          case Some(zp) if zp.mergedPk.isEmpty &&
-              cols.forall(zp.schema.fieldNames.contains) =>
-            Some((zp.dir, zp.chain, zp.ranges, zp.strEqs, zp.nullCs,
-              zp.orGroups))
-          case Some(_) => None
-          case None => for {
-            t <- in.origin
-            dir <- catalog.versionedDirs.get(t)
-            if catalog.tables.get(t).exists(_ eq in.df)
-            chain <- frameLayers(in.df, dir)
-            if graft.sources.NdjsonIngest.chainMergeFree(dir, chain)
-          } yield (dir, chain, Nil, Nil, Nil, Nil)
+      in.zone.orElse(bareNote(in, merged = false))
+        .filter(zp => zp.mergedPk.isEmpty &&
+          cols.forall(zp.schema.fieldNames.contains))
+        .flatMap { zp =>
+          if (cols.size == 1)
+            NdjsonIngest.chainGroupCount(zp.dir, zp.chain, cols.head,
+              zp.zone).map(_.map { case (tok, cnt) => (Seq(tok), cnt) })
+          else
+            // TWO group columns: decidable when one has a complete
+            // histogram and the other is layer-constant (the day-
+            // partitioned-chain × type case) — chainGroupCountTwo
+            NdjsonIngest.chainGroupCountTwo(zp.dir, zp.chain, cols(0),
+              cols(1), zp.zone)
+              .map(_.map { case ((ta, tb), cnt) => (Seq(ta, tb), cnt) })
         }
-      ctx.flatMap { case (dir, chain, rs, ses, ncs, ogs) =>
-        val nulls = ncs.collect { case (c, true) => c }
-        val notNulls = ncs.collect { case (c, false) => c }
-        if (cols.size == 1)
-          graft.sources.NdjsonIngest.chainGroupCount(dir, chain,
-            cols.head, rs, ses, nulls, notNulls, ogs)
-            .map(_.map { case (tok, cnt) => (Seq(tok), cnt) })
-        else
-          // TWO group columns: decidable when one has a complete
-          // histogram and the other is layer-constant (the day-
-          // partitioned-chain × type case) — chainGroupCountTwo
-          graft.sources.NdjsonIngest.chainGroupCountTwo(dir, chain,
-            cols(0), cols(1), rs, ses, nulls, notNulls, ogs)
-            .map(_.map { case ((ta, tb), cnt) => (Seq(ta, tb), cnt) })
-      }
   }
 
   /** Sidecar histogram token → typed group value (dates and narrow
@@ -819,7 +795,8 @@ final class Planner(catalog: Planner.Catalog) {
     val note: Option[ZonePred] =
       if (!plain) None
       else in.zone.map(zp => zp.copy(post = zp.post :+ PostProject(cols)))
-        .orElse(bareScanNote(in).map(_.copy(post = Seq(PostProject(cols)))))
+        .orElse(bareNote(in, merged = false)
+          .map(_.copy(post = Seq(PostProject(cols)))))
     // a plain projection BETWEEN an orderBy and its limit rides the sort
     // note as a post-sort stage (replayed after the rewrite's own sort,
     // so it may freely drop the sort keys). A sorted UNION additionally
@@ -828,13 +805,12 @@ final class Planner(catalog: Planner.Catalog) {
     Tbl(in.df.select(exprs: _*), None, zone = note,
       sortedScan =
         if (plain) in.sortedScan
-          .filter(_.zone.isDefined) // readChainTopK can't replay stages
           .map(ss => ss.copy(postSort = ss.postSort :+ PostProject(cols)))
         else None,
       sortedUnion =
         if (!plain) None
         else in.sortedUnion.filter { leaves =>
-          leaves.forall(_.sortedScan.exists(ss => ss.zone.isDefined &&
+          leaves.forall(_.sortedScan.exists(ss =>
             (ss.column +: ss.tiebreak.map(_._1)).forall(cols.contains)))
         }.map(_.map(t => t.copy(sortedScan = t.sortedScan.map(ss =>
           ss.copy(postSort = ss.postSort :+ PostProject(cols)))))))
@@ -867,7 +843,7 @@ final class Planner(catalog: Planner.Catalog) {
         case Some(zp) if noShadow(zp.schema.fieldNames.toSeq) =>
           Some(zp.copy(post = zp.post :+ PostMap(items, in.origin)))
         case Some(_) => None
-        case None => bareScanNote(in)
+        case None => bareNote(in, merged = false)
           .filter(zp => noShadow(zp.schema.fieldNames.toSeq))
           .map(_.copy(post = Seq(PostMap(items, in.origin))))
       }
@@ -879,12 +855,10 @@ final class Planner(catalog: Planner.Catalog) {
     // re-sorts the REPLAYED child frames, so the keys must stay
     // unshadowed there.
     Tbl(out, None, zone = note,
-      sortedScan = in.sortedScan
-        .filter(_.zone.isDefined)
-        .map(ss =>
-          ss.copy(postSort = ss.postSort :+ PostMap(items, in.origin))),
+      sortedScan = in.sortedScan.map(ss =>
+        ss.copy(postSort = ss.postSort :+ PostMap(items, in.origin))),
       sortedUnion = in.sortedUnion.filter { leaves =>
-        leaves.forall(_.sortedScan.exists(ss => ss.zone.isDefined &&
+        leaves.forall(_.sortedScan.exists(ss =>
           !(ss.column +: ss.tiebreak.map(_._1))
             .exists(k => items.exists(_._1 == k))))
       }.map(_.map(t => t.copy(sortedScan = t.sortedScan.map(ss =>
@@ -933,50 +907,27 @@ final class Planner(catalog: Planner.Catalog) {
         case _ => None
       }
     } yield (first, ties)
-in.zone match {
+    for {
+      (first, ties) <- sortKey
       // filter(stats-decidable).orderBy(...): the chain + merge-free
       // checks already ran when the filter routed; the limit rewrite
-      // re-narrows and re-applies the predicate itself. The sort key
-      // must be a field of the PINNED SCAN SCHEMA, not merely of the
-      // current frame: a map-added key may share its name with a
-      // dead schema-evolution column whose stale envelopes some
-      // layers still record — bounding on those would order the
-      // dead column's values, not the expression's. Map-added keys
-      // keep the zone narrowing the filter already did and simply
-      // sort the narrowed scan.
-      case Some(zp) => sortKey
-        .filter { case ((c, _), _) => zp.schema.fieldNames.contains(c) }
-        .map { case (first, ties) =>
-          SortedScan(zp.dir, zp.chain, first._1, first._2, ties,
-            zp.schema, zone = Some(zp))
-        }
-      case None => (for {
-        t <- in.origin
-        dir <- catalog.versionedDirs.get(t)
-        if catalog.tables.get(t).exists(_ eq in.df)
-        (first, ties) <- sortKey
-        chain <- frameLayers(in.df, dir)
-        if graft.sources.NdjsonIngest.chainMergeFree(dir, chain)
-        // a conjunct-free zone note rides along so post-orderBy stages
-        // (project/map before the limit) can replay through the
-        // zone-branch rewrite
-      } yield SortedScan(dir, chain, first._1, first._2, ties, in.df.schema,
-        zone = Some(ZonePred(dir, chain, in.df.schema, None, Nil, Nil, Nil))))
-        // the bare MERGED scan sorts too: the note carries a
-        // conjunct-free merged ZonePred so the limit rewrite takes
-        // the shadow-aware path (pk-only non-suppliers, loss-capped
-        // qualifying counts) instead of the append-only one
-        .orElse(for {
-          t <- in.origin
-          dir <- catalog.mergedVersionedDirs.get(t)
-          pk <- catalog.primaryKeys.get(t)
-          if catalog.tables.get(t).exists(_ eq in.df)
-          (first, ties) <- sortKey
-          chain <- frameLayersMerged(in.df, dir)
-        } yield SortedScan(dir, chain, first._1, first._2, ties,
-          in.df.schema, zone = Some(ZonePred(dir, chain, in.df.schema,
-            None, Nil, Nil, Nil, mergedPk = Some(pk)))))
-    }
+      // re-narrows and re-applies the predicate itself. Over the bare
+      // scan a conjunct-free note rides along so post-orderBy stages
+      // (project/map before the limit) can replay through the same
+      // rewrite; the bare MERGED scan's note sends the limit down the
+      // shadow-aware path (pk-only non-suppliers, loss-capped
+      // qualifying counts) instead of the append-only one.
+      zp <- in.zone.orElse(bareNote(in, merged = false))
+        .orElse(bareNote(in, merged = true))
+      // the sort key must be a field of the PINNED SCAN SCHEMA, not
+      // merely of the current frame: a map-added key may share its name
+      // with a dead schema-evolution column whose stale envelopes some
+      // layers still record — bounding on those would order the dead
+      // column's values, not the expression's. Map-added keys keep the
+      // zone narrowing the filter already did and simply sort the
+      // narrowed scan.
+      if zp.schema.fieldNames.contains(first._1)
+    } yield SortedScan(first._1, first._2, ties, zp)
   }
 
   /** Re-apply carried pipeline stages verbatim — the single replay used
@@ -991,6 +942,27 @@ in.zone match {
         items.foldLeft(d) { case (dd, (nm, v)) =>
           dd.withColumn(nm, scalar(v, dd, Ambiguity.ModeNone, org))
         }
+    }
+
+  /** The scan a zone note re-plans over: the note's chain narrowed to
+    * the layers that may hold a matching row (or to `keep`, a subset
+    * the caller already chose), under the note's pinned schema — a
+    * schema-evolution commit racing the plan must not give the routed
+    * scan columns the registered frame lacks. A MERGED note reads
+    * through the shadow-aware merged reader, where layers outside the
+    * set stay in the argmax as pk-only shadows instead of dropping out.
+    */
+  private def zoneScan(spark: org.apache.spark.sql.SparkSession,
+      zp: ZonePred, keep: Option[Seq[String]] = None): DataFrame =
+    zp.mergedPk match {
+      case Some(pk) => NdjsonIngest.readChainRangesMerged(spark, zp.dir,
+        zp.chain, pk, zp.zone, Some(zp.schema), keep.map(_.toSet))
+      case None => keep match {
+        case Some(k) => NdjsonIngest.readChainSubset(spark, zp.dir,
+          zp.chain, k, Some(zp.schema))
+        case None => NdjsonIngest.readChainRanges(spark, zp.dir, zp.chain,
+          zp.zone, Some(zp.schema))
+      }
     }
 
   /** The limit pipeline stage: the stats-bounded top-k rewrite over a
@@ -1030,65 +1002,37 @@ in.zone match {
           // narrowed scan (an interposed offset(o) deepened the bound
           // to o+k and re-applies below)
           val kTot = (ss.skip + n).toInt
-          val top = ss.zone match {
-            case Some(zp) =>
-              // filter+orderBy+limit: the kept set satisfies BOTH the
-              // zone intersection (a pruned layer has no qualifying
-              // rows) and the filtered top-k accumulation (per-layer
-              // qualifying-count lower bounds); the original predicate
-              // recompiles against the narrowed scan, so row-wise
-              // semantics are byte-identical to the unrouted plan.
-              // Merged chains take the shadow-aware selector and
-              // reader: non-supplying layers stay in the argmax as
-              // pk-only shadows instead of dropping out.
-              val keyCols =
-                ((ss.column, ss.descending) +: ss.tiebreak).map {
-                  case (c, d) => if (d) col(c).desc else col(c).asc }
-              val scan = zp.mergedPk match {
-                case Some(pk) =>
-                  val kept = graft.sources.NdjsonIngest
-                    .chainTopKLayersMerged(
-                      zp.dir, zp.chain, ss.column, kTot, ss.descending,
-                      zp.ranges, zp.strEqs,
-                      zp.nullCs.collect { case (c, true) => c },
-                      zp.nullCs.collect { case (c, false) => c },
-                      zp.orGroups)
-                  graft.sources.NdjsonIngest.readChainRangesMerged(
-                    in.df.sparkSession, zp.dir, zp.chain, pk,
-                    zp.ranges, zp.strEqs,
-                    nullCols = zp.nullCs.collect { case (c, true) => c },
-                    notNullCols = zp.nullCs.collect { case (c, false) => c },
-                    pinSchema = Some(ss.schema),
-                    orGroups = zp.orGroups,
-                    keepLayers = Some(kept.toSet))
-                case None =>
-                  val kept = graft.sources.NdjsonIngest.chainTopKLayers(
-                    zp.dir, zp.chain, ss.column, kTot, ss.descending,
-                    zp.ranges, zp.strEqs,
-                    zp.nullCs.collect { case (c, true) => c },
-                    zp.nullCs.collect { case (c, false) => c },
-                    zp.orGroups)
-                  graft.sources.NdjsonIngest.readChainSubset(
-                    in.df.sparkSession, zp.dir, zp.chain, kept,
-                    Some(ss.schema))
-              }
-              val filtered = zp.pred.map(p =>
-                scan.filter(scalar(p, scan, Ambiguity.ModeNone, in.origin)))
-                .getOrElse(scan)
-              // carried row-membership-invariant stages re-apply IN
-              // ORDER after the filter — exactly where the pipeline
-              // had them
-              // post-sort stages replay AFTER the sort (both are
-              // order-preserving, and the sort ran on pre-stage values
-              // like the pipeline's)
-              replay(
-                replay(filtered, zp.post).orderBy(keyCols: _*),
-                ss.postSort).limit(kTot)
-            case None =>
-              graft.sources.NdjsonIngest.readChainTopK(
-                in.df.sparkSession, ss.dir, ss.chain, ss.column,
-                kTot, ss.descending, ss.tiebreak, Some(ss.schema))
-          }
+          // [filter+]orderBy+limit: the kept set satisfies BOTH the zone
+          // intersection (a pruned layer has no qualifying rows) and the
+          // filtered top-k accumulation (per-layer qualifying-count
+          // lower bounds); the original predicate recompiles against
+          // the narrowed scan, so row-wise semantics are byte-identical
+          // to the unrouted plan. Merged chains take the shadow-aware
+          // selector and reader: non-supplying layers stay in the
+          // argmax as pk-only shadows instead of dropping out.
+          val zp = ss.zone
+          val keyCols =
+            ((ss.column, ss.descending) +: ss.tiebreak).map {
+              case (c, d) => if (d) col(c).desc else col(c).asc }
+          val kept =
+            if (zp.mergedPk.isDefined)
+              NdjsonIngest.chainTopKLayersMerged(zp.dir, zp.chain,
+                ss.column, kTot, ss.descending, zp.zone)
+            else
+              NdjsonIngest.chainTopKLayers(zp.dir, zp.chain,
+                ss.column, kTot, ss.descending, zp.zone)
+          val scan = zoneScan(in.df.sparkSession, zp, Some(kept))
+          val filtered = zp.pred.map(p =>
+            scan.filter(scalar(p, scan, Ambiguity.ModeNone, in.origin)))
+            .getOrElse(scan)
+          // carried row-membership-invariant stages re-apply IN ORDER
+          // after the filter — exactly where the pipeline had them;
+          // post-sort stages replay AFTER the sort (both are
+          // order-preserving, and the sort ran on pre-stage values like
+          // the pipeline's)
+          val top = replay(
+            replay(filtered, zp.post).orderBy(keyCols: _*),
+            ss.postSort).limit(kTot)
           Tbl(if (ss.skip > 0) top.offset(ss.skip.toInt).limit(n.toInt)
               else top, in.origin)
         case _ => Tbl(in.df.limit(n.toInt), in.origin)
@@ -1127,189 +1071,63 @@ in.zone match {
       case Binary("&&", l, r) => conjuncts(l) ++ conjuncts(r)
       case other => Seq(other)
     }
-    // layer (zone-map) routing: when the input is the BARE scan of a
-    // table registered with a versioned dir, the first top-level
-    // numeric/date between/equality conjunct swaps the scan for the
-    // stats-pruned layer chain. Layers whose recorded [min, max]
-    // can't intersect never open a footer; the chain is a SUPERSET of
-    // the matching rows and EVERY conjunct still applies row-wise
-    // below, so this is pure scan narrowing, never a semantic change.
-    // The chain is derived from the REGISTERED FRAME'S OWN input
+    // layer (zone-map) routing, ONE path for every versioned input (≙
+    // the reference's FilterPushdownPass folding EVERY filter into the
+    // scan regardless of interleaving, optimizer/filter_pushdown_pass.h:
+    // 22-49). The input is either the BARE scan of a registered chain
+    // — merge-free, or merge-on-read with its pk — or carries a ZonePred
+    // note: a previous fully-decidable filter, possibly followed by
+    // row-membership-invariant project/map stages. The predicate's
+    // stats-decidable conjuncts (ranges, string equalities/in-sets,
+    // null tests, disjunctions as arms) extend the note's zone, and the
+    // whole prefix re-plans over the narrowed chain: scan → prior
+    // row-wise predicate → post-stage replay reproduces the input frame
+    // exactly, so EVERY conjunct still applies row-wise below — pure
+    // scan narrowing, never a semantic change. Layers whose stats can't
+    // match never open a footer; a merge-on-read chain keeps them in
+    // the argmax as pk-only shadows (tombstones/upserts keep resolving
+    // exactly).
+    // The bare chain is derived from the REGISTERED FRAME'S OWN input
     // files (not re-resolved from the latest pointer), so a commit
-    // racing the plan can neither skew the routed read vs the
-    // unrouted one nor slip a new layer past the merge-free check —
-    // both run over the same captured chain. The pure conjunct-shape
-    // check runs FIRST; the filesystem checks only when something
-    // can actually route.
-    val zoned: Option[(Tbl, Option[ZonePred])] = for {
-      t <- in.origin
-      dir <- catalog.versionedDirs.get(t)
-      if catalog.tables.get(t).exists(_ eq in.df)
-      // EVERY routable conjunct narrows the chain (a layer must
-      // intersect all of them), not just the first; string
-      // equality/in-set conjuncts prune on lexicographic envelopes
-      ranges = conjuncts(pred).flatMap(rangeConjunct(_, in.df))
-      strEqs = conjuncts(pred).flatMap(stringEqConjunct(_, in.df))
-      nullCs = conjuncts(pred).flatMap(nullConjunct(_, in.df))
-      // disjunctive conjuncts prune on the UNION of their arms'
-      // envelopes (scan narrowing only — they never join the note)
-      orGs = conjuncts(pred).flatMap(orArms(_, in.df))
-      if ranges.nonEmpty || strEqs.nonEmpty || nullCs.nonEmpty ||
-        orGs.nonEmpty
-      chain <- frameLayers(in.df, dir)
-      // upsert/tombstone layers need the merge-on-read reader; the
-      // raw pruned chain would un-merge them, so stay on the
-      // registered frame (conservative, always sound)
-      if graft.sources.NdjsonIngest.chainMergeFree(dir, chain)
-    } yield {
-      val routed = Tbl(graft.sources.NdjsonIngest
-        .readChainRanges(in.df.sparkSession, dir, chain, ranges, strEqs,
-          // schema pinned with the chain: a schema-evolution commit
-          // racing the plan must not give the routed scan columns the
-          // registered frame lacks
-          pinSchema = Some(in.df.schema),
-          nullCols = nullCs.collect { case (c, true) => c },
-          notNullCols = nullCs.collect { case (c, false) => c },
-          orGroups = orGs),
-        in.origin)
-      // top-k composition note: only when EVERY conjunct is one of
-      // the stats-decidable shapes — a plain range/equality/null test
-      // or a DISJUNCTION whose arms all carry decidable tests — can a
-      // later orderBy+limit or count bound its read through this
-      // filter (an opaque conjunct would make per-layer qualifying
-      // counts unknowable; or-groups contribute bounds only in
-      // orGroupPassCount's provably-exact shapes and read as
-      // undecidable otherwise)
-      val note =
-        if (conjuncts(pred).forall(c => rangeConjunct(c, in.df).isDefined ||
-            stringEqConjunct(c, in.df).isDefined ||
-            nullConjunct(c, in.df).isDefined || orArms(c, in.df).isDefined))
-          Some(ZonePred(dir, chain, in.df.schema, Some(pred),
-            ranges, strEqs, nullCs, orGroups = orGs))
-        else None
-      (routed, note)
-    }
-    // merge-on-read zone routing: excluded layers degrade to pk-only
-    // shadow scans (readChainRangesMerged) instead of disqualifying
-    // every storage optimization. A fully-decidable predicate also
-    // leaves a MERGED note (mergedPk set): a later orderBy+limit can
-    // bound the supplying layers via the shadow-loss-aware
-    // chainTopKLayersMerged, while the metadata count/group paths
-    // stay off (recorded layer counts are not merged-result counts).
-    val zonedMerged: Option[(Tbl, Option[ZonePred])] = for {
-      t <- in.origin
-      dir <- catalog.mergedVersionedDirs.get(t)
-      pk <- catalog.primaryKeys.get(t)
-      if catalog.tables.get(t).exists(_ eq in.df)
-      ranges = conjuncts(pred).flatMap(rangeConjunct(_, in.df))
-      strEqs = conjuncts(pred).flatMap(stringEqConjunct(_, in.df))
-      nullCs = conjuncts(pred).flatMap(nullConjunct(_, in.df))
-      orGs = conjuncts(pred).flatMap(orArms(_, in.df))
-      if ranges.nonEmpty || strEqs.nonEmpty || nullCs.nonEmpty ||
-        orGs.nonEmpty
-      chain <- frameLayersMerged(in.df, dir)
-    } yield {
-      val routed = Tbl(graft.sources.NdjsonIngest
-        .readChainRangesMerged(in.df.sparkSession, dir, chain, pk,
-          ranges, strEqs,
-          nullCols = nullCs.collect { case (c, true) => c },
-          notNullCols = nullCs.collect { case (c, false) => c },
-          pinSchema = Some(in.df.schema),
-          orGroups = orGs),
-        in.origin)
-      val note =
-        if (conjuncts(pred).forall(c => rangeConjunct(c, in.df).isDefined ||
-            stringEqConjunct(c, in.df).isDefined ||
-            nullConjunct(c, in.df).isDefined || orArms(c, in.df).isDefined))
-          Some(ZonePred(dir, chain, in.df.schema, Some(pred),
-            ranges, strEqs, nullCs, orGroups = orGs, mergedPk = Some(pk)))
-        else None
-      (routed, note)
-    }
-    // STACKED / POST-STAGE filter composition (≙ the reference's
-    // FilterPushdownPass folding EVERY filter into the scan
-    // regardless of interleaving, optimizer/filter_pushdown_pass.h:
-    // 22-49): when the input carries a ZonePred note — a previous
-    // fully-decidable filter, possibly followed by row-membership-
-    // invariant project/map stages — new stats-decidable conjuncts
-    // extend the note's conjunct lists and the whole prefix re-plans
-    // over the further-narrowed chain: scan → prior row-wise
-    // predicate → post-stage replay reproduces the input frame
-    // exactly, so the new predicate still applies row-wise below.
-    // Decidability here additionally requires the conjunct's column
-    // to be a field of the PINNED SCAN SCHEMA: a map-added column
-    // (or a post-projection alias) may share its name with a dead
-    // schema-evolution column some layers still carry stats for, and
-    // pruning on those stats would answer from the dead column's
-    // values. Conjuncts failing the test stay row-wise-only (the
-    // scan still narrows on the decidable ones; the note drops).
-    val rezoned: Option[(Tbl, Option[ZonePred])] =
-      if (zoned.isDefined) None
-      else in.zone.flatMap { zp =>
-        val scanCols = zp.schema.fieldNames.toSet
-        val cs = conjuncts(pred)
-        def dRange(c: Expr) =
-          rangeConjunct(c, in.df).filter(r => scanCols(r._1))
-        def dStr(c: Expr) =
-          stringEqConjunct(c, in.df).filter(s => scanCols(s._1))
-        def dNull(c: Expr) =
-          nullConjunct(c, in.df).filter(n => scanCols(n._1))
-        val ranges = cs.flatMap(dRange(_))
-        val strEqs = cs.flatMap(dStr(_))
-        val nullCs = cs.flatMap(dNull(_))
-        val orGs = cs.flatMap(orArms(_, in.df, Some(scanCols)))
-        if (ranges.isEmpty && strEqs.isEmpty && nullCs.isEmpty &&
-          orGs.isEmpty) None
-        else {
-          val allR = zp.ranges ++ ranges
-          val allS = zp.strEqs ++ strEqs
-          val allN = zp.nullCs ++ nullCs
-          val allO = zp.orGroups ++ orGs
-          // a MERGED note re-plans through the shadow-aware reader (the
-          // further-narrowed conjuncts only shrink CANDIDACY — excluded
-          // layers keep participating as pk-only shadows, so the merge
-          // semantics are untouched and the replay proof is identical)
-          val scan = zp.mergedPk match {
-            case Some(pk) => graft.sources.NdjsonIngest.readChainRangesMerged(
-              in.df.sparkSession, zp.dir, zp.chain, pk, allR, allS,
-              nullCols = allN.collect { case (c, true) => c },
-              notNullCols = allN.collect { case (c, false) => c },
-              pinSchema = Some(zp.schema),
-              orGroups = allO)
-            case None => graft.sources.NdjsonIngest.readChainRanges(
-              in.df.sparkSession, zp.dir, zp.chain, allR, allS,
-              pinSchema = Some(zp.schema),
-              nullCols = allN.collect { case (c, true) => c },
-              notNullCols = allN.collect { case (c, false) => c },
-              orGroups = allO)
-          }
+    // racing the plan can neither skew the routed read vs the unrouted
+    // one nor slip a new layer past the merge-free check — both run
+    // over the same captured chain. The pure conjunct-shape extraction
+    // runs FIRST; the filesystem checks only when something can
+    // actually route.
+    // Decidability requires the conjunct's column to be a field of the
+    // PINNED SCAN SCHEMA: a map-added column (or a post-projection
+    // alias) may share its name with a dead schema-evolution column
+    // some layers still carry stats for, and pruning on those stats
+    // would answer from the dead column's values. Conjuncts failing the
+    // test stay row-wise-only.
+    val zoned: Option[(Tbl, Option[ZonePred])] = {
+      val scanCols =
+        in.zone.fold(in.df.columns.toSet)(_.schema.fieldNames.toSet)
+      val (z, allDecidable) = zoneOf(conjuncts(pred), in.df, scanCols)
+      if (z.isEmpty) None
+      else in.zone.orElse(bareNote(in, merged = false))
+        .orElse(bareNote(in, merged = true)).map { prev =>
+          val zp = prev.copy(zone = prev.zone ++ z)
+          val scan = zoneScan(in.df.sparkSession, zp)
           val prior = zp.pred.map(p =>
             scan.filter(scalar(p, scan, Ambiguity.ModeNone, in.origin)))
             .getOrElse(scan)
-          val replayed = replay(prior, zp.post)
-          // the combined note (count/top-k bounds) needs EVERY new
-          // conjunct decidable over scan columns; the combined
-          // predicate applies PRE-replay in any rewrite — sound
-          // because decidable conjuncts only touch scan columns,
-          // whose values no carried post stage can change
+          // the note for a later count or orderBy+limit needs EVERY
+          // conjunct decidable (an opaque one makes per-layer
+          // qualifying counts unknowable; or-groups contribute bounds
+          // only in orGroupPassCount's provably-exact shapes). The
+          // combined predicate applies PRE-replay in any rewrite — sound
+          // because decidable conjuncts only touch scan columns, whose
+          // values no carried post stage can change.
           val note =
-            if (cs.forall(c => dRange(c).isDefined ||
-                dStr(c).isDefined || dNull(c).isDefined ||
-                orArms(c, in.df, Some(scanCols)).isDefined))
-              Some(zp.copy(
-                pred = Some(zp.pred
-                  .map(p => Binary("&&", p, pred)).getOrElse(pred)),
-                ranges = allR, strEqs = allS, nullCs = allN,
-                orGroups = allO))
-            else None
-          Some((Tbl(replayed, in.origin), note))
+            if (!allDecidable) None
+            else Some(zp.copy(
+              pred = Some(zp.pred.fold(pred)(p => Binary("&&", p, pred)))))
+          (Tbl(replay(prior, zp.post), in.origin), note)
         }
-      }
-    val in2: Tbl = zoned.map(_._1).orElse(rezoned.map(_._1))
-      .orElse(zonedMerged.map(_._1)).getOrElse(in)
-    val zoneNote: Option[ZonePred] =
-      zoned.flatMap(_._2).orElse(rezoned.flatMap(_._2))
-        .orElse(zonedMerged.flatMap(_._2))
+    }
+    val in2: Tbl = zoned.map(_._1).getOrElse(in)
+    val zoneNote: Option[ZonePred] = zoned.flatMap(_._2)
     val idxCtx = for {
       t <- in2.origin
       m <- catalog.mutIndexes.get(t) if m.nonEmpty
@@ -1372,30 +1190,18 @@ in.zone match {
     // by POSITION before the filter ran — offset∘filter does not
     // commute, so a deepened note must drop here
     def absorbFilter(ss: SortedScan): Option[SortedScan] =
-      if (ss.zone.isEmpty || ss.skip != 0) None
+      if (ss.skip != 0) None
       else {
-        val zp = ss.zone.get
+        val zp = ss.zone
         val shadowed: Set[String] = ss.postSort.collect {
           case PostMap(items, _) => items.map(_._1)
         }.flatten.toSet
-        val okCols = zp.schema.fieldNames.toSet -- shadowed
-        val cs = conjuncts(pred)
-        def dRange(c: Expr) =
-          rangeConjunct(c, in.df).filter(r => okCols(r._1))
-        def dStr(c: Expr) =
-          stringEqConjunct(c, in.df).filter(s => okCols(s._1))
-        def dNull(c: Expr) =
-          nullConjunct(c, in.df).filter(n => okCols(n._1))
-        def dOr(c: Expr) = orArms(c, in.df, Some(okCols))
-        if (!cs.forall(c => dRange(c).isDefined || dStr(c).isDefined ||
-            dNull(c).isDefined || dOr(c).isDefined)) None
-        else Some(ss.copy(zone = Some(zp.copy(
-          pred = Some(zp.pred.map(p => Binary("&&", p, pred))
-            .getOrElse(pred)),
-          ranges = zp.ranges ++ cs.flatMap(dRange(_)),
-          strEqs = zp.strEqs ++ cs.flatMap(dStr(_)),
-          nullCs = zp.nullCs ++ cs.flatMap(dNull(_)),
-          orGroups = zp.orGroups ++ cs.flatMap(dOr(_))))))
+        val (z, allDecidable) = zoneOf(conjuncts(pred), in.df,
+          zp.schema.fieldNames.toSet -- shadowed)
+        if (!allDecidable) None
+        else Some(ss.copy(zone = zp.copy(
+          pred = Some(zp.pred.fold(pred)(p => Binary("&&", p, pred))),
+          zone = zp.zone ++ z)))
       }
     val keptSort: Option[SortedScan] = in.sortedScan.flatMap(absorbFilter)
     // a sorted UNION absorbs the filter per LEAF (each leaf's pinned
@@ -1619,23 +1425,43 @@ in.zone match {
     }
   }
 
-  /** The column when `e` is an `isNull`/`isNotNull` conjunct over a
-    * column carrying a non-null ledger (`c:` stats lines — numeric/date
+  /** The zone of an `isNull`/`isNotNull` conjunct over a column
+    * carrying a non-null ledger (`c:` stats lines — numeric/date
     * columns): isNull prunes layers recording zero nulls, isNotNull
     * prunes all-null layers. String columns have no ledger and simply
     * never prune (conservative).
     */
-  private def nullConjunct(e: Expr,
-      df: DataFrame): Option[(String, Boolean)] = e match {
-    case Call("isNull", Seq(Ident(c)), Seq()) if df.columns.contains(c) =>
-      Some((c, true))
-    case Call("isNull", Seq(), Seq(("column", Ident(c))))
-        if df.columns.contains(c) => Some((c, true))
-    case Call("isNotNull", Seq(Ident(c)), Seq()) if df.columns.contains(c) =>
-      Some((c, false))
-    case Call("isNotNull", Seq(), Seq(("column", Ident(c))))
-        if df.columns.contains(c) => Some((c, false))
-    case _ => None
+  private def nullConjunct(e: Expr, df: DataFrame): Option[Zone] = {
+    val (fn, c) = e match {
+      case Call(f, Seq(Ident(c)), Seq()) => (f, c)
+      case Call(f, Seq(), Seq(("column", Ident(c)))) => (f, c)
+      case _ => return None
+    }
+    if (!df.columns.contains(c)) None
+    else if (fn == "isNull") Some(Zone(nullCols = Seq(c)))
+    else if (fn == "isNotNull") Some(Zone(notNullCols = Seq(c)))
+    else None
+  }
+
+  /** The stats-decidable part of `cs` (top-level AND-conjuncts over
+    * `df`) as ONE zone, and whether EVERY conjunct was decidable. A
+    * conjunct is decidable when it is a range, string equality/in-set
+    * or null test on a column in `scanCols` (the pinned scan schema the
+    * zone will be tested against), or — with `withOr` — a disjunction
+    * whose every arm holds such a conjunct ([[orArms]]).
+    */
+  private def zoneOf(cs: Seq[Expr], df: DataFrame, scanCols: Set[String],
+      withOr: Boolean = true): (Zone, Boolean) = {
+    val parts = cs.map { c =>
+      rangeConjunct(c, df).filter(r => scanCols(r._1))
+        .map(r => Zone(ranges = Seq(r)))
+        .orElse(stringEqConjunct(c, df).filter(s => scanCols(s._1))
+          .map(s => Zone(strEquals = Seq(s))))
+        .orElse(nullConjunct(c, df).filter(z =>
+          (z.nullCols ++ z.notNullCols).forall(scanCols)))
+        .orElse(if (withOr) orArms(c, df, scanCols) else None)
+    }
+    (parts.flatten.foldLeft(Zone.empty)(_ ++ _), parts.forall(_.isDefined))
   }
 
   /** A top-level DISJUNCTIVE conjunct (`a || b [|| …]`) as zone-prunable
@@ -1645,15 +1471,13 @@ in.zone match {
     * conjunct makes the whole group unprunable → None. The layer-keep
     * rule is the union of the arms' envelopes, exactly how the
     * reference's Or operator unions its operands' bitmaps
-    * (filter/operators/or.cpp). `scanCols`, when given, restricts
-    * decidability to pinned-scan-schema columns (see the stacked-filter
-    * note). Disjunctions NEVER feed the count/top-k bounds — per-conjunct
-    * pass counts don't compose through OR — so callers use the result
-    * for scan narrowing only.
+    * (filter/operators/or.cpp). `scanCols` restricts decidability to
+    * pinned-scan-schema columns (see [[zoneOf]]). The group feeds the
+    * count/top-k bounds only in the provably-exact shapes of
+    * `NdjsonIngest.orGroupPassCount`; elsewhere it only narrows the scan.
     */
   private def orArms(e: Expr, df: DataFrame,
-      scanCols: Option[Set[String]] = None)
-      : Option[Seq[graft.sources.NdjsonIngest.ZoneArm]] = {
+      scanCols: Set[String]): Option[Zone] = {
     def orList(x: Expr): Seq[Expr] = x match {
       case Binary("||", l, r) => orList(l) ++ orList(r)
       case o => Seq(o)
@@ -1664,44 +1488,26 @@ in.zone match {
     }
     val arms = orList(e)
     if (arms.size < 2) return None
+    // complete: the recorded tests ARE the arm's entire predicate —
+    // every conjunct decidable inside the pinned scan schema. Only
+    // complete arms may feed exact pass counts; incomplete ones still
+    // narrow (may-contain).
     val built = arms.map { arm =>
-      val cs = andList(arm)
-      val rs = cs.flatMap(c =>
-        rangeConjunct(c, df).filter(r => scanCols.forall(_(r._1))))
-      val ss = cs.flatMap(c =>
-        stringEqConjunct(c, df).filter(s => scanCols.forall(_(s._1))))
-      val ns = cs.flatMap(c =>
-        nullConjunct(c, df).filter(n => scanCols.forall(_(n._1))))
-      // complete: the recorded tests ARE the arm's entire predicate —
-      // every conjunct decidable (and inside the pinned scan schema,
-      // when restricted). Only complete arms may feed exact pass
-      // counts; incomplete ones still narrow (may-contain).
-      graft.sources.NdjsonIngest.ZoneArm(rs, ss,
-        ns.collect { case (c, true) => c },
-        ns.collect { case (c, false) => c },
-        complete = rs.size + ss.size + ns.size == cs.size)
+      val (z, all) = zoneOf(andList(arm), df, scanCols, withOr = false)
+      z.copy(complete = all)
     }
-    if (built.exists(!_.nonEmpty)) None else Some(built)
+    if (built.exists(_.isEmpty)) None else Some(Zone(orGroups = Seq(built)))
   }
 
   /** The layer chain a registered versioned frame actually reads,
     * recovered from its resolved input files: every file must live
-    * directly under `dir/v<k>/` with no `_tombstones` segment (a merged
-    * frame's tombstone files, or any foreign path, disqualify routing).
-    * None = don't route.
+    * directly under `dir/v<k>/`, and any foreign path disqualifies
+    * routing (None = don't route). A `_tombstones` segment disqualifies
+    * a plain frame too; for a MERGED frame (`allowTombstones`) tombstone
+    * files are expected members of the merge-on-read chain (they resolve
+    * inside the merged read), so the segment maps to its layer.
     */
-  private def frameLayers(df: DataFrame, dir: String): Option[Seq[String]] =
-    frameLayersImpl(df, dir, allowTombstones = false)
-
-  /** [[frameLayers]] for a MERGED frame: tombstone files are expected
-    * members of a merge-on-read chain (they resolve inside the merged
-    * read), so a `_tombstones` segment maps to its layer instead of
-    * disqualifying routing. Foreign paths still disqualify.
-    */
-  private def frameLayersMerged(df: DataFrame, dir: String): Option[Seq[String]] =
-    frameLayersImpl(df, dir, allowTombstones = true)
-
-  private def frameLayersImpl(df: DataFrame, dir: String,
+  private def frameLayers(df: DataFrame, dir: String,
       allowTombstones: Boolean): Option[Seq[String]] = {
     def pathOf(f: String): Option[String] =
       scala.util.Try(new java.io.File(new java.net.URI(f)).getPath)
@@ -1924,15 +1730,13 @@ in.zone match {
         // parquet footers): merge-free chains — filtered, unioned, or
         // bare — pin it EXACTLY from the recorded layer counts
         // (metaCountOf, so lo == hi); MERGE-ON-READ chains answer the
-        // provable shadow bracket — recorded rows minus total shadow
-        // capacity bare (chainMergedCountBracket, the same bracket the
-        // merged top-k routing heuristic consumes), per-conjunct pass
-        // bounds under a fully-decidable filter
-        // (chainMergedMatchBracket) — and a unionAll sums its leaves'
-        // brackets (ends compose: the union's count is the sum of leaf
-        // counts). Anything else falls back to ONE exact counting pass
-        // (lo == hi == count). The user-facing answer is always a true
-        // bracket: the real count provably lies in [lo, hi].
+        // provable shadow bracket (chainMergedMatchBracket) — recorded
+        // rows minus total shadow capacity bare, per-conjunct pass
+        // bounds under a fully-decidable filter — and a unionAll sums
+        // its leaves' brackets (ends compose: the union's count is the
+        // sum of leaf counts). Anything else falls back to ONE exact
+        // counting pass (lo == hi == count). The user-facing answer is
+        // always a true bracket: the real count provably lies in [lo, hi].
         val in = input
         val spark = in.df.sparkSession
         def two(lo: Long, hi: Long): Tbl =
@@ -1942,23 +1746,12 @@ in.zone match {
           case Some((l, r)) =>
             for (a <- bracketOf(l); b <- bracketOf(r))
               yield (a._1 + b._1, a._2 + b._2)
-          case None => metaCountOf(t).map(c => (c, c)).orElse(t.zone match {
-            case Some(zp) if zp.mergedPk.isDefined =>
-              graft.sources.NdjsonIngest.chainMergedMatchBracket(
-                zp.dir, zp.chain, zp.ranges, zp.strEqs,
-                nullCols = zp.nullCs.collect { case (c, true) => c },
-                notNullCols = zp.nullCs.collect { case (c, false) => c },
-                orGroups = zp.orGroups)
-            case Some(_) => None // merge-free zones answered above
-            case None => for {
-              t0 <- t.origin
-              dir <- catalog.mergedVersionedDirs.get(t0)
-              if catalog.tables.get(t0).exists(_ eq t.df)
-              chain <- frameLayersMerged(t.df, dir)
-              b <- graft.sources.NdjsonIngest
-                .chainMergedCountBracket(dir, chain)
-            } yield b
-          })
+          case None => metaCountOf(t).map(c => (c, c)).orElse(
+            // merge-free zones answered above
+            t.zone.orElse(bareNote(t, merged = true))
+              .filter(_.mergedPk.isDefined)
+              .flatMap(zp => NdjsonIngest.chainMergedMatchBracket(
+                zp.dir, zp.chain, zp.zone)))
         }
         bracketOf(in) match {
           case Some((lo, hi)) => two(lo, hi)
@@ -1999,17 +1792,10 @@ in.zone match {
           case None =>
             metaGroupTokens(t, Seq(c))
               .map(_.map { case (toks, cnt) => (toks.head, cnt, cnt) })
-              .orElse(t.zone match {
-                case Some(_) => None // filtered merged → exact pass below
-                case None => for {
-                  t0 <- t.origin
-                  dir <- catalog.mergedVersionedDirs.get(t0)
-                  if catalog.tables.get(t0).exists(_ eq t.df)
-                  chain <- frameLayersMerged(t.df, dir)
-                  b <- graft.sources.NdjsonIngest
-                    .chainMergedGroupBracket(dir, chain, c)
-                } yield b
-              })
+              // a zone note (filtered merged) → exact pass below
+              .orElse(if (t.zone.isDefined) None
+                else bareNote(t, merged = true).flatMap(zp =>
+                  NdjsonIngest.chainMergedGroupBracket(zp.dir, zp.chain, c)))
         }
         val schema = StructType(Seq(StructField(c, dt, nullable = true),
           StructField("lo", LongType, nullable = false),

@@ -1019,9 +1019,8 @@ object RelationalQueries {
     // ---- APPROX COUNT BRACKET: approxCount() answers `[lo, hi]` from
     //      the sidecars alone — exact (lo == hi) on a merge-free chain
     //      (recorded layer counts), the provable shadow bracket on a
-    //      merged one (chainMergedCountBracket; the same bracket the
-    //      merged top-k routing heuristic consumes). Zero footers; the
-    //      oracle counts the flat table for real. ----
+    //      merged one (chainMergedMatchBracket of the empty zone).
+    //      Zero footers; the oracle counts the flat table for real. ----
     QDef("q_approx_count",
       """SELECT CAST(count(*) AS BIGINT) AS lo,
         |  CAST(count(*) AS BIGINT) AS hi FROM events""".stripMargin) {

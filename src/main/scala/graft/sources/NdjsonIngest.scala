@@ -355,7 +355,7 @@ object NdjsonIngest {
         case (l, _) if hits.contains(l) => l
         case (l, lines) if blooms.find(_._1 == l).exists(_._2.isEmpty) &&
             zoneKeep(lines.getOrElse(Seq.empty),
-              Seq((pk, bmin, bmax)), Nil, Nil, Nil) => l
+              Zone(ranges = Seq((pk, bmin, bmax)))) => l
       }
       return readChainSubset(spark, tableDir, layers, kept,
         pinSchema = Some(batch.schema))
@@ -369,52 +369,8 @@ object NdjsonIngest {
     // layers — zero parquet footers — where schema inference would
     // throw; with an explicit schema they simply read as zero rows
     readChainRanges(spark, tableDir, layers,
-      Seq((pk, row.getDouble(0), row.getDouble(1))),
+      Zone(ranges = Seq((pk, row.getDouble(0), row.getDouble(1)))),
       pinSchema = Some(batch.schema))
-  }
-
-  /** [[appendDelta]] with INGEST-TIME CONTENT DEDUP: batch rows whose
-    * `fpCol` (a content fingerprint, e.g. TextFunctions.fingerprint)
-    * already exists in the committed table are dropped BEFORE the commit —
-    * re-crawled duplicates never enter the table, so no downstream dedup
-    * pass has to claw them back out. Cost: the batch's fingerprint set is
-    * a broadcast; ONE linear semi-join pass over the table finds the
-    * already-present fingerprints (bounded by the batch size), and the
-    * batch anti-filters against that set — the table is never shuffled.
-    * Returns (commit, keptRows); a fully-duplicate batch commits nothing
-    * and returns (-1, 0). Batch-internal fingerprint duplicates keep the
-    * lowest pk (deterministic).
-    */
-  def appendDeltaDedup(df: DataFrame, tableDir: String, pk: String,
-      fpCol: String, tag: Option[String] = None): (Long, Long) = {
-    val spark = df.sparkSession
-    // a NULL fingerprint means "no fingerprint", NOT "equal to every
-    // other null": the window groups nulls into ONE partition, so
-    // without the isNull escape two distinct null-fp rows would
-    // silently collapse to the lowest pk — ingest data loss. The
-    // cross-table half below already treats nulls as matching nothing
-    // (equality joins never match null keys); keep both halves
-    // consistent.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(fpCol).orderBy(col(pk))
-    val inBatch = df.withColumn("__rk", row_number().over(w))
-      .filter(col(fpCol).isNull || col("__rk") === 1).drop("__rk")
-    withTableLock(tableDir) {
-    val layers = latestLayers(tableDir)
-    val fresh =
-      if (layers.isEmpty) inBatch
-      else {
-        val existingFps = readChain(spark, tableDir, layers, None)
-          .join(broadcast(inBatch.select(col(fpCol))), Seq(fpCol), "left_semi")
-          .select(col(fpCol)).distinct()
-        inBatch.join(broadcast(existingFps), Seq(fpCol), "left_anti")
-      }
-    // restore the caller's column order (joins move fpCol first)
-    val kept = fresh.select(df.columns.map(col): _*).localCheckpoint()
-    val n = kept.count()
-    if (n == 0) (-1L, 0L)
-    else (appendDelta(kept, tableDir, pk, tag), n)
-    }
   }
 
   /** [[appendDelta]] with ADDITIVE SCHEMA EVOLUTION: the batch may carry
@@ -425,7 +381,7 @@ object NdjsonIngest {
     * [[SchemaMismatch]]. The evolved unified schema commits as a
     * `_log/<seq>.schema` sidecar atomically ordered before the pointer
     * flip; every chain reader ([[readLatest]], [[readCommit]],
-    * [[readLatestRange]], [[readChanges]], merged reads) resolves the
+    * [[readChainRanges]], [[readChanges]], merged reads) resolves the
     * schema in force at its commit, so old layers are never rewritten —
     * an add-column at 100 TB costs O(batch) + one metadata file, the
     * lakehouse add-column contract.
@@ -1089,7 +1045,7 @@ object NdjsonIngest {
     * orderBy+limit over the kept layers still plans as
     * TakeOrderedAndProject — a per-partition heap, never a full sort.
     *
-    * APPEND-ONLY chains only (like [[readChainRange]]); `tiebreak`
+    * APPEND-ONLY chains only (like [[readChainRanges]]); `tiebreak`
     * `(column, descending)` keys are appended to the sort for a
     * deterministic result (either direction — the layer bound depends
     * only on the first key).
@@ -1149,32 +1105,32 @@ object NdjsonIngest {
     * the caller re-applies the full filter + sort + limit row-wise.
     */
   def chainTopKLayers(tableDir: String, chain: Seq[String], column: String,
-      k: Int, descending: Boolean,
-      ranges: Seq[(String, Double, Double)] = Nil,
-      strEquals: Seq[(String, Seq[String])] = Nil,
-      nullCols: Seq[String] = Nil, notNullCols: Seq[String] = Nil,
-      orGroups: Seq[Seq[ZoneArm]] = Nil)
-      : Seq[String] = {
+      k: Int, descending: Boolean, zone: Zone = Zone.empty): Seq[String] = {
     require(chain.nonEmpty, "chainTopKLayers needs a non-empty layer chain")
-    val withLines = chain.map(l =>
+    val survivors = chain.map(l =>
       l -> statsLines(tableDir, l).getOrElse(Seq.empty))
-    val survivors = withLines.filter { case (_, lines) =>
-      zoneKeep(lines, ranges, strEquals, nullCols, notNullCols, orGroups) }
-    if (survivors.isEmpty) return Nil
+      .filter { case (_, lines) => zoneKeep(lines, zone) }
+    topKBound(survivors, column, k, descending, zone)
+  }
+
+  /** The top-k bound over zone `survivors`: the envelope kind the
+    * sidecars record for `column` picks the ordering (numeric columns
+    * write 3-token lines, strings `s:`-marked ones); neither present
+    * anywhere → no bound computable → every survivor is read.
+    */
+  private def topKBound(survivors: Seq[(String, Seq[Array[String]])],
+      column: String, k: Int, descending: Boolean, zone: Zone,
+      lossOf: String => Option[Long] = _ => Some(0L)): Seq[String] =
     // isNull on the sort key: every qualifying row's key is null, so the
     // envelopes order nothing — zone narrowing is the whole win
-    if (nullCols.contains(column)) return survivors.map(_._1)
-    // the sidecars say which envelope kind the column has (numeric
-    // columns write 3-token lines, strings `s:`-marked ones); neither
-    // present anywhere → no bound computable → read the survivors
-    if (survivors.exists(s => envFromLines(s._2, column).isDefined))
+    if (zone.nullCols.contains(column)) survivors.map(_._1)
+    else if (survivors.exists(s => envFromLines(s._2, column).isDefined))
       topKSelect[Double](survivors, envFromLines(_, column), column, k,
-        descending, ranges, strEquals, nullCols, notNullCols, orGroups)
+        descending, zone, lossOf)
     else if (survivors.exists(s => strEnvFromLines(s._2, column).isDefined))
       topKSelect[String](survivors, strEnvFromLines(_, column), column, k,
-        descending, ranges, strEquals, nullCols, notNullCols, orGroups)
+        descending, zone, lossOf)
     else survivors.map(_._1)
-  }
 
   /** [[chainTopKLayers]] for a MERGE-ON-READ chain: the DATA layers that
     * may still SUPPLY a row of `filter(conjuncts).orderBy(column
@@ -1204,11 +1160,7 @@ object NdjsonIngest {
     */
   def chainTopKLayersMerged(tableDir: String, chain: Seq[String],
       column: String, k: Int, descending: Boolean,
-      ranges: Seq[(String, Double, Double)] = Nil,
-      strEquals: Seq[(String, Seq[String])] = Nil,
-      nullCols: Seq[String] = Nil, notNullCols: Seq[String] = Nil,
-      orGroups: Seq[Seq[ZoneArm]] = Nil)
-      : Seq[String] = {
+      zone: Zone = Zone.empty): Seq[String] = {
     require(chain.nonEmpty,
       "chainTopKLayersMerged needs a non-empty layer chain")
     val withLines = chain.map(l =>
@@ -1218,10 +1170,9 @@ object NdjsonIngest {
     val dataLayers = withLines
       .filter { case (l, _) => layerHasData(tableDir, l) }
     val survivors = dataLayers
-      .filter { case (_, lines) =>
-        zoneKeep(lines, ranges, strEquals, nullCols, notNullCols, orGroups) }
-    if (survivors.isEmpty) return Nil
-    if (nullCols.contains(column)) return survivors.map(_._1)
+      .filter { case (_, lines) => zoneKeep(lines, zone) }
+    if (survivors.isEmpty || zone.nullCols.contains(column))
+      return survivors.map(_._1)
     // Routing heuristic — the optimizer-side "is this merged chain
     // upsert-light enough to bother bounding?" choice: when the KNOWN
     // total shadow capacity reaches half the recorded rows, the
@@ -1250,15 +1201,7 @@ object NdjsonIngest {
         l -> (if (younger.exists(_.isEmpty)) None
               else Some(younger.flatten.sum))
     }.toMap
-    if (survivors.exists(s => envFromLines(s._2, column).isDefined))
-      topKSelect[Double](survivors, envFromLines(_, column), column, k,
-        descending, ranges, strEquals, nullCols, notNullCols, orGroups,
-        losses(_))
-    else if (survivors.exists(s => strEnvFromLines(s._2, column).isDefined))
-      topKSelect[String](survivors, strEnvFromLines(_, column), column, k,
-        descending, ranges, strEquals, nullCols, notNullCols, orGroups,
-        losses(_))
-    else survivors.map(_._1)
+    topKBound(survivors, column, k, descending, zone, losses)
   }
 
   /** Per-layer SHADOW CAPACITY: an upper bound on how many OLDER rows
@@ -1293,68 +1236,36 @@ object NdjsonIngest {
     }
   }
 
-  /** `[lower, upper]` BRACKET on a merge-on-read chain's merged row
-    * count, from the sidecars + commit log alone (no parquet footer
-    * opens). The exact merged count is unknowable from per-layer
-    * metadata — recorded rows may be shadowed or tombstoned — but two
-    * bounds are provable:
-    *  - UPPER: Σ n over data layers. Every live merged row is one of
-    *    some layer's recorded rows (whole-row upsert semantics never
-    *    mutate in place), so the merged count can only be smaller.
-    *  - LOWER: upper − Σ shadow capacities ([[shadowCaps]]): each dead
-    *    recorded row is killed by its nearest-younger same-pk upsert
-    *    row or tombstone, and that mapping is injective — so the dead
-    *    count is at most the total capacity.
-    * An unknown capacity (gc'd log) collapses the lower bound to 0;
-    * a data layer without a row count makes the whole bracket None.
-    * An approxCount surface and the optimizer's own routing choices
-    * (e.g. "is this merged chain upsert-light enough to bother
-    * bounding?") both read from this. APPEND-ONLY chains bracket
-    * degenerately as `[total, total]` (all capacities zero).
-    */
-  def chainMergedCountBracket(tableDir: String,
-      chain: Seq[String]): Option[(Long, Long)] = {
-    if (chain.isEmpty) return None
-    val withLines = chain.map(l =>
-      l -> statsLines(tableDir, l).getOrElse(Seq.empty))
-    val ns = withLines
-      .filter { case (l, _) => layerHasData(tableDir, l) }
-      .map { case (_, lines) => nFromLines(lines) }
-    if (ns.exists(_.isEmpty)) return None
-    val upper = ns.flatten.sum
-    val caps = shadowCaps(tableDir, withLines)
-    val lower =
-      if (caps.exists(_.isEmpty)) 0L
-      else math.max(0L, upper - caps.flatten.sum)
-    Some((lower, upper))
-  }
-
   /** `[lo, hi]` BRACKET on a merge-on-read chain's FILTERED merged row
-    * count — [[chainMergedCountBracket]] composed with filter conjuncts,
-    * still sidecars + commit log only (zero parquet footers):
+    * count, from the sidecars + commit log alone (zero parquet footers).
+    * The exact merged count is unknowable from per-layer metadata —
+    * recorded rows may be shadowed or tombstoned — but two bounds are
+    * provable:
     *  - UPPER: Σ per-layer hi-pass, where a zone-EXCLUDED layer passes 0
     *    and a kept layer at most its tightest exact per-conjunct pass
     *    count ([[conjunctPassCounts]]; an undecidable conjunct caps at
     *    `n`). Sound: every matching merged row is one of exactly one
-    *    layer's recorded rows and passes every conjunct there —
-    *    shadowing only shrinks the true count further.
+    *    layer's recorded rows (whole-row upsert semantics never mutate
+    *    in place) and passes every conjunct there — shadowing only
+    *    shrinks the true count further.
     *  - LOWER: max(0, Σ per-layer lo-pass − total shadow capacity):
     *    a layer provably holds ≥ `n − Σ(n − pass)` qualifying rows when
     *    EVERY conjunct's pass count is exact (else 0 — can't prove any),
     *    and across the chain at most [[shadowCaps]]' total of them die
-    *    to younger upserts/tombstones (injective kill mapping; a dead
-    *    row that wasn't qualifying only makes the subtraction more
-    *    conservative). Any unknown capacity collapses the lower to 0.
-    * None when a data layer lacks a row count (the upper is then
-    * unknowable — callers fall back to one exact counting pass). The
-    * `approxCount()` surface reads this for filtered merged chains and
+    *    to younger upserts/tombstones (each dead recorded row is killed
+    *    by its nearest-younger same-pk upsert row or tombstone, an
+    *    injective mapping; a dead row that wasn't qualifying only makes
+    *    the subtraction more conservative). Any unknown capacity (gc'd
+    *    log) collapses the lower to 0.
+    * With the empty zone this brackets the whole merged count: `[Σ n −
+    * Σ capacity, Σ n]`, degenerately `[total, total]` on APPEND-ONLY
+    * chains (all capacities zero). None when a data layer lacks a row
+    * count (the upper is then unknowable — callers fall back to one
+    * exact counting pass). The `approxCount()` surface reads this and
     * sums it leaf-wise across unions.
     */
   def chainMergedMatchBracket(tableDir: String, chain: Seq[String],
-      ranges: Seq[(String, Double, Double)],
-      strEquals: Seq[(String, Seq[String])] = Nil,
-      nullCols: Seq[String] = Nil, notNullCols: Seq[String] = Nil,
-      orGroups: Seq[Seq[ZoneArm]] = Nil): Option[(Long, Long)] = {
+      zone: Zone = Zone.empty): Option[(Long, Long)] = {
     if (chain.isEmpty) return None
     val withLines = chain.map(l =>
       l -> statsLines(tableDir, l).getOrElse(Seq.empty))
@@ -1364,12 +1275,9 @@ object NdjsonIngest {
     val perLayer: Seq[Option[(Long, Long)]] = withLines
       .filter { case (l, _) => layerHasData(tableDir, l) }
       .map { case (_, lines) =>
-        if (!zoneKeep(lines, ranges, strEquals, nullCols, notNullCols,
-            orGroups))
-          Some((0L, 0L))
+        if (!zoneKeep(lines, zone)) Some((0L, 0L))
         else nFromLines(lines).map { n =>
-          val passes = conjunctPassCounts(lines, n, ranges, strEquals,
-            nullCols, notNullCols, orGroups)
+          val passes = conjunctPassCounts(lines, n, zone)
           val hi = (n +: passes.flatten).min
           val lo =
             if (passes.exists(_.isEmpty)) 0L
@@ -1388,7 +1296,7 @@ object NdjsonIngest {
 
   /** Per-GROUP `[lo, hi]` brackets on a merge-on-read chain's merged
     * grouped counts, from the sidecars + commit log alone — the grouped
-    * face of [[chainMergedCountBracket]]. Exact grouped counts on a
+    * face of [[chainMergedMatchBracket]]. Exact grouped counts on a
     * merged chain are genuinely unknowable from per-column ledgers
     * (younger layers shadow unknown groups), but per group two bounds
     * are provable when EVERY data layer carries a complete exact
@@ -1445,17 +1353,13 @@ object NdjsonIngest {
     */
   private def topKSelect[T](survivors: Seq[(String, Seq[Array[String]])],
       envOf: Seq[Array[String]] => Option[(T, T)], column: String, k: Int,
-      descending: Boolean, ranges: Seq[(String, Double, Double)],
-      strEquals: Seq[(String, Seq[String])], nullCols: Seq[String],
-      notNullCols: Seq[String],
-      orGroups: Seq[Seq[ZoneArm]] = Nil,
+      descending: Boolean, zone: Zone,
       // upper bound on the layer's rows LOST to younger layers (merge-on-
       // read shadowing + tombstones) — None = unbounded, the layer proves
       // no qualifying rows but its envelope still EXCLUDES soundly (a
       // surviving row is always one of the layer's recorded rows, so the
-      // recorded envelope covers it). Append-only chains pass the default
-      // zero.
-      lossOf: String => Option[Long] = _ => Some(0L))
+      // recorded envelope covers it). Append-only chains pass zero.
+      lossOf: String => Option[Long])
       (implicit ord: Ordering[T]): Seq[String] = {
     // upper bound on this layer's rows FAILING the conjuncts (None =
     // unbounded → the layer can't prove any qualifying rows): each
@@ -1463,14 +1367,14 @@ object NdjsonIngest {
     // conjunctPassCounts — or-groups included, where decidable) caps
     // its failures at n − pass
     def failUB(lines: Seq[Array[String]], n: Long): Option[Long] = {
-      val passes = conjunctPassCounts(lines, n, ranges, strEquals,
-        nullCols, notNullCols, orGroups)
+      val passes = conjunctPassCounts(lines, n, zone)
       if (passes.exists(_.isEmpty)) None
       else Some(passes.flatten.map(n - _).sum)
     }
     // a conjunct on the sort key itself rejects its nulls globally
-    val sortKeyNotNull = notNullCols.contains(column) ||
-      ranges.exists(_._1 == column) || strEquals.exists(_._1 == column)
+    val sortKeyNotNull = zone.notNullCols.contains(column) ||
+      zone.ranges.exists(_._1 == column) ||
+      zone.strEquals.exists(_._1 == column)
     // per layer (sidecar already read): envelope over the NON-NULL sort
     // keys, plus LOWER bounds on qualifying non-null/null rows. Nulls
     // need their own accounting — Spark sorts them FIRST under asc and
@@ -1546,37 +1450,23 @@ object NdjsonIngest {
     }
   }
 
-  /** The latest table restricted to layers whose `[min, max]` envelope
-    * of `column` INTERSECTS `[lo, hi]` — layers without stats (or
-    * without the column) are conservatively included, so the result is
-    * always a superset of the matching rows and callers still apply the
-    * precise filter. At scale this skips whole layers (their parquet
-    * footers are never even opened) when the chain is range-clustered,
-    * e.g. time-ordered appends queried for a recent window.
+  /** The chain restricted to the layers that may hold a row matching
+    * `zone` ([[zoneKeep]]: every range/equality envelope intersects,
+    * null ledgers agree, some arm of every or-group passes) — layers
+    * without stats (or without the column) are conservatively included,
+    * so the result is always a superset of the matching rows and
+    * callers still apply the precise filter. At scale this skips whole
+    * layers (their parquet footers are never even opened) when the
+    * chain is range-clustered, e.g. time-ordered appends queried for a
+    * recent window.
     *
-    * APPEND-ONLY chains only (like [[readLatest]]): a chain holding
-    * upsert or tombstone layers needs the merge-on-read readers; gate on
-    * [[latestChainMergeFree]] first.
-    */
-  def readLatestRange(spark: SparkSession, tableDir: String,
-      column: String, lo: Double, hi: Double): DataFrame =
-    readChainRange(spark, tableDir, latestLayers(tableDir), column, lo, hi)
-
-  /** [[readLatestRange]] over an EXPLICIT chain — callers that already
-    * hold a resolved chain (e.g. the planner's zone-map routing, which
-    * derives it from the registered frame's own input files) prune
-    * against exactly that snapshot, so a commit racing the read can
-    * neither skew the result vs the unrouted frame nor slip an
-    * upsert/tombstone layer past a merge-free check done on the same
-    * chain.
-    */
-  def readChainRange(spark: SparkSession, tableDir: String,
-      chain: Seq[String], column: String, lo: Double, hi: Double): DataFrame =
-    readChainRanges(spark, tableDir, chain, Seq((column, lo, hi)))
-
-  /** [[readChainRange]] over SEVERAL envelopes at once: a layer survives
-    * only if it intersects EVERY asked range (conjunct semantics — each
-    * range further narrows the chain).
+    * Callers pass the chain they already resolved (e.g. the planner's
+    * zone-map routing derives it from the registered frame's own input
+    * files), so a commit racing the read can neither skew the result vs
+    * the unrouted frame nor slip an upsert/tombstone layer past a
+    * merge-free check done on the same chain. APPEND-ONLY chains only:
+    * a chain holding upsert or tombstone layers needs
+    * [[readChainRangesMerged]]; gate on [[chainMergeFree]] first.
     *
     * `pinSchema` pins the OUTPUT schema along with the chain: without
     * it the read re-resolves the newest `_log/<seq>.schema` sidecar at
@@ -1586,30 +1476,16 @@ object NdjsonIngest {
     * routed and unrouted paths stay column-identical under any race.
     */
   def readChainRanges(spark: SparkSession, tableDir: String,
-      chain: Seq[String], ranges: Seq[(String, Double, Double)],
-      strEquals: Seq[(String, Seq[String])] = Nil,
-      pinSchema: Option[org.apache.spark.sql.types.StructType] = None,
-      nullCols: Seq[String] = Nil, notNullCols: Seq[String] = Nil,
-      orGroups: Seq[Seq[ZoneArm]] = Nil)
-      : DataFrame = {
-    def read(layers: Seq[String]): DataFrame = pinSchema match {
-      case Some(st) =>
-        spark.read.schema(st).parquet(layers.map(l => s"$tableDir/$l"): _*)
-      case None => readChain(spark, tableDir, layers, None)
-    }
-    val kept = chain.filter { l =>
-      // ONE sidecar read per layer shared by every conjunct below (a
-      // per-lookup re-read multiplies plan-time metadata I/O by the
-      // conjunct count on long chains); a missing sidecar → empty lines
-      // → every lookup misses → the layer is conservatively kept
-      zoneKeep(statsLines(tableDir, l).getOrElse(Seq.empty),
-        ranges, strEquals, nullCols, notNullCols, orGroups)
-    }
-    // an empty pruned chain still needs the table schema: read the given
-    // chain's schema with an always-false filter
-    if (kept.isEmpty) read(chain).filter(lit(false))
-    else read(kept)
-  }
+      chain: Seq[String], zone: Zone,
+      pinSchema: Option[org.apache.spark.sql.types.StructType] = None)
+      : DataFrame =
+    // ONE sidecar read per layer shared by every conjunct (a per-lookup
+    // re-read multiplies plan-time metadata I/O by the conjunct count on
+    // long chains); a missing sidecar → empty lines → every lookup
+    // misses → the layer is conservatively kept
+    readChainSubset(spark, tableDir, chain, chain.filter(l =>
+      zoneKeep(statsLines(tableDir, l).getOrElse(Seq.empty), zone)),
+      pinSchema)
 
   /** EXACT count of rows matching the conjuncts, from the `_stats`
     * sidecars alone — no parquet footer opens (the reference's
@@ -1629,22 +1505,13 @@ object NdjsonIngest {
     * layer sums) — gate on [[chainMergeFree]] first.
     */
   def chainMatchCount(tableDir: String, chain: Seq[String],
-      ranges: Seq[(String, Double, Double)],
-      strEquals: Seq[(String, Seq[String])] = Nil,
-      nullCols: Seq[String] = Nil, notNullCols: Seq[String] = Nil,
-      orGroups: Seq[Seq[ZoneArm]] = Nil)
-      : Option[Long] = {
-    val nConjuncts = ranges.size + strEquals.size + nullCols.size +
-      notNullCols.size + orGroups.size
-    if (nConjuncts == 0) return chainRowCount(tableDir, chain)
+      zone: Zone = Zone.empty): Option[Long] = {
+    if (zone.isEmpty) return chainRowCount(tableDir, chain)
     val perLayer = chain.map { l =>
       val lines = statsLines(tableDir, l).getOrElse(Seq.empty)
-      if (!zoneKeep(lines, ranges, strEquals, nullCols, notNullCols,
-          orGroups))
-        Some(0L)
+      if (!zoneKeep(lines, zone)) Some(0L)
       else nFromLines(lines).flatMap { n =>
-        val passes = conjunctPassCounts(lines, n, ranges, strEquals,
-          nullCols, notNullCols, orGroups)
+        val passes = conjunctPassCounts(lines, n, zone)
         if (passes.exists(_.isEmpty)) None
         else {
           val loose = passes.flatten.filter(_ < n)
@@ -1677,82 +1544,54 @@ object NdjsonIngest {
     * gate on [[chainMergeFree]] first.
     */
   def chainGroupCount(tableDir: String, chain: Seq[String],
-      groupCol: String,
-      ranges: Seq[(String, Double, Double)] = Nil,
-      strEquals: Seq[(String, Seq[String])] = Nil,
-      nullCols: Seq[String] = Nil, notNullCols: Seq[String] = Nil,
-      // disjunctive conjuncts: zone-narrow per layer; a group whose
-      // arms are all COMPLETE and constrain ONLY the group column
-      // applies ENTRY-WISE to the histogram tokens (the disjunction is
-      // then a function of the group value — exactly as sound as the
-      // plain group-column range test); every OTHER group must provably
-      // pass ALL of a layer's rows (orGroupPassCount == n), since its
-      // per-group split is unknowable from per-column ledgers
-      orGroups: Seq[Seq[ZoneArm]] = Nil)
+      groupCol: String, zone: Zone = Zone.empty)
       : Option[Seq[(Option[String], Long)]] = {
-    val gRanges = ranges.filter(_._1 == groupCol)
-    val gStrEqs = strEquals.filter(_._1 == groupCol)
-    val gIsNull = nullCols.contains(groupCol)
-    val gNotNull = notNullCols.contains(groupCol)
-    val oRanges = ranges.filterNot(_._1 == groupCol)
-    val oStrEqs = strEquals.filterNot(_._1 == groupCol)
-    val oNull = nullCols.filterNot(_ == groupCol)
-    val oNotNull = notNullCols.filterNot(_ == groupCol)
-    val (gOgs, oOgs) = orGroups.partition(
-      orGroupSingleColumn(_).contains(groupCol))
-    def entryPasses(tokenValue: String): Option[Boolean] = {
-      // isNull(g) rejects non-nulls; a failed set test decides false
-      // even when a sibling range token is undecodable
-      if (gIsNull ||
-          !gStrEqs.forall { case (_, vs) => vs.contains(tokenValue) })
-        return Some(false)
-      // ranges only form on numeric/date columns, so a group-col range
-      // implies a date group: tokens are epoch-day doubles — an
-      // UNDECODABLE token (stale alias sidecar) is unknowable, and the
-      // caller declines the layer to the scan (histEntriesWhere)
-      val rangesOk: Option[Boolean] =
-        if (gRanges.isEmpty) Some(true)
-        else tokenValue.toDoubleOption.map(v =>
-          gRanges.forall { case (_, lo, hi) => lo <= v && v <= hi })
-      val all = rangesOk +: gOgs.map(anyArmPassesToken(_, tokenValue))
-      if (all.contains(Some(false))) Some(false)
-      else if (all.forall(_.contains(true))) Some(true)
-      else None
+    // disjunctive conjuncts zone-narrow per layer; a group whose arms
+    // are all COMPLETE and constrain ONLY the group column applies
+    // ENTRY-WISE to the histogram tokens (the disjunction is then a
+    // function of the group value — exactly as sound as the plain
+    // group-column range test); every OTHER group must provably pass ALL
+    // of a layer's rows, since its per-group split is unknowable from
+    // per-column ledgers
+    val p = groupPred(groupCol, zone)
+    groupCountLayers(tableDir, chain, zone, Set(groupCol)) { (lines, n) =>
+      // isNull(g) keeps only the null group: no histogram needed
+      val kept =
+        if (p.isNull) Some(Nil)
+        else histExactFromLines(lines, groupCol)
+          .flatMap(histEntriesWhere(_, p.entryPasses))
+      kept.flatMap { k =>
+        if (!p.nullPasses) Some(k)
+        else nnFromLines(lines, groupCol).map(nn =>
+          if (n - nn > 0) k :+ ((None: Option[String]), n - nn) else k)
+      }
     }
-    val perLayer: Seq[Option[Seq[(Option[String], Long)]]] = chain.map { l =>
+  }
+
+  /** The per-layer skeleton of the sidecar grouped counts: a zone-
+    * excluded layer contributes nothing; a kept layer is decidable only
+    * when every conjunct NOT on a group column provably passes ALL its
+    * rows (or-groups not entirely on one group column included), and
+    * then `layer(lines, n)` gives its per-group counts. Any undecidable
+    * layer → None; otherwise the layers' counts sum group-wise.
+    */
+  private def groupCountLayers[K](tableDir: String, chain: Seq[String],
+      zone: Zone, groupCols: Set[String])(
+      layer: (Seq[Array[String]], Long) => Option[Seq[(K, Long)]])
+      : Option[Seq[(K, Long)]] = {
+    val others = Zone(
+      zone.ranges.filterNot(r => groupCols(r._1)),
+      zone.strEquals.filterNot(s => groupCols(s._1)),
+      zone.nullCols.filterNot(groupCols),
+      zone.notNullCols.filterNot(groupCols),
+      zone.orGroups.filterNot(orGroupSingleColumn(_).exists(groupCols)))
+    val perLayer = chain.map { l =>
       val lines = statsLines(tableDir, l).getOrElse(Seq.empty)
-      if (!zoneKeep(lines, ranges, strEquals, nullCols, notNullCols,
-          orGroups))
-        Some(Nil)
+      if (!zoneKeep(lines, zone)) Some(Nil)
       else nFromLines(lines).flatMap { n =>
-        // every non-group conjunct must pass ALL rows of this layer
-        // (or-groups not entirely on the group column included — their
-        // per-group split is unknowable unless they pass everything)
-        val othersPassAll: Boolean =
-          conjunctPassCounts(lines, n, oRanges, oStrEqs, oNull, oNotNull,
-            oOgs).forall(_.exists(_ == n))
-        if (!othersPassAll) None
-        else {
-          val nnG = nnFromLines(lines, groupCol)
-          // the null group survives only when NO conjunct rejects null
-          // rows: ranges/equalities/isNotNull do, and a group-column
-          // or-group keeps it only via a null-accepting arm
-          val nullGroupWanted = !gNotNull && gRanges.isEmpty &&
-            gStrEqs.isEmpty && gOgs.forall(_.exists(armPassesNull))
-          if (gIsNull) {
-            // only the null group survives; no histogram needed
-            if (gRanges.nonEmpty || gStrEqs.nonEmpty || gNotNull ||
-                !gOgs.forall(_.exists(armPassesNull))) Some(Nil)
-            else nnG.map(nn => if (n - nn > 0) Seq((None, n - nn)) else Nil)
-          } else histExactFromLines(lines, groupCol).flatMap { hist =>
-            histEntriesWhere(hist, entryPasses).flatMap { kept =>
-              if (!nullGroupWanted) Some(kept)
-              else nnG.map(nn =>
-                if (n - nn > 0) kept :+ ((None: Option[String]), n - nn)
-                else kept)
-            }
-          }
-        }
+        if (conjunctPassCounts(lines, n, others).forall(_.exists(_ == n)))
+          layer(lines, n)
+        else None
       }
     }
     if (perLayer.exists(_.isEmpty)) None
@@ -1773,10 +1612,11 @@ object NdjsonIngest {
       // only — orGroupSingleColumn): the disjunction is then a function
       // of the group value and applies entry-wise, exactly like the
       // plain range/set conjuncts above
-      ogs: Seq[Seq[ZoneArm]] = Nil) {
+      ogs: Seq[Seq[Zone]]) {
     // None = the token is undecodable under a range test (stale alias
     // sidecar) — callers decline the layer, never throw (armPassesToken
-    // doc has the full rule)
+    // doc has the full rule). A failed set test decides false even when
+    // a sibling range token is undecodable.
     def entryPasses(tok: String): Option[Boolean] =
       if (isNull || !strEqs.forall(_.contains(tok))) Some(false)
       else {
@@ -1789,18 +1629,18 @@ object NdjsonIngest {
         else if (all.forall(_.contains(true))) Some(true)
         else None
       }
+    // the null group survives only when NO conjunct rejects null rows:
+    // ranges/equalities/isNotNull do, and a group-column or-group keeps
+    // it only via a null-accepting arm
     def nullPasses: Boolean = !notNull && ranges.isEmpty &&
       strEqs.isEmpty && ogs.forall(_.exists(armPassesNull))
   }
-  private def groupPred(c: String, ranges: Seq[(String, Double, Double)],
-      strEquals: Seq[(String, Seq[String])], nullCols: Seq[String],
-      notNullCols: Seq[String],
-      orGroups: Seq[Seq[ZoneArm]] = Nil): GroupPred =
+  private def groupPred(c: String, zone: Zone): GroupPred =
     GroupPred(
-      ranges.collect { case (`c`, lo, hi) => (lo, hi) },
-      strEquals.collect { case (`c`, vs) => vs },
-      nullCols.contains(c), notNullCols.contains(c),
-      orGroups.filter(orGroupSingleColumn(_).contains(c)))
+      zone.ranges.collect { case (`c`, lo, hi) => (lo, hi) },
+      zone.strEquals.collect { case (`c`, vs) => vs },
+      zone.nullCols.contains(c), zone.notNullCols.contains(c),
+      zone.orGroups.filter(orGroupSingleColumn(_).contains(c)))
 
   /** EXACT TWO-column grouped counts from the sidecars alone: a layer is
     * decidable when ONE group column has a complete value histogram and
@@ -1817,25 +1657,10 @@ object NdjsonIngest {
     * gate on [[chainMergeFree]].
     */
   def chainGroupCountTwo(tableDir: String, chain: Seq[String],
-      colA: String, colB: String,
-      ranges: Seq[(String, Double, Double)] = Nil,
-      strEquals: Seq[(String, Seq[String])] = Nil,
-      nullCols: Seq[String] = Nil, notNullCols: Seq[String] = Nil,
-      orGroups: Seq[Seq[ZoneArm]] = Nil)
+      colA: String, colB: String, zone: Zone = Zone.empty)
       : Option[Seq[((Option[String], Option[String]), Long)]] = {
-    val pA = groupPred(colA, ranges, strEquals, nullCols, notNullCols,
-      orGroups)
-    val pB = groupPred(colB, ranges, strEquals, nullCols, notNullCols,
-      orGroups)
-    val oRanges = ranges.filterNot(r => r._1 == colA || r._1 == colB)
-    val oStrEqs = strEquals.filterNot(s => s._1 == colA || s._1 == colB)
-    val oNull = nullCols.filterNot(c => c == colA || c == colB)
-    val oNotNull = notNullCols.filterNot(c => c == colA || c == colB)
-    // or-groups entirely on ONE group column ride pA/pB entry-wise;
-    // the rest must pass whole layers (their per-group split is
-    // unknowable from per-column ledgers)
-    val oOgs = orGroups.filterNot(g =>
-      orGroupSingleColumn(g).exists(c => c == colA || c == colB))
+    val pA = groupPred(colA, zone)
+    val pB = groupPred(colB, zone)
     // the column's single value across ALL n rows: Some(Some(tok)) when
     // constant non-null, Some(None) when all-null, None when unprovable.
     // Tokens use the histogram encoding (dates as epoch-day doubles), so
@@ -1859,57 +1684,40 @@ object NdjsonIngest {
           }
         case _ => None
       }
-    val perLayer: Seq[Option[Seq[((Option[String], Option[String]), Long)]]] =
-      chain.map { l =>
-        val lines = statsLines(tableDir, l).getOrElse(Seq.empty)
-        if (!zoneKeep(lines, ranges, strEquals, nullCols, notNullCols,
-            orGroups))
-          Some(Nil)
-        else nFromLines(lines).flatMap { n =>
-          val othersPassAll =
-            conjunctPassCounts(lines, n, oRanges, oStrEqs, oNull, oNotNull,
-              oOgs).forall(_.exists(_ == n))
-          if (!othersPassAll) None
+    groupCountLayers(tableDir, chain, zone, Set(colA, colB)) { (lines, n) =>
+      // (histogram column h, constant column c); emit pairs in (A, B)
+      // order via `swap`
+      def oneWay(h: String, ph: GroupPred, c: String, pc: GroupPred,
+          swap: Boolean)
+          : Option[Seq[((Option[String], Option[String]), Long)]] =
+        for {
+          hist <- histExactFromLines(lines, h)
+          ct <- constToken(lines, n, c)
+          // an undecidable constant-column test (undecodable token under
+          // a range) declines the layer — never throw
+          cPasses <- ct match {
+            case Some(t) => pc.entryPasses(t)
+            case None => Some(pc.nullPasses)
+          }
+          kept <-
+            if (!cPasses) Some(Nil)
+            else histEntriesWhere(hist, ph.entryPasses)
+        } yield {
+          if (!cPasses) Nil
           else {
-            // (histogram column h, constant column c); emit pairs in
-            // (A, B) order via `swap`
-            def oneWay(h: String, ph: GroupPred, c: String, pc: GroupPred,
-                swap: Boolean)
-                : Option[Seq[((Option[String], Option[String]), Long)]] =
-              for {
-                hist <- histExactFromLines(lines, h)
-                ct <- constToken(lines, n, c)
-                // an undecidable constant-column test (undecodable
-                // token under a range) declines the layer — never throw
-                cPasses <- ct match {
-                  case Some(t) => pc.entryPasses(t)
-                  case None => Some(pc.nullPasses)
-                }
-                kept <-
-                  if (!cPasses) Some(Nil)
-                  else histEntriesWhere(hist, ph.entryPasses)
-              } yield {
-                if (!cPasses) Nil
-                else {
-                  val nnH = nnFromLines(lines, h).getOrElse(
-                    hist.map(_._2).sum) // ledger implied by the histogram
-                  val withNull =
-                    if (ph.nullPasses && n - nnH > 0)
-                      kept :+ ((None: Option[String]), n - nnH)
-                    else kept
-                  withNull.map { case (hv, cnt) =>
-                    (if (swap) (ct, hv) else (hv, ct)) -> cnt }
-                }
-              }
-            oneWay(colA, pA, colB, pB, swap = false)
-              .orElse(oneWay(colB, pB, colA, pA, swap = true))
+            val nnH = nnFromLines(lines, h).getOrElse(
+              hist.map(_._2).sum) // ledger implied by the histogram
+            val withNull =
+              if (ph.nullPasses && n - nnH > 0)
+                kept :+ ((None: Option[String]), n - nnH)
+              else kept
+            withNull.map { case (hv, cnt) =>
+              (if (swap) (ct, hv) else (hv, ct)) -> cnt }
           }
         }
-      }
-    if (perLayer.exists(_.isEmpty)) None
-    else Some(perLayer.flatten.flatten
-      .groupBy(_._1).toSeq
-      .map { case (g, xs) => (g, xs.map(_._2).sum) })
+      oneWay(colA, pA, colB, pB, swap = false)
+        .orElse(oneWay(colB, pB, colA, pA, swap = true))
+    }
   }
 
   /** Zone-pruned range read over a MERGE-ON-READ chain. A layer whose
@@ -1933,12 +1741,8 @@ object NdjsonIngest {
     * cases the unpruned plan emits nothing for that key.
     */
   def readChainRangesMerged(spark: SparkSession, tableDir: String,
-      chain: Seq[String], pk: String,
-      ranges: Seq[(String, Double, Double)],
-      strEquals: Seq[(String, Seq[String])] = Nil,
-      nullCols: Seq[String] = Nil, notNullCols: Seq[String] = Nil,
+      chain: Seq[String], pk: String, zone: Zone,
       pinSchema: Option[StructType] = None,
-      orGroups: Seq[Seq[ZoneArm]] = Nil,
       // extra candidacy restriction (e.g. [[chainTopKLayersMerged]]):
       // layers outside the set degrade to pk-only shadow scans exactly
       // like zone-excluded ones — they can't supply an emitted row but
@@ -1958,8 +1762,7 @@ object NdjsonIngest {
     val dataParts = dataLayers.map { case (l, i) =>
       val full = spark.read.schema(schema).parquet(s"$tableDir/$l")
       val cand = keepLayers.forall(_.contains(l)) &&
-        zoneKeep(statsLines(tableDir, l).getOrElse(Seq.empty),
-          ranges, strEquals, nullCols, notNullCols, orGroups)
+        zoneKeep(statsLines(tableDir, l).getOrElse(Seq.empty), zone)
       // non-candidate: select(pk) BEFORE the null-pad so the parquet scan
       // decodes exactly one column (ReadSchema = pk)
       val part = if (cand) full else nullPad(full.select(col(pk)))
@@ -1993,11 +1796,8 @@ object NdjsonIngest {
     * the grouped count's whole-layer test.
     */
   private def conjunctPassCounts(lines: Seq[Array[String]], n: Long,
-      ranges: Seq[(String, Double, Double)],
-      strEquals: Seq[(String, Seq[String])],
-      nullCols: Seq[String], notNullCols: Seq[String],
-      orGroups: Seq[Seq[ZoneArm]] = Nil): Seq[Option[Long]] =
-    ranges.map { case (c, lo, hi) =>
+      zone: Zone): Seq[Option[Long]] =
+    zone.ranges.map { case (c, lo, hi) =>
       (envFromLines(lines, c) match {
         // containment is only an EXACT proof inside the double-exactness
         // window: a rounded long envelope or literal can make
@@ -2010,7 +1810,7 @@ object NdjsonIngest {
         case _ => None
       }).orElse(histRangeCount(lines, c, lo, hi))
     } ++
-    strEquals.map { case (c, vs) =>
+    zone.strEquals.map { case (c, vs) =>
       (strEnvFromLines(lines, c) match {
         case Some((mn, mx)) if mn == mx && vs.contains(mn) =>
           nnFromLines(lines, c)
@@ -2018,9 +1818,9 @@ object NdjsonIngest {
       }).orElse(histExactFromLines(lines, c).map(
         _.collect { case (t, cnt) if vs.contains(t) => cnt }.sum))
     } ++
-    nullCols.map(c => nnFromLines(lines, c).map(nn => n - nn)) ++
-    notNullCols.map(c => nnFromLines(lines, c)) ++
-    orGroups.map(orGroupPassCount(lines, n, _))
+    zone.nullCols.map(c => nnFromLines(lines, c).map(nn => n - nn)) ++
+    zone.notNullCols.map(c => nnFromLines(lines, c)) ++
+    zone.orGroups.map(orGroupPassCount(lines, n, _))
 
   /** EXACT pass count of one range conjunct from a COMPLETE histogram:
     * Σ counts of tokens inside the window — exact for ANY overlap shape
@@ -2070,12 +1870,10 @@ object NdjsonIngest {
     * optimization.
     */
   private def orGroupPassCount(lines: Seq[Array[String]], n: Long,
-      arms: Seq[ZoneArm]): Option[Long] = {
-    def armPassesAll(a: ZoneArm): Boolean = a.complete &&
-      conjunctPassCounts(lines, n, a.ranges, a.strEquals, a.nullCols,
-        a.notNullCols).forall(_.exists(_ == n))
-    def armExcluded(a: ZoneArm): Boolean =
-      !zoneKeep(lines, a.ranges, a.strEquals, a.nullCols, a.notNullCols)
+      arms: Seq[Zone]): Option[Long] = {
+    def armPassesAll(a: Zone): Boolean = a.complete &&
+      conjunctPassCounts(lines, n, a).forall(_.exists(_ == n))
+    def armExcluded(a: Zone): Boolean = !zoneKeep(lines, a)
     if (arms.exists(armPassesAll)) Some(n)
     else if (arms.forall(armExcluded)) Some(0L)
     else orGroupHistCount(lines, n, arms).orElse {
@@ -2104,7 +1902,7 @@ object NdjsonIngest {
     * histogram tokens (the whole predicate is then a function of the
     * one column, so per-value counts decide it exactly).
     */
-  private def orGroupSingleColumn(arms: Seq[ZoneArm]): Option[String] = {
+  private def orGroupSingleColumn(arms: Seq[Zone]): Option[String] = {
     val perArm = arms.map { a =>
       if (!a.complete) Set.empty[String]
       else (a.ranges.map(_._1) ++ a.strEquals.map(_._1) ++
@@ -2129,7 +1927,7 @@ object NdjsonIngest {
     * count the token as failing, which would UNDERCOUNT — a wrong
     * answer, not a missed optimization).
     */
-  private def armPassesToken(a: ZoneArm, tok: String): Option[Boolean] =
+  private def armPassesToken(a: Zone, tok: String): Option[Boolean] =
     if (a.nullCols.nonEmpty ||
         !a.strEquals.forall { case (_, vs) => vs.contains(tok) })
       Some(false)
@@ -2141,7 +1939,7 @@ object NdjsonIngest {
     * decided-true arm decides the whole OR true even when a sibling arm
     * is undecidable; all-decided-false is false; otherwise unknowable.
     */
-  private def anyArmPassesToken(arms: Seq[ZoneArm],
+  private def anyArmPassesToken(arms: Seq[Zone],
       tok: String): Option[Boolean] = {
     val rs = arms.map(armPassesToken(_, tok))
     if (rs.contains(Some(true))) Some(true)
@@ -2169,7 +1967,7 @@ object NdjsonIngest {
     * accept null: ranges, equalities and isNotNull reject it; a pure
     * isNull arm accepts.
     */
-  private def armPassesNull(a: ZoneArm): Boolean =
+  private def armPassesNull(a: Zone): Boolean =
     a.ranges.isEmpty && a.strEquals.isEmpty && a.notNullCols.isEmpty
 
   /** [[orGroupPassCount]]'s histogram shape: all arms complete on ONE
@@ -2179,7 +1977,7 @@ object NdjsonIngest {
     * overlapping, or straddling a layer's envelope.
     */
   private def orGroupHistCount(lines: Seq[Array[String]], n: Long,
-      arms: Seq[ZoneArm]): Option[Long] =
+      arms: Seq[Zone]): Option[Long] =
     for {
       c <- orGroupSingleColumn(arms)
       hist <- histExactFromLines(lines, c)
@@ -2194,26 +1992,41 @@ object NdjsonIngest {
       tokPass + nullPass
     }
 
-  /** One arm of a DISJUNCTIVE zone conjunct (`filter(a || b)`): the
-    * stats-decidable conjuncts of that arm. A layer passes an or-group
-    * iff SOME arm's tests keep it — the union of the arms' envelopes,
-    * exactly how the reference's Or operator unions its operands'
-    * bitmaps (filter/operators/or.cpp). An arm testing only a SUBSET of
-    * its conjuncts (the decidable ones) stays sound for NARROWING: the
-    * test is already may-contain, and fewer conjuncts only keeps more
-    * layers. `complete` marks an arm whose recorded tests are the arm's
-    * ENTIRE predicate (no opaque conjunct was dropped) — only complete
-    * arms may feed the EXACT pass counts ([[conjunctPassCounts]]'s
-    * or-group rules), where an unseen conjunct would overcount.
+  /** One stats-decidable conjunct set — the zone-map predicate every
+    * layer reader, count and top-k bound of this store takes (the
+    * reference's filter tree after its pushdown pass folded every filter
+    * into the scan, optimizer/filter_pushdown_pass.h:22-49): numeric /
+    * date `ranges` `(column, lo, hi)` (±Infinity = unbounded), string
+    * equalities / in-sets `(column, values)`, `isNull` columns,
+    * `isNotNull` columns, and DISJUNCTIVE conjuncts (`filter(a || b)`)
+    * as `orGroups` of arms.
+    *
+    * An ARM is a Zone of its own without or-groups: the stats-decidable
+    * conjuncts of that arm. A layer passes an or-group iff SOME arm's
+    * tests keep it — the union of the arms' envelopes, exactly how the
+    * reference's Or operator unions its operands' bitmaps
+    * (filter/operators/or.cpp). An arm testing only a SUBSET of its
+    * conjuncts (the decidable ones) stays sound for NARROWING: the test
+    * is already may-contain, and fewer conjuncts only keeps more layers.
+    * `complete` marks an arm whose recorded tests are the arm's ENTIRE
+    * predicate (no opaque conjunct was dropped) — only complete arms may
+    * feed the EXACT pass counts ([[conjunctPassCounts]]'s or-group
+    * rules), where an unseen conjunct would overcount.
     */
-  final case class ZoneArm(ranges: Seq[(String, Double, Double)],
-      strEquals: Seq[(String, Seq[String])],
-      nullCols: Seq[String], notNullCols: Seq[String],
+  final case class Zone(
+      ranges: Seq[(String, Double, Double)] = Nil,
+      strEquals: Seq[(String, Seq[String])] = Nil,
+      nullCols: Seq[String] = Nil, notNullCols: Seq[String] = Nil,
+      orGroups: Seq[Seq[Zone]] = Nil,
       complete: Boolean = false) {
-    def nonEmpty: Boolean =
-      ranges.nonEmpty || strEquals.nonEmpty ||
-        nullCols.nonEmpty || notNullCols.nonEmpty
+    def isEmpty: Boolean = ranges.isEmpty && strEquals.isEmpty &&
+      nullCols.isEmpty && notNullCols.isEmpty && orGroups.isEmpty
+    /** Both conjunct sets (conjunction). */
+    def ++(o: Zone): Zone = Zone(ranges ++ o.ranges,
+      strEquals ++ o.strEquals, nullCols ++ o.nullCols,
+      notNullCols ++ o.notNullCols, orGroups ++ o.orGroups)
   }
+  object Zone { val empty: Zone = Zone() }
 
   /** Can a layer with these sidecar lines hold a row satisfying EVERY
     * conjunct? (The zone-map intersection test shared by the range
@@ -2221,27 +2034,13 @@ object NdjsonIngest {
     * the layer; an all-null column ledger (`c: 0`) proves a range or
     * equality conjunct over it unsatisfiable (SQL comparisons reject
     * null), which the envelope alone can't (no envelope is written for
-    * an all-null column). `orGroups` adds disjunctive conjuncts: the
-    * layer must additionally pass SOME arm of every group (pure
-    * narrowing only — disjunctions never feed count/top-k bounds, whose
-    * per-conjunct pass counts don't compose through OR).
+    * an all-null column). Or-groups add disjunctive conjuncts: the
+    * layer must additionally pass SOME arm of every group.
     */
-  private def zoneKeep(lines: Seq[Array[String]],
-      ranges: Seq[(String, Double, Double)],
-      strEquals: Seq[(String, Seq[String])],
-      nullCols: Seq[String], notNullCols: Seq[String],
-      orGroups: Seq[Seq[ZoneArm]]): Boolean =
-    zoneKeep(lines, ranges, strEquals, nullCols, notNullCols) &&
-      orGroups.forall(_.exists(a =>
-        zoneKeep(lines, a.ranges, a.strEquals, a.nullCols, a.notNullCols)))
-
-  private def zoneKeep(lines: Seq[Array[String]],
-      ranges: Seq[(String, Double, Double)],
-      strEquals: Seq[(String, Seq[String])],
-      nullCols: Seq[String], notNullCols: Seq[String]): Boolean = {
+  private def zoneKeep(lines: Seq[Array[String]], zone: Zone): Boolean = {
     def hasNonNull(column: String): Boolean =
       nnFromLines(lines, column).forall(_ > 0)
-    ranges.forall { case (column, lo, hi) =>
+    zone.ranges.forall { case (column, lo, hi) =>
       // a COMPLETE histogram decides may-contain per VALUE — the layer-
       // granularity analog of the reference's per-value bitmaps
       // (string_in_set.cpp, lineage_index.h): a layer whose sparse value
@@ -2270,7 +2069,7 @@ object NdjsonIngest {
           // still prunes to the layers that actually hold the key
           envOk && (lo != hi || bloomKeepsDouble(lines, column, lo))
       }
-    } && strEquals.forall { case (column, values) =>
+    } && zone.strEquals.forall { case (column, values) =>
       histExactFromLines(lines, column) match {
         // per-value membership: kept iff SOME sought value is actually
         // present (string histogram tokens are verbatim values)
@@ -2289,20 +2088,20 @@ object NdjsonIngest {
           // bar: per-value StringInSet bitmaps, string_in_set.cpp:64)
           envOk && bloomKeepsString(lines, column, values)
       }
-    } && nullCols.forall { column =>
+    } && zone.nullCols.forall { column =>
       // isNull(column) keeps only rows where column IS null — a layer
       // whose ledger records zero nulls can't contribute
       (nFromLines(lines), nnFromLines(lines, column)) match {
         case (Some(n), Some(nn)) => n > nn
         case _ => true
       }
-    } && notNullCols.forall { column =>
+    } && zone.notNullCols.forall { column =>
       // isNotNull(column): an all-null layer can't contribute
       nnFromLines(lines, column) match {
         case Some(nn) => nn > 0
         case None => true
       }
-    }
+    } && zone.orGroups.forall(_.exists(zoneKeep(lines, _)))
   }
 
   // ---- the per-table commit lock --------------------------------------
@@ -2433,34 +2232,11 @@ object NdjsonIngest {
     * Readers holding the old pointer keep reading the old layers; [[gc]]
     * reclaims them once unreferenced.
     */
-  /** `clusterBy`: re-cluster the snapshot while compacting — range-
-    * partition + sort on the column (or a derived key like a Z-order
-    * value) so per-file min/max stay tight and range scans keep pruning.
-    * Without it, compaction interleaves the chain's layers and quietly
-    * DESTROYS the clustering that `appendClusteredVersion` paid for — at
-    * 100 TB that's the difference between a pruned scan and a full one.
-    * `numRanges` sizes the output files (ignored without `clusterBy`).
-    */
   def compactVersions(spark: SparkSession, tableDir: String,
-      maxLayers: Int = 8, clusterBy: Option[String] = None,
-      numRanges: Int = 8): Boolean = withTableLock(tableDir) {
+      maxLayers: Int = 8): Boolean = withTableLock(tableDir) {
     val layers = latestLayers(tableDir)
     if (layers.length <= maxLayers) return false
-    val read = readChain(spark, tableDir, layers, None)
-    // no explicit clusterBy → fall back to the chain's own recorded
-    // clustering breadcrumb (appendClusteredVersion), so layout-blind
-    // callers — the serve maintenance loop above all — can never
-    // destroy the clustering the ingest paid for; a dropped/renamed
-    // column makes the hint vacuous
-    val effective: Option[(String, Int)] =
-      clusterBy.map(_ -> numRanges)
-        .orElse(clusteringOf(tableDir)
-          .filter { case (c, _) => read.columns.contains(c) })
-    val full = effective match {
-      case Some((c, n)) =>
-        read.repartitionByRange(n, col(c)).sortWithinPartitions(c)
-      case None => read
-    }
+    val full = readChain(spark, tableDir, layers, None)
     val fs = new java.io.File(tableDir)
     val existing = Option(fs.list()).getOrElse(Array())
       .filter(_.startsWith("v")).map(_.drop(1).toLong)
@@ -2604,37 +2380,6 @@ object NdjsonIngest {
     * A tombstone kills any same-key row in this or earlier layers; a LATER
     * upsert of the key resurrects it. O(|keys|) write.
     */
-  /** The reference's `updateColumn(table, column, literal, filter)`
-    * (database.h:77-88, scalar_column_update.cpp) over the versioned
-    * layer chain: rewrite `column` to `value` for the merged rows
-    * matching `where`, committed as ONE upsert layer holding ONLY the
-    * matched rows — O(changed), never a table rewrite; the update is
-    * visible to merged reads immediately and old snapshots still pin the
-    * pre-update state. Returns the commit id, or -1 when nothing matched
-    * (no empty layer is committed).
-    */
-  def updateColumnDelta(spark: SparkSession, tableDir: String, pk: String,
-      column: String, value: Column, where: Column,
-      tag: Option[String] = None): Long = {
-    val merged = readLatestMerged(spark, tableDir, pk)
-    val dt = merged.schema(column).dataType // keep the committed type
-    val changed = merged.filter(where).withColumn(column, value.cast(dt))
-    if (changed.isEmpty) return -1L
-    upsertDelta(changed, tableDir, pk, tag)
-  }
-
-  /** DELETE..WHERE over the versioned layer chain: tombstone the merged
-    * rows matching `where` — one O(matched) tombstone layer, the
-    * predicate-level companion of [[updateColumnDelta]]. Returns the
-    * commit id, or -1 when nothing matched.
-    */
-  def deleteWhereDelta(spark: SparkSession, tableDir: String, pk: String,
-      where: Column, tag: Option[String] = None): Long = {
-    val keys = readLatestMerged(spark, tableDir, pk).filter(where).select(pk)
-    if (keys.isEmpty) return -1L
-    deleteDelta(keys, tableDir, pk, tag)
-  }
-
   def deleteDelta(keys: DataFrame, tableDir: String, pk: String,
       tag: Option[String] = None): Long = withTableLock(tableDir) {
     val fs = new java.io.File(tableDir)
@@ -2752,25 +2497,20 @@ object NdjsonIngest {
     (chain, kind)
   }
 
-  /** True when every layer of the CURRENT chain was introduced by a
-    * plain-union commit (snapshot/append/compact) and carries no
-    * tombstones — i.e. the layer-union readers ([[readChain]],
-    * [[readLatest]], [[readLatestRange]]) are exact for this chain.
-    * Upsert/delete commits leave superseded rows or tombstones that only
-    * the merge-on-read readers resolve, so their presence fails the
-    * check. A layer whose introducing commit was gc'd from the log also
-    * fails (conservative: callers fall back to the unpruned reader they
-    * were already using).
-    */
   private val mergeFreeCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String),
       (java.nio.file.attribute.FileTime, Long, Boolean)]()
 
-  def latestChainMergeFree(tableDir: String): Boolean =
-    chainMergeFree(tableDir, latestLayers(tableDir))
-
-  /** [[latestChainMergeFree]] over an EXPLICIT chain (see
-    * [[readChainRange]] for why callers resolve the chain once).
+  /** True when every layer of `chain` was introduced by a plain-union
+    * commit (snapshot/append/compact) and carries no tombstones — i.e.
+    * the layer-union readers ([[readChain]], [[readLatest]],
+    * [[readChainRanges]]) are exact for this chain. Upsert/delete
+    * commits leave superseded rows or tombstones that only the
+    * merge-on-read readers resolve, so their presence fails the check.
+    * A layer whose introducing commit was gc'd from the log also fails
+    * (conservative: callers fall back to the unpruned reader they were
+    * already using). Callers pass the chain they resolved once (see
+    * [[readChainRanges]]).
     */
   def chainMergeFree(tableDir: String, chain: Seq[String]): Boolean = {
     if (chain.isEmpty) return true
@@ -2887,62 +2627,6 @@ object NdjsonIngest {
         .withColumn("_change_type", lit("insert"))
         .withColumn("_commit", lit(0L)).filter(lit(false))
     else parts.reduce(_.unionByName(_))
-  }
-
-  /** Range-clustered append (reference: clustered ingestion buffering,
-    * append/table_inserter.h:28-40, performance/README.md:37-57): rows are
-    * range-partitioned and sorted on `rangeCol` before the parquet write,
-    * so row-group min/max statistics give the same chunk-skipping effect
-    * the reference gets from coverage-clustered chunks — a range filter on
-    * `rangeCol` then prunes whole files/row-groups at scan time.
-    */
-  def appendClusteredVersion(
-      df: DataFrame, tableDir: String, pk: String,
-      rangeCol: String, numRanges: Int): Long = {
-    val clustered = df
-      .repartitionByRange(numRanges, col(rangeCol))
-      .sortWithinPartitions(rangeCol)
-    val v = appendVersion(clustered, tableDir, pk)
-    // self-describing clustering breadcrumb (tmp+rename): compaction —
-    // including the serve maintenance loop, which knows nothing about
-    // the table's layout — re-clusters on the recorded column instead
-    // of silently interleaving the chain into every output file.
-    // Written AFTER the commit: a crash in between leaves a clustered
-    // chain without the hint (a later clustered append repairs it),
-    // never a hint pointing at nothing.
-    val tmp = java.nio.file.Files.createTempFile(
-      java.nio.file.Paths.get(tableDir), ".clustering", ".tmp")
-    java.nio.file.Files.writeString(tmp, s"$rangeCol $numRanges")
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(tableDir, "_clustering"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    v
-  }
-
-  /** The chain's recorded clustering `(rangeCol, numRanges)`, when a
-    * clustered append left its breadcrumb. Callers re-clustering on it
-    * must check the column still exists in the frame they compact (a
-    * rename/drop makes the hint vacuous, never an error).
-    */
-  def clusteringOf(tableDir: String): Option[(String, Int)] = {
-    val p = java.nio.file.Paths.get(tableDir, "_clustering")
-    if (!java.nio.file.Files.exists(p)) None
-    else java.nio.file.Files.readString(p).trim.split("\\s+").toSeq match {
-      case Seq(c, n) => scala.util.Try(n.toInt).toOption.map(c -> _)
-      case _ => None
-    }
-  }
-
-  /** Resolve the current version directory for reads — only valid for a
-    * single-layer chain (snapshot commits / post-compaction). Delta
-    * chains have no single directory; use [[readLatest]].
-    */
-  def latestPath(tableDir: String): String = {
-    val layers = latestLayers(tableDir)
-    require(layers.length == 1,
-      s"table at $tableDir has ${layers.length} layers; use readLatest")
-    s"$tableDir/${layers.head}"
   }
 
   /** True when a `latest` pointer exists (vs any other read failure, which

@@ -17,8 +17,7 @@ import graft.sources.NdjsonIngest
   * maintenance root:
   *  - COMPACT: a version chain longer than `maxLayers` folds into one
   *    snapshot layer — merge-free chains through
-  *    [[NdjsonIngest.compactVersions]] (re-clustering on the chain's
-  *    recorded `_clustering` breadcrumb), upsert/tombstone chains
+  *    [[NdjsonIngest.compactVersions]], upsert/tombstone chains
   *    through the pk-aware [[NdjsonIngest.compactMerged]] (the pk comes
   *    from the chain's own `_pk` breadcrumb; only a chain predating the
   *    breadcrumb is skipped, until any later commit records it);

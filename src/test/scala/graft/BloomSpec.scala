@@ -64,8 +64,8 @@ class BloomSpec extends SparkSpec {
     }
     // a hit from the middle layer: only bloom-positive layers open
     val hit = key(2 * 1500 + 77)
-    val routed = NdjsonIngest.readChainRanges(spark, dir, chain, Nil,
-      strEquals = Seq(("pk", Seq(hit))))
+    val routed = NdjsonIngest.readChainRanges(spark, dir, chain,
+      NdjsonIngest.Zone(strEquals = Seq(("pk", Seq(hit)))))
     val layers = routed.inputFiles.map(_.split("/").takeRight(2).head)
       .distinct.toSeq
     assert(layers.contains(chain(2)) && layers.length <= 2,
@@ -75,8 +75,8 @@ class BloomSpec extends SparkSpec {
     // the row-wise filter stays exact either way
     val missHits = (0 until 50).map { i =>
       val miss = md5(s"absent-$i")
-      val df = NdjsonIngest.readChainRanges(spark, dir, chain, Nil,
-        strEquals = Seq(("pk", Seq(miss))))
+      val df = NdjsonIngest.readChainRanges(spark, dir, chain,
+        NdjsonIngest.Zone(strEquals = Seq(("pk", Seq(miss)))))
       assert(df.filter(col("pk") === miss).count() === 0,
         s"a bloom false positive must still verify row-wise: $miss")
       df.inputFiles.map(_.split("/").takeRight(2).head).distinct.length
@@ -107,7 +107,7 @@ class BloomSpec extends SparkSpec {
     val chain = NdjsonIngest.latestLayers(dir)
     val probe = id(3, 500).toDouble
     val routed = NdjsonIngest.readChainRanges(spark, dir, chain,
-      Seq(("id", probe, probe)))
+      NdjsonIngest.Zone(ranges = Seq(("id", probe, probe))))
     val layers = routed.inputFiles.map(_.split("/").takeRight(2).head)
       .distinct.toSeq
     assert(layers.contains(chain(3)) && layers.length <= 2,
@@ -118,7 +118,7 @@ class BloomSpec extends SparkSpec {
     val lo = probe - 1e12
     val hi = probe + 1e12
     val ranged = NdjsonIngest.readChainRanges(spark, dir, chain,
-      Seq(("id", lo, hi)))
+      NdjsonIngest.Zone(ranges = Seq(("id", lo, hi))))
     assert(ranged.filter(col("id").between(lo, hi)).count() ===
       spark.read.parquet(chain.map(l => s"$dir/$l"): _*)
         .filter(col("id").between(lo, hi)).count())
@@ -137,8 +137,8 @@ class BloomSpec extends SparkSpec {
       "a saturated bloom is dead sidecar weight — must not be written")
     val chain = NdjsonIngest.latestLayers(dir)
     val probe = md5("big-123")
-    val routed = NdjsonIngest.readChainRanges(spark, dir, chain, Nil,
-      strEquals = Seq(("pk", Seq(probe))))
+    val routed = NdjsonIngest.readChainRanges(spark, dir, chain,
+      NdjsonIngest.Zone(strEquals = Seq(("pk", Seq(probe)))))
     assert(routed.filter(col("pk") === probe).count() === 1)
   }
 
@@ -206,16 +206,17 @@ class BloomSpec extends SparkSpec {
     // a session point probe prunes to the holding layer via the bloom
     // (every layer's lexicographic envelope spans the md5 space)
     val hit = md5(s"sess-${3 * 1500 + 21}")
-    val routed = NdjsonIngest.readChainRanges(spark, dir, chain, Nil,
-      strEquals = Seq(("session", Seq(hit))))
+    val routed = NdjsonIngest.readChainRanges(spark, dir, chain,
+      NdjsonIngest.Zone(strEquals = Seq(("session", Seq(hit)))))
     val layers = routed.inputFiles.map(_.split("/").takeRight(2).head)
       .distinct.toSeq
     assert(layers.contains(chain(3)) && layers.length <= 2,
       s"non-pk point probe must prune via the session bloom: $layers")
     assert(routed.filter(col("session") === hit).count() === 1)
     // and a miss excludes (almost) everything
-    val missLayers = NdjsonIngest.readChainRanges(spark, dir, chain, Nil,
-      strEquals = Seq(("session", Seq(md5("sess-absent")))))
+    val missLayers = NdjsonIngest.readChainRanges(spark, dir, chain,
+      NdjsonIngest.Zone(strEquals =
+        Seq(("session", Seq(md5("sess-absent"))))))
       .inputFiles.map(_.split("/").takeRight(2).head).distinct
     assert(missLayers.length <= 1,
       s"a session miss must open (almost) no layer: ${missLayers.toSeq}")
@@ -258,7 +259,7 @@ class BloomSpec extends SparkSpec {
       dir, "pk")
     val chain = NdjsonIngest.latestLayers(dir)
     val routed = NdjsonIngest.readChainRanges(spark, dir, chain,
-      Seq(("pk", 0.0, 0.0)))
+      NdjsonIngest.Zone(ranges = Seq(("pk", 0.0, 0.0))))
     // the conservative-keep contract: whichever equality semantics the
     // row-wise path exhibits, the sign-flipped-zero layer must be READ,
     // never bloom-pruned (under doubleToLongBits hashing without
@@ -271,7 +272,7 @@ class BloomSpec extends SparkSpec {
       full.filter(col("pk") === 0.0).count())
     // and the stored -0.0 stays reachable through its own point probe
     val routedNeg = NdjsonIngest.readChainRanges(spark, dir, chain,
-      Seq(("pk", -0.0, -0.0)))
+      NdjsonIngest.Zone(ranges = Seq(("pk", -0.0, -0.0))))
     assert(routedNeg.filter(col("pk") === -0.0).count() === 1)
   }
 
@@ -349,7 +350,7 @@ class BloomSpec extends SparkSpec {
     (hitProbes ++ missProbes ++ extra).foreach { k =>
       val v = k.toDouble
       val routed = NdjsonIngest.readChainRanges(spark, dir, chain,
-        Seq(("pk", v, v)))
+        NdjsonIngest.Zone(ranges = Seq(("pk", v, v))))
       assert(routed.filter(col("pk") === k).count() ===
         full.filter(col("pk") === k).count(),
         s"routed ≢ unrouted for pk = $k")
@@ -357,7 +358,7 @@ class BloomSpec extends SparkSpec {
     // the boundary pair: each probe finds exactly its own row
     extra.foreach { k =>
       val routed = NdjsonIngest.readChainRanges(spark, dir, chain,
-        Seq(("pk", k.toDouble, k.toDouble)))
+        NdjsonIngest.Zone(ranges = Seq(("pk", k.toDouble, k.toDouble))))
       assert(routed.filter(col("pk") === k).count() === 1)
     }
   }
@@ -378,8 +379,8 @@ class BloomSpec extends SparkSpec {
     }.mkString("\n")
     java.nio.file.Files.writeString(p, forged)
     val hit = key(4 * 1500 + 3) // lives in layer 4
-    val routed = NdjsonIngest.readChainRanges(spark, dir, chain, Nil,
-      strEquals = Seq(("pk", Seq(hit))))
+    val routed = NdjsonIngest.readChainRanges(spark, dir, chain,
+      NdjsonIngest.Zone(strEquals = Seq(("pk", Seq(hit)))))
     val layers = routed.inputFiles.map(_.split("/").takeRight(2).head)
       .distinct.toSeq
     assert(layers.contains(chain(1)) && layers.contains(chain(4)),

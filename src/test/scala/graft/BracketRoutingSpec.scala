@@ -51,7 +51,7 @@ class BracketRoutingSpec extends SparkSpec {
       (0 until n).map(i => (i.toLong, (b * 1000 + i).toLong))
         .toDF("id", "v"), heavy, "id"))
     val heavyChain = NdjsonIngest.latestLayers(heavy)
-    val (lo, up) = NdjsonIngest.chainMergedCountBracket(heavy, heavyChain).get
+    val (lo, up) = NdjsonIngest.chainMergedMatchBracket(heavy, heavyChain).get
     assert(lo * 2 < up, s"chain must read shadow-heavy: [$lo, $up]")
     val keptHeavy = NdjsonIngest.chainTopKLayersMerged(
       heavy, heavyChain, "v", 3, descending = true)
@@ -200,7 +200,8 @@ class BracketRoutingSpec extends SparkSpec {
       // the planner's answer IS the metadata bracket (not a disguised
       // exact counting fallback)
       val direct = NdjsonIngest.chainMergedMatchBracket(
-        dir, NdjsonIngest.latestLayers(dir), Seq(("v", 20.0, 60.0)))
+        dir, NdjsonIngest.latestLayers(dir),
+        NdjsonIngest.Zone(ranges = Seq(("v", 20.0, 60.0))))
       direct.foreach { case (lo, hi) =>
         assert(row.getLong(0) === lo && row.getLong(1) === hi,
           s"seed $seed: planner must surface the routed bracket " +

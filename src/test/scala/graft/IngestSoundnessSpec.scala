@@ -9,8 +9,6 @@ import graft.sources.NdjsonIngest
   *    never match a null key, so one-null-per-batch used to accumulate
   *    one shadowing null row per commit while shadowCaps still credited
   *    append layers zero capacity — an unsound merged count bracket);
-  *  - appendDeltaDedup must not collapse distinct NULL-fingerprint rows
-  *    (the window groups nulls into one partition);
   *  - chainMergeFree's cache is stamp-validated (a wiped-and-reingested
   *    table can reproduce the same layer names under different commit
   *    kinds — a stale merge-free=true would resurrect superseded rows);
@@ -50,23 +48,6 @@ class IngestSoundnessSpec extends SparkSpec {
         Seq((None: Option[Long], "c")).toDF("id", "v"), dir, "id")
     }
     ()
-  }
-
-  test("appendDeltaDedup keeps every NULL-fingerprint row — null means " +
-      "'no fingerprint', not 'equal to every other null'") {
-    val session = spark
-    import session.implicits._
-    val dir = tmpDir()
-    val batch = Seq(
-      (1L, Some("fp-a"), "x"), (2L, Some("fp-a"), "x-dup"),
-      (3L, None, "y"), (4L, None, "z")).toDF("id", "fp", "payload")
-    val (commit, kept) = NdjsonIngest.appendDeltaDedup(batch, dir, "id", "fp")
-    assert(commit > 0)
-    // fp-a dedups to the lowest pk; BOTH null-fp rows survive
-    assert(kept === 3L)
-    val rows = NdjsonIngest.readLatest(spark, dir)
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(rows === Seq(1L, 3L, 4L))
   }
 
   test("chainMergeFree re-verifies after a wipe-and-reingest that " +

@@ -226,13 +226,16 @@ class PropertySpec extends SparkSpec {
           NdjsonIngest.deleteDelta(keys.toSeq.toDF("id"), dir, "id")
           model --= keys
         case UpdateWhere(thr, nv) =>
-          // predicate-level UPDATE: rewrites exactly the merged rows
-          // matching the filter (no-match → no commit)
-          NdjsonIngest.updateColumnDelta(spark, dir, "id",
-            "val", lit(nv), col("val") >= thr)
+          // predicate-level UPDATE: upsert exactly the merged rows
+          // matching the filter, rewritten (no-match → no commit)
+          val changed = NdjsonIngest.readLatestMerged(spark, dir, "id")
+            .filter(col("val") >= thr).withColumn("val", lit(nv))
+          if (!changed.isEmpty) NdjsonIngest.upsertDelta(changed, dir, "id")
           model = model.map { case (k, v) => k -> (if (v >= thr) nv else v) }
         case DeleteWhere(thr) =>
-          NdjsonIngest.deleteWhereDelta(spark, dir, "id", col("val") < thr)
+          val keys = NdjsonIngest.readLatestMerged(spark, dir, "id")
+            .filter(col("val") < thr).select("id")
+          if (!keys.isEmpty) NdjsonIngest.deleteDelta(keys, dir, "id")
           model = model.filter { case (_, v) => v >= thr }
         case Compact =>
           NdjsonIngest.compactMerged(spark, dir, "id", maxLayers = 1)
@@ -567,8 +570,11 @@ class PropertySpec extends SparkSpec {
         val dir = java.nio.file.Files.createTempDirectory("zprop")
           .toString + "/t"
         layerRows.zipWithIndex.foreach { case (rs, li) =>
+          // `n` is a nullable copy of v (null where v % 3 == 0), so the
+          // null tests below meet layers with zero, some and only nulls
           val df = rs.zipWithIndex.map { case ((v, c), ri) =>
             (li * 100L + ri, v, c) }.toDF("id", "v", "country")
+            .withColumn("n", when(col("v") % 3 =!= 0, col("v")))
           if (li == 0) NdjsonIngest.appendVersion(df, dir, "id")
           else NdjsonIngest.appendDelta(df, dir, "id")
         }
@@ -584,10 +590,34 @@ class PropertySpec extends SparkSpec {
             Seq(s"t.filter(in(country, {${cs.map(c => s"'$c'").mkString(",")}}))",
               s"t.filter(country = '${cs.head}' && between(v, $lo, $hi))")
           else Nil)
-        qs.foreach { q =>
+        // null tests, a disjunction, stacked filters and a filter after
+        // a map: every shape the filter stage folds into one zone
+        val nullQs = Seq(
+          "t.filter(isNull(n))",
+          "t.filter(isNotNull(n))",
+          s"t.filter(isNull(n) && between(v, $lo, $hi))",
+          s"t.filter(between(v, $lo, $hi) || isNull(n))",
+          s"t.filter(v = $eqv || between(n, $lo, $hi))",
+          s"t.filter(between(v, $lo, null)).filter(isNotNull(n))",
+          s"t.filter(isNull(n)).filter(between(v, null, $hi))",
+          s"t.map({w := v}).filter(between(v, $lo, $hi))",
+          "t.map({w := v}).filter(isNotNull(n))")
+        (qs ++ nullQs).foreach { q =>
           def ids(cat: Catalog) = Planner.plan(q, cat)
             .select("id").as[Long].collect().sorted.toSeq
           assert(ids(routed) === ids(unrouted), s"case $ci query $q")
+        }
+        // grouped counts (1 and 2 group columns) under the same
+        // conjuncts: the sidecar answer equals the grouping scan
+        val groupQs = nullQs.filterNot(_.startsWith("t.map")).flatMap { q =>
+          Seq(s"$q.groupBy({c := count()}, {country})",
+            s"$q.groupBy({c := count()}, {country, n})")
+        } ++ Seq("t.groupBy({c := count()}, {n})",
+          s"t.filter(between(v, $lo, $hi)).groupBy({c := count()}, {n})")
+        groupQs.foreach { q =>
+          def groups(cat: Catalog) = Planner.plan(q, cat).collect()
+            .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+          assert(groups(routed) === groups(unrouted), s"case $ci query $q")
         }
     }
   }
@@ -670,10 +700,16 @@ class PropertySpec extends SparkSpec {
     samples(caseGen, 10).zipWithIndex.foreach { case ((ops, lo, hi), ci) =>
       val dir = java.nio.file.Files.createTempDirectory("mzprop")
         .toString + "/t"
-      NdjsonIngest.appendVersion(Seq((100L, 50L)).toDF("id", "v"), dir, "id")
+      // `n` is a nullable copy of v (null where v % 3 == 0) for the
+      // isNull/isNotNull windows
+      def withN(df: org.apache.spark.sql.DataFrame) =
+        df.withColumn("n", when(col("v") % 3 =!= 0, col("v")))
+      NdjsonIngest.appendVersion(withN(Seq((100L, 50L)).toDF("id", "v")),
+        dir, "id")
       ops.foreach {
         case Upsert(rows) =>
-          NdjsonIngest.upsertDelta(rows.toSeq.toDF("id", "v"), dir, "id")
+          NdjsonIngest.upsertDelta(withN(rows.toSeq.toDF("id", "v")), dir,
+            "id")
         case Delete(keys) =>
           NdjsonIngest.deleteDelta(keys.toSeq.toDF("id"), dir, "id")
         case Compact =>
@@ -695,15 +731,22 @@ class PropertySpec extends SparkSpec {
           // aware reader with the combined conjuncts
           s"t.filter(between(v, $lo, null)).filter(between(v, null, $hi))",
           s"t.filter(between(v, $lo, $hi))" +
-            s".filter(between(v, ${lo + 1}, $hi))").foreach { q =>
+            s".filter(between(v, ${lo + 1}, $hi))",
+          // null windows: isNull/isNotNull alone, under a range, as a
+          // disjunction arm, and stacked
+          "t.filter(isNull(n))",
+          "t.filter(isNotNull(n))",
+          s"t.filter(isNotNull(n) && between(v, $lo, $hi))",
+          s"t.filter(isNull(n) || between(v, $lo, $hi))",
+          s"t.filter(between(v, $lo, null)).filter(isNull(n))").foreach { q =>
         def rows(cat: Catalog) = Planner.plan(q, cat)
-          .as[(Long, Long)].collect().sorted.toSeq
+          .select("id", "v").as[(Long, Long)].collect().sorted.toSeq
         assert(rows(routed) === rows(unrouted), s"case $ci query $q")
       }
       // the metadata count BRACKET must contain the true merged count
       // under any upsert/delete/compact history (and collapse to the
       // exact count right after a compact resets the chain)
-      NdjsonIngest.chainMergedCountBracket(
+      NdjsonIngest.chainMergedMatchBracket(
           dir, NdjsonIngest.latestLayers(dir)).foreach { case (lo2, hi2) =>
         val truth = frame.count()
         assert(lo2 <= truth && truth <= hi2,
@@ -735,7 +778,9 @@ class PropertySpec extends SparkSpec {
             ".orderBy({desc(v), id}).limit(3)",
           // filter AFTER the sort absorbs into the merged note too
           s"t.orderBy({desc(v), id}).filter(between(v, $lo, $hi))" +
-            ".limit(3)").foreach { q =>
+            ".limit(3)",
+          "t.filter(isNotNull(n)).orderBy({desc(v), id}).limit(3)",
+          "t.filter(isNull(n)).orderBy({v, id}).limit(3)").foreach { q =>
         def seqOf(cat: Catalog) = Planner.plan(q, cat)
           .select("id").as[Long].collect().toSeq // ORDERED compare
         assert(seqOf(routed) === seqOf(unrouted), s"case $ci query $q")

@@ -459,7 +459,7 @@ class SaneQLSpec extends SparkSpec {
     // swap the registered (merged) frame for the raw pruned chain
     NdjsonIngest.upsertDelta(
       Seq((10L, "FR", 30.0)).toDF("id", "country", "val"), dir, "id")
-    assert(!NdjsonIngest.latestChainMergeFree(dir))
+    assert(!NdjsonIngest.chainMergeFree(dir, NdjsonIngest.latestLayers(dir)))
     val mcat = Catalog(
       tables = Map("vt" -> NdjsonIngest.readLatestMerged(spark, dir, "id")),
       versionedDirs = Map("vt" -> dir))

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ann.Similarity
 import graft.functions.{VectorFunctions => VF}
-import graft.sources.NdjsonIngest
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -105,26 +104,5 @@ class SimilaritySpec extends SparkSpec {
       "sharded path must keep the single-level cell schema")
     val maxCell = shardedDf.agg(max("cell")).collect()(0).getInt(0)
     assert(maxCell >= 4, s"two-level run stayed in one shard (max cell $maxCell)")
-  }
-
-  test("clustered append range-partitions files for row-group pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("clustered").toString + "/t"
-    val df = spark.range(0, 1000)
-      .select(col("id"), (col("id") * 7 % 1000).as("cov_start"))
-    NdjsonIngest.appendClusteredVersion(df, dir, "id", "cov_start", 4)
-    val files = new java.io.File(NdjsonIngest.latestPath(dir))
-      .listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.length === 4)
-    // each file must cover a disjoint cov_start range (the chunk-skipping
-    // property: a range predicate prunes whole files via min/max stats)
-    val ranges = files.map { f =>
-      val d = spark.read.parquet(f.getPath)
-        .agg(min("cov_start"), max("cov_start")).head()
-      (d.getLong(0), d.getLong(1))
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo2, _)) => assert(hi <= lo2)
-      case _ =>
-    }
   }
 }

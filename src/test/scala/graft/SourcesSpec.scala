@@ -62,11 +62,13 @@ class SourcesSpec extends SparkSpec {
     val v1 = NdjsonIngest.appendVersion(
       Seq((1L, "CH", 1.0)).toDF("id", "country", "val"), dir, "id")
     assert(v1 === 1L)
-    assert(spark.read.parquet(NdjsonIngest.latestPath(dir)).count() === 1)
+    assert(spark.read.parquet(
+      s"$dir/${NdjsonIngest.latestLayers(dir).head}").count() === 1)
     val v2 = NdjsonIngest.appendVersion(
       Seq((1L, "CH", 1.0), (2L, "DE", 2.0)).toDF("id", "country", "val"), dir, "id")
     assert(v2 === 2L)
-    assert(spark.read.parquet(NdjsonIngest.latestPath(dir)).count() === 2)
+    assert(spark.read.parquet(
+      s"$dir/${NdjsonIngest.latestLayers(dir).head}").count() === 2)
   }
 
   test("delta append writes only the batch; readers union the chain; compaction+gc bound it") {
@@ -106,12 +108,16 @@ class SourcesSpec extends SparkSpec {
     val dead = NdjsonIngest.gcVersions(dir)
     assert(dead.length === 10)
     assert(NdjsonIngest.readLatest(spark, dir).count() === 10)
-    // latestPath resolves again once the chain is a single snapshot layer
-    assert(spark.read.parquet(NdjsonIngest.latestPath(dir)).count() === 10)
+    // the chain is a single snapshot layer again
+    assert(spark.read.parquet(
+      s"$dir/${NdjsonIngest.latestLayers(dir).head}").count() === 10)
   }
 
   test("layer stats prune the chain for range reads") {
     val dir = tmpDir() + "/t"
+    def rangeRead(c: String, lo: Double, hi: Double) =
+      NdjsonIngest.readChainRanges(spark, dir, NdjsonIngest.latestLayers(dir),
+        NdjsonIngest.Zone(ranges = Seq((c, lo, hi))))
     // three delta layers with disjoint id ranges (time-ordered appends)
     NdjsonIngest.appendVersion(
       Seq((1L, "CH", 1.0), (9L, "DE", 2.0)).toDF("id", "country", "val"), dir, "id")
@@ -120,7 +126,7 @@ class SourcesSpec extends SparkSpec {
     NdjsonIngest.appendDelta(
       Seq((20L, "CH", 5.0), (29L, "DE", 6.0)).toDF("id", "country", "val"), dir, "id")
     // the pruned read touches ONLY the middle layer's files
-    val pruned = NdjsonIngest.readLatestRange(spark, dir, "id", 10, 15)
+    val pruned = rangeRead("id", 10, 15)
     val files = pruned.select(input_file_name()).distinct()
       .as[String].collect()
     assert(files.nonEmpty && files.forall(_.contains("/v2/")),
@@ -131,13 +137,13 @@ class SourcesSpec extends SparkSpec {
     // matches none of its actual values {10, 19} — the complete layer
     // histogram excludes the layer entirely (envelope pruning alone
     // would have read it)
-    assert(NdjsonIngest.readLatestRange(spark, dir, "id", 12, 15)
+    assert(rangeRead("id", 12, 15)
       .select(input_file_name()).distinct().as[String].collect().isEmpty)
     // untouched range prunes everything but keeps the schema
-    assert(NdjsonIngest.readLatestRange(spark, dir, "id", 100, 200)
+    assert(rangeRead("id", 100, 200)
       .filter(col("id") > 0).count() === 0)
     // a column without stats (string) includes every layer
-    assert(NdjsonIngest.readLatestRange(spark, dir, "country", 0, 1).count() === 6)
+    assert(rangeRead("country", 0, 1).count() === 6)
   }
 
   test("readChainTopK: stats-bounded top-k opens only the layers that " +
@@ -203,6 +209,9 @@ class SourcesSpec extends SparkSpec {
 
   test("a NaN in a double column never poisons layer pruning") {
     val dir = tmpDir() + "/t"
+    def rangeRead(c: String, lo: Double, hi: Double) =
+      NdjsonIngest.readChainRanges(spark, dir, NdjsonIngest.latestLayers(dir),
+        NdjsonIngest.Zone(ranges = Seq((c, lo, hi))))
     NdjsonIngest.appendVersion(
       Seq((1L, 1.0), (2L, Double.NaN)).toDF("id", "val"), dir, "id")
     NdjsonIngest.appendDelta(
@@ -210,10 +219,10 @@ class SourcesSpec extends SparkSpec {
     // the NaN layer writes NO stats line for `val` (a NaN envelope would
     // fail every intersection test → silent row loss); it must always be
     // conservatively included
-    val r = NdjsonIngest.readLatestRange(spark, dir, "val", 0.0, 2.0)
+    val r = rangeRead("val", 0.0, 2.0)
     assert(r.filter(col("val") === 1.0).count() === 1)
     // clean columns in the same layer still prune normally
-    assert(NdjsonIngest.readLatestRange(spark, dir, "id", 3, 4)
+    assert(rangeRead("id", 3, 4)
       .select(input_file_name()).distinct().as[String].collect()
       .forall(_.contains("/v2/")))
   }
@@ -279,46 +288,6 @@ class SourcesSpec extends SparkSpec {
       .select("id").as[Long].collect().sorted.toSeq === Seq(2L, 4L))
     assert(NdjsonIngest.readCommitMerged(spark, dir, "id", 2L)
       .select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L, 4L))
-  }
-
-  test("updateColumnDelta: UPDATE..WHERE commits only the matched rows") {
-    val dir = tmpDir() + "/t"
-    NdjsonIngest.appendVersion(
-      Seq((1L, "CH", 1.0), (2L, "DE", 2.0), (3L, "CH", 3.0), (4L, "FR", 4.0))
-        .toDF("id", "country", "val"), dir, "id")
-    // reference updateColumn semantics (database.h:77-88): set val = 9.5
-    // where country = 'CH' — committed as ONE upsert layer of 2 rows
-    val c = NdjsonIngest.updateColumnDelta(spark, dir, "id",
-      "val", lit(9.5), col("country") === "CH")
-    assert(c > 0)
-    val layer = s"$dir/${NdjsonIngest.latestLayers(dir).last}"
-    assert(spark.read.parquet(layer).count() === 2) // O(changed), not 4
-    val got = NdjsonIngest.readLatestMerged(spark, dir, "id")
-      .as[(Long, String, Double)].collect().map(r => r._1 -> r._3).toMap
-    assert(got === Map(1L -> 9.5, 2L -> 2.0, 3L -> 9.5, 4L -> 4.0))
-    // untouched columns survive; value casts to the committed type
-    val c2 = NdjsonIngest.updateColumnDelta(spark, dir, "id",
-      "val", lit(7), col("id") === 2L) // int literal → DoubleType column
-    assert(c2 > c)
-    assert(NdjsonIngest.readLatestMerged(spark, dir, "id")
-      .filter(col("id") === 2L).as[(Long, String, Double)].head() ===
-      ((2L, "DE", 7.0)))
-    // the pre-update snapshot still pins the old values
-    assert(NdjsonIngest.readCommitMerged(spark, dir, "id", 1L)
-      .as[(Long, String, Double)].collect().map(r => r._1 -> r._3).toMap ===
-      Map(1L -> 1.0, 2L -> 2.0, 3L -> 3.0, 4L -> 4.0))
-    // no match → no commit, no empty layer
-    val before = NdjsonIngest.commits(dir)
-    assert(NdjsonIngest.updateColumnDelta(spark, dir, "id",
-      "val", lit(0.0), col("country") === "XX") === -1L)
-    assert(NdjsonIngest.commits(dir) === before)
-    // DELETE..WHERE: tombstones exactly the matched keys
-    assert(NdjsonIngest.deleteWhereDelta(spark, dir, "id",
-      col("val") === 9.5) > 0)
-    assert(NdjsonIngest.readLatestMerged(spark, dir, "id")
-      .select("id").as[Long].collect().sorted.toSeq === Seq(2L, 4L))
-    assert(NdjsonIngest.deleteWhereDelta(spark, dir, "id",
-      col("country") === "XX") === -1L)
   }
 
   test("merge-on-read compaction folds the chain into a tombstone-free snapshot") {
@@ -422,33 +391,6 @@ class SourcesSpec extends SparkSpec {
     assert(seen.drop(2) === List((1L, "delete", 3L), (1L, "delete", 3L)))
   }
 
-  test("clustered compaction preserves range clustering (per-file disjoint ranges)") {
-    val dir = tmpDir() + "/t"
-    // interleaved id ranges across layers — a naive compaction would
-    // interleave them into every output file
-    NdjsonIngest.appendVersion(
-      (1L to 40L by 4).map(i => (i, "CH", i.toDouble)).toDF("id", "country", "val"),
-      dir, "id")
-    Seq(2L, 3L, 4L).foreach { off =>
-      NdjsonIngest.appendDelta(
-        (off to 40L by 4).map(i => (i, "DE", i.toDouble)).toDF("id", "country", "val"),
-        dir, "id")
-    }
-    assert(NdjsonIngest.compactVersions(spark, dir, maxLayers = 2,
-      clusterBy = Some("id"), numRanges = 4))
-    // per-file [min,max] envelopes of the snapshot are pairwise disjoint
-    val spans = NdjsonIngest.readLatest(spark, dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("id").as("lo"), max("id").as("hi"))
-      .select("lo", "hi").as[(Long, Long)].collect().sortBy(_._1)
-    assert(spans.length > 1)
-    spans.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 < lo2, s"overlap: ${spans.toSeq}")
-      case _ => ()
-    }
-    assert(NdjsonIngest.readLatest(spark, dir).count() === 40)
-  }
-
   test("append duplicate-pk check zone-prunes on the batch's pk " +
     "envelope — monotone-id appends validate against ~one layer, " +
     "clashes are still caught across the pruned path") {
@@ -492,39 +434,6 @@ class SourcesSpec extends SparkSpec {
     intercept[NdjsonIngest.DuplicatePrimaryKey] {
       NdjsonIngest.appendDelta(Seq(("b", 9)).toDF("k", "v"), sdir, "k")
     }
-  }
-
-  test("layout-blind compaction preserves clustering via the " +
-    "_clustering breadcrumb (the maintenance-loop path)") {
-    val root = tmpDir()
-    val dir = root + "/t"
-    // clustered ingest leaves the breadcrumb; later plain deltas grow
-    // the chain
-    NdjsonIngest.appendClusteredVersion(
-      (1L to 40L by 2).map(i => (i, i.toDouble)).toDF("id", "val"),
-      dir, "id", rangeCol = "id", numRanges = 4)
-    Seq(2L, 4L).foreach { off =>
-      NdjsonIngest.appendDelta(
-        (off to 40L by 4).map(i => (i, i.toDouble)).toDF("id", "val"),
-        dir, "id")
-    }
-    assert(NdjsonIngest.clusteringOf(dir) === Some(("id", 4)))
-    // a caller that knows NOTHING about the layout (Maintenance.tick)
-    // still compacts clustered: per-file ranges stay pairwise disjoint
-    val r = graft.tools.Maintenance.tick(spark, root, maxLayers = 2)
-    assert(r.failed.isEmpty, r.failed.toString)
-    assert(r.compacted === Seq(dir))
-    val spans = NdjsonIngest.readLatest(spark, dir)
-      .groupBy(input_file_name().as("f"))
-      .agg(min("id").as("lo"), max("id").as("hi"))
-      .select("lo", "hi").as[(Long, Long)].collect().sortBy(_._1)
-    assert(spans.length > 1)
-    spans.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) =>
-        assert(hi1 < lo2, s"overlap: ${spans.toSeq}")
-      case _ => ()
-    }
-    assert(NdjsonIngest.readLatest(spark, dir).count() === 40)
   }
 
   test("pk bloom filters: point lookups prune row groups without touching data") {
@@ -584,30 +493,6 @@ class SourcesSpec extends SparkSpec {
     val w2 = Snapshot.read(spark, db, snap2, pks = Map("docs" -> "id"))
     assert(w2("docs").as[(Long, String)].collect().sorted.toSeq ===
       Seq((1L, "a2")))
-  }
-
-  test("ingest-time content dedup: re-crawled duplicates never enter the table") {
-    val dir = tmpDir() + "/t"
-    def rows(r: (Long, String)*) =
-      r.toDF("id", "txt").withColumn("fp", md5(col("txt")))
-    NdjsonIngest.appendVersion(rows(1L -> "alpha", 2L -> "beta"), dir, "id")
-    // batch: one true duplicate (same content, new id), one new row, and
-    // an internal duplicate pair (lowest pk wins)
-    val (c1, kept1) = NdjsonIngest.appendDeltaDedup(
-      rows(10L -> "alpha", 11L -> "gamma", 13L -> "delta", 12L -> "delta"),
-      dir, "id", "fp")
-    assert(kept1 === 2L)
-    assert(c1 > 0)
-    val ids = NdjsonIngest.readLatest(spark, dir)
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(ids === Seq(1L, 2L, 11L, 12L)) // 10 dropped (dup of 1), 13 lost to 12
-    // a fully-duplicate batch commits NOTHING (no empty layer, no commit)
-    val commitsBefore = NdjsonIngest.commits(dir)
-    val (c2, kept2) = NdjsonIngest.appendDeltaDedup(
-      rows(20L -> "alpha", 21L -> "gamma"), dir, "id", "fp")
-    assert(c2 === -1L && kept2 === 0L)
-    assert(NdjsonIngest.commits(dir) === commitsBefore)
-    assert(NdjsonIngest.readLatest(spark, dir).count() === 4)
   }
 
   test("additive schema evolution: add-column is O(batch), travel sees old schema") {
