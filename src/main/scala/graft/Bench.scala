@@ -71,10 +71,9 @@ object Bench {
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     }
-    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame,
-        run: DataFrame => Unit): Double = {
+    def timeOnce(name: String, fn: (SparkSession, String) => DataFrame): Double = {
       val t0 = System.nanoTime()
-      try run(fn(spark, sfDir))
+      try materialize(fn(spark, sfDir))
       catch {
         case e: Throwable =>
           failed ::= name
@@ -95,30 +94,27 @@ object Bench {
     // — min-of-N across the widest time window.
     val RetryThresholdSec = 3.0
     val MaxRetries = 2
-    def measure(run: DataFrame => Unit): Seq[(String, Double)] = {
+    def measure(): Seq[(String, Double)] = {
       val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map {
-        case (name, fn) => (name, fn, timeOnce(name, fn, run))
+        case (name, fn) => (name, fn, timeOnce(name, fn))
       }
       val secondPass = firstPass.map { case (name, fn, first) =>
         if (failed.contains(name)) (name, fn, first)
-        else (name, fn, math.min(first, timeOnce(name, fn, run)))
+        else (name, fn, math.min(first, timeOnce(name, fn)))
       }
       secondPass.map { case (name, fn, first) =>
         var best = first
         var tries = 0
         while (best > RetryThresholdSec && tries < MaxRetries &&
             !failed.contains(name)) {
-          best = math.min(best, timeOnce(name, fn, run))
+          best = math.min(best, timeOnce(name, fn))
           tries += 1
         }
         name -> best
       }
     }
-    // the timed body produces every column (materialize); the former
-    // `count()` body runs as a second, separate measurement so its total
-    // can be reported beside the new one as `count_total`
-    val results = measure(materialize)
-    val countTotal = measure(_.count()).map(_._2).sum
+    // the timed body produces every column (materialize)
+    val results = measure()
     if (failed.nonEmpty) {
       System.err.println(s"bench failed: ${failed.sorted.mkString(", ")}")
       spark.stop()
@@ -143,7 +139,7 @@ object Bench {
       try w.println(fullLine) finally w.close()
     } catch { case scala.util.control.NonFatal(_) => () } // unwritable cwd must not fail the bench
     val queriesPath = queriesFile.getPath.replace("\\", "\\\\").replace("\"", "\\\"")
-    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","count_total":$countTotal,"n_queries":${results.size},"queries_file":"$queriesPath","sf":"$sfDir"}""")
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","n_queries":${results.size},"queries_file":"$queriesPath","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -540,7 +540,7 @@ final class Planner(catalog: Planner.Catalog) {
       // pipeline values of an arbitrarily-nested union tree (union is
       // associative, so the flat list loses nothing), each carrying its
       // own sort note — the same uniform push into union children the
-      // count paths already do (metaGroupTokens recurses to any depth;
+      // count paths already do (metaBrackets recurses to any depth;
       // the reference pushes into union children uniformly,
       // optimizer/filter_pushdown_pass.h:22-49).
       union: Option[(Tbl, Tbl)] = None,
@@ -572,7 +572,9 @@ final class Planner(catalog: Planner.Catalog) {
     * column-ADDING maps — re-applied in order by any rewrite; neither
     * changes which rows exist, so counts and bounds are unaffected.
     * A map that would SHADOW a scan column drops the note (its values
-    * diverge from the sidecar stats under the same name).
+    * diverge from the sidecar stats under the same name). A following
+    * count or grouped count reads its brackets off the same note
+    * ([[metaBrackets]]).
     */
   final case class ZonePred(dir: String, chain: Seq[String],
       schema: org.apache.spark.sql.types.StructType, pred: Option[Expr],
@@ -584,10 +586,10 @@ final class Planner(catalog: Planner.Catalog) {
       zone: Zone = Zone.empty,
       post: Seq[PostStage] = Nil,
       // Some(pk) marks a MERGE-ON-READ chain: rewrites must read through
-      // readChainRangesMerged (excluded layers as pk-only shadows) and
-      // the metadata count/group fast paths stay OFF (recorded layer
-      // counts are not merged-result counts); top-k bounds use the
-      // shadow-loss-aware chainTopKLayersMerged
+      // readChainRangesMerged (excluded layers as pk-only shadows), and
+      // its count brackets are never presumed exact (recorded layer
+      // counts are not merged-result counts — metaBrackets); the top-k
+      // bound subtracts its shadow losses (chainTopKLayers)
       mergedPk: Option[String] = None)
 
   /** A pipeline stage after the routed filter that a rewrite must
@@ -667,51 +669,38 @@ final class Planner(catalog: Planner.Catalog) {
     if merged || NdjsonIngest.chainMergeFree(dir, chain)
   } yield ZonePred(dir, chain, in.df.schema, None, mergedPk = mergedPk)
 
-  /** Ungrouped metadata count for a pipeline value: the bare registered
-    * merge-free chain's recorded row counts, a fully-decidable filter's
-    * exact matching count (chainMatchCount), or — recursing — the SUM
-    * over a unionAll's children (both must answer from metadata or
-    * neither; the reference pushes the CountFilterNode into union
-    * children the same way its filters push). Merged chains never
-    * answer from metadata (recorded counts describe pre-merge rows).
+  /** Per-group count brackets from the layer `_stats` sidecars
+    * ([[NdjsonIngest.chainCountBracket]], 0-2 group columns) for a
+    * pipeline value, SUMMING group-wise over a unionAll's leaves — every
+    * leaf answers or none does (the reference pushes its CountFilterNode
+    * into union children the same way its filters push). A leaf answers
+    * through its zone note: a fully-decidable filter or the bare
+    * registered chain, with every group column a field of the pinned scan
+    * schema (stale stats of a dead schema-evolution column must never
+    * answer for a map-added name). A merge-free leaf answers only when
+    * EXACT (lo == hi in every group). A merge-on-read leaf's bracket is a
+    * true bracket, and answers only where the surface admits one: the
+    * bare registered chain under `bareMerged`, a filtered one under
+    * `zonedMerged`.
     */
-  private def metaCountOf(in: Tbl): Option[Long] = in.union match {
-    case Some((l, r)) =>
-      for (a <- metaCountOf(l); b <- metaCountOf(r)) yield a + b
-    case None => in.zone.orElse(bareNote(in, merged = false))
-      .filter(_.mergedPk.isEmpty)
-      .flatMap(zp => NdjsonIngest.chainMatchCount(zp.dir, zp.chain, zp.zone))
-  }
-
-  /** Grouped metadata counts (1 or 2 group columns) as sidecar TOKENS,
-    * recursing through unionAll children (group-wise sum). Every group
-    * column must be a field of the pinned scan schema (see the orderBy
-    * note guard — stale stats of a dead schema-evolution column must
-    * never answer for a map-added name).
-    */
-  private def metaGroupTokens(in: Tbl, cols: Seq[String])
-      : Option[Seq[(Seq[Option[String]], Long)]] = in.union match {
-    case Some((l, r)) =>
-      for (a <- metaGroupTokens(l, cols); b <- metaGroupTokens(r, cols))
-        yield (a ++ b).groupBy(_._1).toSeq
-          .map { case (g, xs) => (g, xs.map(_._2).sum) }
-    case None =>
-      in.zone.orElse(bareNote(in, merged = false))
-        .filter(zp => zp.mergedPk.isEmpty &&
-          cols.forall(zp.schema.fieldNames.contains))
-        .flatMap { zp =>
-          if (cols.size == 1)
-            NdjsonIngest.chainGroupCount(zp.dir, zp.chain, cols.head,
-              zp.zone).map(_.map { case (tok, cnt) => (Seq(tok), cnt) })
-          else
-            // TWO group columns: decidable when one has a complete
-            // histogram and the other is layer-constant (the day-
-            // partitioned-chain × type case) — chainGroupCountTwo
-            NdjsonIngest.chainGroupCountTwo(zp.dir, zp.chain, cols(0),
-              cols(1), zp.zone)
-              .map(_.map { case ((ta, tb), cnt) => (Seq(ta, tb), cnt) })
-        }
-  }
+  private def metaBrackets(in: Tbl, cols: Seq[String], bareMerged: Boolean,
+      zonedMerged: Boolean): Option[Seq[(Seq[Option[String]], Long, Long)]] =
+    in.union match {
+      case Some((l, r)) =>
+        for {
+          a <- metaBrackets(l, cols, bareMerged, zonedMerged)
+          b <- metaBrackets(r, cols, bareMerged, zonedMerged)
+        } yield (a ++ b).groupBy(_._1).toSeq.map { case (g, xs) =>
+          (g, xs.map(_._2).sum, xs.map(_._3).sum) }
+      case None =>
+        in.zone.orElse(bareNote(in, merged = false))
+          .orElse(if (bareMerged) bareNote(in, merged = true) else None)
+          .filter(zp => (zp.mergedPk.isEmpty || zonedMerged ||
+              in.zone.isEmpty) && cols.forall(zp.schema.fieldNames.contains))
+          .flatMap(zp => NdjsonIngest.chainCountBracket(zp.dir, zp.chain,
+              zp.zone, cols)
+            .filter(gs => zp.mergedPk.isDefined || gs.forall(g => g._2 == g._3)))
+    }
 
   /** Sidecar histogram token → typed group value (dates and narrow
     * integers travel as canonical doubles — writeLayerStats histTok).
@@ -754,6 +743,51 @@ final class Planner(catalog: Planner.Catalog) {
         intTok(-((1L << 53) - 1), (1L << 53) - 1).map(java.lang.Long.valueOf)
       case _ => Some(t)
     }
+  }
+
+  /** Group-column types whose sidecar histogram tokens [[decodeToken]]
+    * reads back. LongType too: layers whose envelope leaves ±2^53 wrote
+    * no histogram (collision guard) and simply fall back to the scan.
+    */
+  private def histable(dt: DataType): Boolean = dt match {
+    case StringType | DateType | ByteType | ShortType | IntegerType |
+        LongType => true
+    case _ => false
+  }
+
+  /** [[metaBrackets]] with every group token decoded to its column's
+    * value (null = the null group). None when a group column has no
+    * histogram type, or when some token does not decode (a stale aliased
+    * sidecar line): that declines the WHOLE metadata path to the exact
+    * scan — dropping the token's group would be a wrong answer.
+    */
+  private def metaGroups(in: Tbl, cols: Seq[String], bareMerged: Boolean,
+      zonedMerged: Boolean): Option[Seq[(Seq[Any], Long, Long)]] = {
+    val dts = cols.map(in.df.schema(_).dataType)
+    if (!dts.forall(histable)) None
+    else metaBrackets(in, cols, bareMerged, zonedMerged).flatMap { gs =>
+      val decoded = gs.map { case (toks, lo, hi) =>
+        val vs = toks.zip(dts).map {
+          case (None, _) => Some(null)
+          case (Some(t), dt) => decodeToken(t, dt)
+        }
+        if (vs.exists(_.isEmpty)) None else Some((vs.map(_.get), lo, hi))
+      }
+      if (decoded.exists(_.isEmpty)) None else Some(decoded.flatten)
+    }
+  }
+
+  /** An in-memory frame of metadata answer rows: the group columns
+    * (nullable, at their scan types), then non-null LONG count columns.
+    */
+  private def localFrame(in: Tbl, keys: Seq[String], counts: Seq[String],
+      rows: Seq[Seq[Any]]): DataFrame = {
+    val jrows: java.util.List[org.apache.spark.sql.Row] =
+      new java.util.ArrayList()
+    rows.foreach(r => jrows.add(org.apache.spark.sql.Row(r: _*)))
+    in.df.sparkSession.createDataFrame(jrows, StructType(
+      keys.map(c => StructField(c, in.df.schema(c).dataType, nullable = true)) ++
+        counts.map(StructField(_, LongType, nullable = false))))
   }
 
   /** The project pipeline stage, recursing into unionAll children so
@@ -1014,13 +1048,8 @@ final class Planner(catalog: Planner.Catalog) {
           val keyCols =
             ((ss.column, ss.descending) +: ss.tiebreak).map {
               case (c, d) => if (d) col(c).desc else col(c).asc }
-          val kept =
-            if (zp.mergedPk.isDefined)
-              NdjsonIngest.chainTopKLayersMerged(zp.dir, zp.chain,
-                ss.column, kTot, ss.descending, zp.zone)
-            else
-              NdjsonIngest.chainTopKLayers(zp.dir, zp.chain,
-                ss.column, kTot, ss.descending, zp.zone)
+          val kept = NdjsonIngest.chainTopKLayers(zp.dir, zp.chain,
+            ss.column, kTot, ss.descending, zp.zone)
           val scan = zoneScan(in.df.sparkSession, zp, Some(kept))
           val filtered = zp.pred.map(p =>
             scan.filter(scalar(p, scan, Ambiguity.ModeNone, in.origin)))
@@ -1563,81 +1592,25 @@ final class Planner(catalog: Planner.Catalog) {
         val cols = a("columns")
           .map(identSet(_, "groupBy columns")).getOrElse(Nil)
         cols.foreach(c => resolve(c, in.df))
-        // ungrouped count over the bare registered merge-free chain
-        // answers from the layers' recorded row counts alone — zero
-        // parquet footers, zero Spark jobs (the reference's
-        // CountFilterNode metadata fast path at layer granularity).
-        // Layers predating row-count stats → None → normal counting scan.
-        // A FILTERED count composes the same way through the ZonePred
-        // note: when the filter was fully stats-decidable, per-layer
-        // envelopes + null ledgers can pin the exact matching count
-        // (CountFilterNode ∩ RangeSelection) — zone-excluded layers
-        // contribute 0, fully-contained null-free layers their row
-        // count; any undecidable layer falls back to the zone-narrowed
-        // counting scan the filter already produced.
-        val metaCount: Option[Long] =
-          if (cols.nonEmpty) None else metaCountOf(in)
-        // GROUPED count from the layer value histograms (the reference's
-        // Aggregated action over per-value bitmap cardinalities, at
-        // layer granularity): bare chain, a fully stats-decidable filter
-        // of one, or a unionAll of such (children sum group-wise);
-        // group-col conjuncts apply entry-wise, other conjuncts must
-        // pass whole layers; any layer without a complete histogram →
-        // None → the normal grouping scan
-        val metaGroups: Option[DataFrame] =
-          if (aggItems.size != 1 || cols.isEmpty || cols.size > 2) None
-          else {
-            import org.apache.spark.sql.types.{ByteType, DateType,
-              IntegerType, LongType, ShortType, StringType}
-            val dts = cols.map(c => in.df.schema(c).dataType)
-            // LongType answers too: layers whose envelope leaves ±2^53
-            // wrote no histogram (collision guard) and simply fall
-            // back to the grouping scan
-            if (!dts.forall(dt =>
-                dt == StringType || dt == DateType || dt == ByteType ||
-                dt == ShortType || dt == IntegerType || dt == LongType))
-              None
-            else metaGroupTokens(in, cols).flatMap { gs =>
-              // sidecar tokens → typed group values via decodeToken; an
-              // UNDECODABLE token (stale aliased sidecar line) declines
-              // the WHOLE histogram path to the grouping scan — it
-              // reaches here when the group column carries no range
-              // conjunct (entry tests then never parsed the tokens)
-              val decoded: Option[Seq[Seq[Any]]] =
-                gs.foldLeft(Option(Vector.empty[Seq[Any]])) {
-                  case (accOpt, (toks, cnt)) => accOpt.flatMap { acc =>
-                    val vs: Seq[Option[Any]] = toks.zip(dts).map {
-                      case (None, _) => Some(null: Any)
-                      case (Some(t), dt) => decodeToken(t, dt)
-                    }
-                    if (vs.exists(_.isEmpty)) None
-                    else Some(acc :+ (vs.map(_.get) :+ (cnt: Any)))
-                  }
-                }
-              decoded.map { rs =>
-              val rows: java.util.List[org.apache.spark.sql.Row] =
-                new java.util.ArrayList()
-              rs.foreach { vals =>
-                rows.add(org.apache.spark.sql.Row(vals: _*))
-              }
-              in.df.sparkSession.createDataFrame(rows,
-                org.apache.spark.sql.types.StructType(
-                  cols.zip(dts).map { case (c, dt) =>
-                    org.apache.spark.sql.types.StructField(c, dt,
-                      nullable = true)
-                  } :+ org.apache.spark.sql.types.StructField(
-                    aggItems.head, org.apache.spark.sql.types.LongType,
-                    nullable = false)))
-              }
-            }
-          }
-        val out = (metaCount, metaGroups) match {
-          case (Some(total), _) =>
+        // counts answer from the layer `_stats` sidecars when they pin
+        // them EXACTLY — zero parquet footers, zero Spark jobs (the
+        // reference's CountFilterNode and Aggregated fast paths over
+        // bitmap cardinalities, at layer granularity): the bare merge-free
+        // chain, a fully stats-decidable filter of one (envelopes, null
+        // ledgers and value histograms; group-column conjuncts apply
+        // entry-wise), or a unionAll of such (leaves sum group-wise).
+        // Anything undecidable → the normal counting/grouping scan.
+        val meta =
+          if (cols.size > 2 || (cols.nonEmpty && aggItems.size != 1)) None
+          else metaGroups(in, cols, bareMerged = false, zonedMerged = false)
+        val out = meta match {
+          case Some(Seq((_, total, _))) if cols.isEmpty =>
             in.df.sparkSession.range(1)
               .select(aggItems.map(n => lit(total).as(n)): _*)
-          case (None, Some(grouped)) => grouped
-          case _ if cols.isEmpty => in.df.agg(aggs.head, aggs.tail: _*)
-          case _ =>
+          case Some(gs) =>
+            localFrame(in, cols, aggItems, gs.map { case (vs, c, _) => vs :+ c })
+          case None if cols.isEmpty => in.df.agg(aggs.head, aggs.tail: _*)
+          case None =>
             in.df.groupBy(cols.map(col): _*).agg(aggs.head, aggs.tail: _*)
         }
         Tbl(out, None)
@@ -1728,47 +1701,31 @@ final class Planner(catalog: Planner.Catalog) {
       case "approxCount" =>
         // `[lo, hi]` bracket on the row count, metadata-first (zero
         // parquet footers): merge-free chains — filtered, unioned, or
-        // bare — pin it EXACTLY from the recorded layer counts
-        // (metaCountOf, so lo == hi); MERGE-ON-READ chains answer the
-        // provable shadow bracket (chainMergedMatchBracket) — recorded
-        // rows minus total shadow capacity bare, per-conjunct pass
-        // bounds under a fully-decidable filter — and a unionAll sums
-        // its leaves' brackets (ends compose: the union's count is the
-        // sum of leaf counts). Anything else falls back to ONE exact
-        // counting pass (lo == hi == count). The user-facing answer is
-        // always a true bracket: the real count provably lies in [lo, hi].
+        // bare — answer when the sidecars pin the count EXACTLY (lo ==
+        // hi); MERGE-ON-READ chains answer the provable shadow bracket
+        // (recorded rows minus total shadow capacity bare, per-conjunct
+        // pass bounds under a fully-decidable filter); a unionAll sums
+        // its leaves' brackets. Anything else falls back to ONE exact
+        // counting pass (lo == hi == count). The real count provably lies
+        // in [lo, hi].
         val in = input
-        val spark = in.df.sparkSession
-        def two(lo: Long, hi: Long): Tbl =
-          Tbl(spark.range(1).select(lit(lo).as("lo"), lit(hi).as("hi")),
-            None)
-        def bracketOf(t: Tbl): Option[(Long, Long)] = t.union match {
-          case Some((l, r)) =>
-            for (a <- bracketOf(l); b <- bracketOf(r))
-              yield (a._1 + b._1, a._2 + b._2)
-          case None => metaCountOf(t).map(c => (c, c)).orElse(
-            // merge-free zones answered above
-            t.zone.orElse(bareNote(t, merged = true))
-              .filter(_.mergedPk.isDefined)
-              .flatMap(zp => NdjsonIngest.chainMergedMatchBracket(
-                zp.dir, zp.chain, zp.zone)))
-        }
-        bracketOf(in) match {
-          case Some((lo, hi)) => two(lo, hi)
-          case None => val c = in.df.count(); two(c, c)
-        }
+        val (lo, hi) =
+          metaBrackets(in, Nil, bareMerged = true, zonedMerged = true)
+            .map(gs => (gs.head._2, gs.head._3))
+            .getOrElse { val c = in.df.count(); (c, c) }
+        Tbl(in.df.sparkSession.range(1)
+          .select(lit(lo).as("lo"), lit(hi).as("hi")), None)
 
       case "approxGroupCount" =>
         // per-GROUP `[lo, hi]` brackets, metadata-first — the grouped
         // face of approxCount(): merge-free chains (bare, decidably
-        // filtered, or unioned) answer EXACTLY from the layer value
-        // histograms (metaGroupTokens, lo == hi); a bare registered
-        // MERGE-ON-READ chain answers the provable per-group shadow
-        // bracket (chainMergedGroupBracket — grouped exactness on a
-        // merged chain is unknowable from per-column ledgers, so this
-        // is surfaced as an explicit bracket, never silent routing);
-        // unions sum leaf brackets group-wise. Anything else — filtered
-        // merged chains included — runs ONE exact grouping pass
+        // filtered, or unioned) answer when the layer value histograms
+        // pin every group EXACTLY; a bare registered MERGE-ON-READ chain
+        // answers the provable per-group shadow bracket (grouped
+        // exactness on a merged chain is unknowable from per-column
+        // ledgers, so it is surfaced as an explicit bracket, never silent
+        // routing); unions sum leaf brackets group-wise. Anything else —
+        // filtered merged chains included — runs ONE exact grouping pass
         // (lo == hi). Output: (column, lo, hi), null group included.
         val in = input
         val c = req("column") match {
@@ -1777,50 +1734,9 @@ final class Planner(catalog: Planner.Catalog) {
         }
         if (!in.df.columns.contains(c))
           err(s"approxGroupCount: unknown column $c")
-        val spark = in.df.sparkSession
-        import org.apache.spark.sql.types.{ByteType, DateType, IntegerType,
-          LongType, ShortType, StringType, StructField, StructType}
-        val dt = in.df.schema(c).dataType
-        val histable = dt == StringType || dt == DateType || dt == ByteType ||
-          dt == ShortType || dt == IntegerType || dt == LongType
-        def groupBracketOf(t: Tbl)
-            : Option[Seq[(Option[String], Long, Long)]] = t.union match {
-          case Some((l, r)) =>
-            for (a <- groupBracketOf(l); b <- groupBracketOf(r)) yield
-              (a ++ b).groupBy(_._1).toSeq.map { case (g, xs) =>
-                (g, xs.map(_._2).sum, xs.map(_._3).sum) }
-          case None =>
-            metaGroupTokens(t, Seq(c))
-              .map(_.map { case (toks, cnt) => (toks.head, cnt, cnt) })
-              // a zone note (filtered merged) → exact pass below
-              .orElse(if (t.zone.isDefined) None
-                else bareNote(t, merged = true).flatMap(zp =>
-                  NdjsonIngest.chainMergedGroupBracket(zp.dir, zp.chain, c)))
-        }
-        val schema = StructType(Seq(StructField(c, dt, nullable = true),
-          StructField("lo", LongType, nullable = false),
-          StructField("hi", LongType, nullable = false)))
-        // decodeToken three-valued: an UNDECODABLE sidecar token (stale
-        // aliased line) declines the whole metadata path to the exact
-        // grouping pass instead of throwing out of plan construction
-        val metaRows: Option[Seq[org.apache.spark.sql.Row]] =
-          (if (histable) groupBracketOf(in) else None).flatMap { gs =>
-            gs.foldLeft(Option(Vector.empty[org.apache.spark.sql.Row])) {
-              case (accOpt, (g, lo, hi)) => accOpt.flatMap { acc =>
-                g match {
-                  case None => Some(acc :+ org.apache.spark.sql.Row(null, lo, hi))
-                  case Some(t) => decodeToken(t, dt).map(v =>
-                    acc :+ org.apache.spark.sql.Row(v, lo, hi))
-                }
-              }
-            }
-          }
-        metaRows match {
-          case Some(rs) =>
-            val rows: java.util.List[org.apache.spark.sql.Row] =
-              new java.util.ArrayList()
-            rs.foreach(rows.add)
-            Tbl(spark.createDataFrame(rows, schema), None)
+        metaGroups(in, Seq(c), bareMerged = true, zonedMerged = false) match {
+          case Some(gs) => Tbl(localFrame(in, Seq(c), Seq("lo", "hi"),
+            gs.map { case (vs, lo, hi) => vs :+ lo :+ hi }), None)
           case None =>
             // collision-proof internal alias: the group column itself
             // may be named "c"

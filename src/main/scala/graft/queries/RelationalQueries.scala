@@ -645,7 +645,7 @@ object RelationalQueries {
     // ---- TOP-K OVER A STATS-ORDERED CHAIN: `orderBy(d desc).limit(20)`
     //      over the same 30-layer day-clustered chain — the planner's
     //      SortedScan note re-plans the limit as a stats-BOUNDED read
-    //      (readChainTopK): per-layer row counts + envelopes prove the
+    //      (chainTopKLayers): per-layer row counts + envelopes prove the
     //      20 most-recent rows live in the newest day's layer, so 1 of
     //      30 footers opens (≙ the reference's RangeSelection early
     //      termination on a sorted column, range_selection.h:15-40). The
@@ -732,7 +732,7 @@ object RelationalQueries {
     //      the day-clustered chain — day is CONSTANT per layer, type has
     //      a complete per-layer histogram, so every histogram entry
     //      pairs with the layer's day and the whole rollup is a metadata
-    //      sum: zero parquet footers (chainGroupCountTwo). ----
+    //      sum: zero parquet footers (chainCountBracket). ----
     QDef("q_group_two",
       """SELECT CAST(ts AS DATE) AS d, event_type,
         |  CAST(count(*) AS BIGINT) AS cnt
@@ -767,7 +767,7 @@ object RelationalQueries {
     // ---- INT × DATE TWO-COLUMN GROUPED METADATA COUNT: groupBy(day,
     //      status) over the day-clustered chain — day is CONSTANT per
     //      layer, status has a complete integer histogram, so the whole
-    //      rollup is a metadata sum (chainGroupCountTwo): zero parquet
+    //      rollup is a metadata sum (chainCountBracket): zero parquet
     //      footers, with a date window applying entry-wise to the
     //      constant day. ----
     QDef("q_group_intdate",
@@ -935,8 +935,8 @@ object RelationalQueries {
     // ---- GROUPED APPROX COUNT: approxGroupCount(g) answers per-group
     //      `[lo, hi]` brackets metadata-first — EXACT (lo == hi) on the
     //      merge-free chain from the complete layer value histograms
-    //      (metaGroupTokens), the provable per-group shadow bracket on
-    //      a bare merged chain (chainMergedGroupBracket — property-
+    //      (metaBrackets), the provable per-group shadow bracket on
+    //      a bare merged chain (chainCountBracket — property-
     //      armed in BracketRoutingSpec, since grouped exactness on a
     //      merged chain is unknowable from per-column ledgers). Zero
     //      footers; the routing-blind oracle groups the flat table. ----
@@ -1019,7 +1019,7 @@ object RelationalQueries {
     // ---- APPROX COUNT BRACKET: approxCount() answers `[lo, hi]` from
     //      the sidecars alone — exact (lo == hi) on a merge-free chain
     //      (recorded layer counts), the provable shadow bracket on a
-    //      merged one (chainMergedMatchBracket of the empty zone).
+    //      merged one (chainCountBracket of the empty zone).
     //      Zero footers; the oracle counts the flat table for real. ----
     QDef("q_approx_count",
       """SELECT CAST(count(*) AS BIGINT) AS lo,
@@ -1035,9 +1035,9 @@ object RelationalQueries {
     // ---- FILTERED APPROX COUNT: approxCount() composes through a
     //      decidable filter — on the merge-free day-clustered chain the
     //      window's exact metadata count answers (lo == hi, zero
-    //      footers; metaCountOf ∘ chainMatchCount); filtered MERGED
+    //      footers; metaBrackets ∘ chainCountBracket); filtered MERGED
     //      chains bracket per-conjunct pass bounds minus shadow
-    //      capacity (chainMergedMatchBracket — property-armed in
+    //      capacity (chainCountBracket — property-armed in
     //      BracketRoutingSpec), and unions sum leaf brackets. ----
     QDef("q_approx_count_filtered",
       """SELECT CAST(count(*) AS BIGINT) AS lo,
@@ -1169,7 +1169,7 @@ object RelationalQueries {
     // ---- TWO-COLUMN ROLLUP UNDER A GROUP-COLUMN DISJUNCTION: the
     //      (day × status) rollup with a two-window OR on status — day is
     //      layer-constant, status applies the or-group ENTRY-WISE to its
-    //      integer histogram tokens (chainGroupCountTwo), so the whole
+    //      integer histogram tokens (chainCountBracket), so the whole
     //      filtered rollup stays a metadata sum. Zero parquet footers. ----
     QDef("q_group_two_or",
       """SELECT CAST(ts AS DATE) AS d, CAST(event_id % 7 AS INT) AS status,

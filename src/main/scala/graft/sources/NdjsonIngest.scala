@@ -662,7 +662,7 @@ object NdjsonIngest {
     // non-null counts under `c:<col>` markers (both 2 tokens — can never
     // match the 3-token column-stat patterns): with per-layer counts AND
     // envelopes, orderBy+limit can compute a value bound that provably
-    // contains the top-k from metadata alone (readChainTopK)
+    // contains the top-k from metadata alone (chainTopKLayers)
     val nnLines = numeric.zipWithIndex.map { case (c, i) =>
       s"c:$c ${row.getLong(2 * numeric.length + 2 * strings.length + i)}"
     } ++ strings.zipWithIndex.map { case (c, i) =>
@@ -675,7 +675,7 @@ object NdjsonIngest {
     // bitmaps: `gh:<col> <k>` marks a complete histogram of k values,
     // each `g:<col> <b64 token> <cnt>` one group's exact count. A single-
     // column grouped count over the chain (or under a decidable filter)
-    // can then answer from metadata alone (chainGroupCount). Columns
+    // can then answer from metadata alone (chainCountBracket). Columns
     // whose exact histogram exceeds the cap came back null from the
     // bounded aggregate and write nothing (a few-hundred-value histogram
     // is still a few-KB sidecar; a high-cardinality column never
@@ -1029,42 +1029,6 @@ object NdjsonIngest {
     if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
   }
 
-  /** `orderBy(column) [desc] + limit(k)` over a layer chain with EARLY
-    * TERMINATION from the stats sidecars — the reference's RangeSelection
-    * over a sorted column (range_selection.h:15-40) at layer granularity.
-    *
-    * Metadata-only bound, no data read to plan: sort layers by their
-    * EXIT bound (max for ascending, min for descending) and accumulate
-    * recorded row counts until ≥ k — the k-th best value can be no worse
-    * than the last accumulated layer's exit bound B, so any layer whose
-    * ENTRY bound is strictly beyond B cannot contribute and its parquet
-    * footer is never opened. On a chain clustered by `column` (time-
-    * ordered appends ranked by recency, score-clustered corpora) this
-    * reads O(k/rows-per-layer) layers regardless of chain length. Layers
-    * missing stats or counts are conservatively always read. The final
-    * orderBy+limit over the kept layers still plans as
-    * TakeOrderedAndProject — a per-partition heap, never a full sort.
-    *
-    * APPEND-ONLY chains only (like [[readChainRanges]]); `tiebreak`
-    * `(column, descending)` keys are appended to the sort for a
-    * deterministic result (either direction — the layer bound depends
-    * only on the first key).
-    */
-  def readChainTopK(spark: SparkSession, tableDir: String,
-      chain: Seq[String], column: String, k: Int, descending: Boolean,
-      tiebreak: Seq[(String, Boolean)] = Nil,
-      pinSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    val kept = chainTopKLayers(tableDir, chain, column, k, descending)
-    val keyCols = ((column, descending) +: tiebreak).map {
-      case (c, d) => if (d) col(c).desc else col(c).asc }
-    // kept is non-empty by construction (no filter conjuncts): every
-    // branch either returns the whole chain or retains at least the
-    // bound-defining layer
-    readChainSubset(spark, tableDir, chain, kept, pinSchema)
-      .orderBy(keyCols: _*).limit(k)
-  }
-
   /** Read the `kept` subset of a layer chain (an empty subset still
     * surfaces the chain's schema via an always-false filter, so callers
     * keep a column-identical frame). `pinSchema` as in
@@ -1083,125 +1047,82 @@ object NdjsonIngest {
     else read(chain.filter(kept.toSet))
   }
 
-  /** The layer subset that can contribute to
-    * `filter(conjuncts).orderBy(column [desc], ties).limit(k)` —
-    * metadata-only, COMPOSING the zone-map narrowing with the top-k
-    * bound (the reference intersects RangeSelection with other filter
-    * operators the same way, filter/operators/range_selection.h:15-40 +
-    * operator.h:11-37). With no conjuncts this is the bare stats-bounded
-    * top-k ([[readChainTopK]]); numeric/date sort keys use the numeric
-    * envelopes, string keys the lexicographic `s:` envelopes (detected
-    * from the sidecars themselves).
+  /** The DATA layers that can SUPPLY a row of
+    * `filter(zone).orderBy(column [desc], ties).limit(k)` over a layer
+    * chain — metadata-only, COMPOSING the zone-map narrowing with the
+    * stats-bounded top-k (the reference's RangeSelection over a sorted
+    * column intersected with its other filter operators,
+    * filter/operators/range_selection.h:15-40 + operator.h:11-37).
+    * Numeric/date sort keys use the numeric envelopes, string keys the
+    * lexicographic `s:` envelopes (detected from the sidecars
+    * themselves); neither recorded anywhere → every survivor is read.
+    * The caller re-applies the full filter + sort + limit row-wise over
+    * the kept layers (an append-only chain reads them with
+    * [[readChainSubset]]; a merge-on-read chain keeps the rest as pk-only
+    * shadow scans, [[readChainRangesMerged]]`(keepLayers = …)`).
     *
-    * Soundness with a filter: per-layer row counts can't be taken at
-    * face value (a counted row may fail the filter), so the accumulation
-    * uses a LOWER bound on each layer's qualifying rows — a layer whose
-    * envelope is FULLY contained in every range/equality conjunct (and
-    * whose ledgers are present) qualifies at least
-    * `rows − Σ per-conjunct failure upper bounds`; any layer that can't
-    * prove containment contributes 0 and is simply kept. Zone-pruned
-    * layers contain no qualifying rows at all and drop entirely. The
-    * result is always a superset of the layers holding the true top-k;
-    * the caller re-applies the full filter + sort + limit row-wise.
+    * The bound sorts layers by their EXIT bound and accumulates a LOWER
+    * bound on each layer's qualifying rows until ≥ k; a layer whose
+    * ENTRY bound lies strictly beyond the k-th row's bound cannot
+    * contribute. Each layer's qualifying lower bound is its recorded
+    * rows minus two upper bounds on rows removed from the pool:
+    *  - conjunct failures, `Σ (n − pass)` over the exact per-conjunct
+    *    pass counts ([[conjunctPassCounts]]; any unknown → the layer
+    *    proves nothing and is simply kept);
+    *  - rows LOST to strictly-younger layers, their total
+    *    [[shadowCaps]]: each younger upsert row or tombstone kills at
+    *    most one older row, and uniqueness-enforced commits (append,
+    *    snapshot, compact) kill none — so on an append-only chain every
+    *    loss is zero and the bound is the plain one. An unknown younger
+    *    capacity (gc'd log entry, legacy tombstone layer without a `t:`
+    *    line) makes the loss unknown: the layer proves no qualifying
+    *    rows but its envelope still excludes soundly (a surviving row is
+    *    one of its recorded rows, whole-row upserts never mutate in
+    *    place).
+    * Zone-excluded layers hold no qualifying row and drop entirely, so
+    * the result is always a superset of the layers supplying the true
+    * top-k.
     */
   def chainTopKLayers(tableDir: String, chain: Seq[String], column: String,
       k: Int, descending: Boolean, zone: Zone = Zone.empty): Seq[String] = {
     require(chain.nonEmpty, "chainTopKLayers needs a non-empty layer chain")
-    val survivors = chain.map(l =>
-      l -> statsLines(tableDir, l).getOrElse(Seq.empty))
-      .filter { case (_, lines) => zoneKeep(lines, zone) }
-    topKBound(survivors, column, k, descending, zone)
-  }
-
-  /** The top-k bound over zone `survivors`: the envelope kind the
-    * sidecars record for `column` picks the ordering (numeric columns
-    * write 3-token lines, strings `s:`-marked ones); neither present
-    * anywhere → no bound computable → every survivor is read.
-    */
-  private def topKBound(survivors: Seq[(String, Seq[Array[String]])],
-      column: String, k: Int, descending: Boolean, zone: Zone,
-      lossOf: String => Option[Long] = _ => Some(0L)): Seq[String] =
-    // isNull on the sort key: every qualifying row's key is null, so the
-    // envelopes order nothing — zone narrowing is the whole win
-    if (zone.nullCols.contains(column)) survivors.map(_._1)
-    else if (survivors.exists(s => envFromLines(s._2, column).isDefined))
-      topKSelect[Double](survivors, envFromLines(_, column), column, k,
-        descending, zone, lossOf)
-    else if (survivors.exists(s => strEnvFromLines(s._2, column).isDefined))
-      topKSelect[String](survivors, strEnvFromLines(_, column), column, k,
-        descending, zone, lossOf)
-    else survivors.map(_._1)
-
-  /** [[chainTopKLayers]] for a MERGE-ON-READ chain: the DATA layers that
-    * may still SUPPLY a row of `filter(conjuncts).orderBy(column
-    * [desc]).limit(k)` after merging. Layers not returned must keep
-    * participating as pk-only shadow scans
-    * ([[readChainRangesMerged]]`(keepLayers = …)`) — they can't supply a
-    * top-k row but still override older versions and carry tombstones.
-    *
-    * Soundness beyond the append-only case: a layer's recorded counts
-    * describe rows that younger layers may SHADOW (upserts) or DELETE
-    * (tombstones), so its qualifying-count lower bound additionally
-    * subtracts the TOTAL shadow capacity of all strictly-younger layers
-    * (each younger upsert row/tombstone kills at most one older row) —
-    * computable from the `n:`/`t:` sidecars plus the commit log's kinds.
-    * A layer introduced by a UNIQUENESS-ENFORCED commit (append — which
-    * aborts on any pk already present anywhere in its chain — or the
-    * chain-resetting snapshot/compact) has capacity ZERO: its rows
-    * provably override nothing older, so arbitrarily large appends cost
-    * the bound nothing; only upsert rows and tombstones count. A younger
-    * layer with unknown capacity (gc'd log entry, missing count) makes
-    * every older loss unknown (those layers prove no qualifying rows but
-    * are still envelope-excludable: a SURVIVING row is one of the
-    * layer's recorded rows, whole-row upsert semantics never mutate it
-    * in place, so the recorded envelope covers it). On upsert-light
-    * chains — the production norm — the bound stays close to the
-    * append-only one.
-    */
-  def chainTopKLayersMerged(tableDir: String, chain: Seq[String],
-      column: String, k: Int, descending: Boolean,
-      zone: Zone = Zone.empty): Seq[String] = {
-    require(chain.nonEmpty,
-      "chainTopKLayersMerged needs a non-empty layer chain")
+    val origins = layerOrigins(tableDir, chain)
     val withLines = chain.map(l =>
       l -> statsLines(tableDir, l).getOrElse(Seq.empty))
-    // ONE data-layer pass shared below (layerHasData lists the layer
-    // dir; re-filtering would re-list every layer per use)
-    val dataLayers = withLines
-      .filter { case (l, _) => layerHasData(tableDir, l) }
+    val dataLayers = withLines.zip(origins).collect {
+      case (wl, o) if o.data => wl }
     val survivors = dataLayers
       .filter { case (_, lines) => zoneKeep(lines, zone) }
+    // isNull on the sort key: every qualifying row's key is null, so the
+    // envelopes order nothing — zone narrowing is the whole win
     if (survivors.isEmpty || zone.nullCols.contains(column))
       return survivors.map(_._1)
-    // Routing heuristic — the optimizer-side "is this merged chain
-    // upsert-light enough to bother bounding?" choice: when the KNOWN
-    // total shadow capacity reaches half the recorded rows, the
-    // per-layer loss subtraction zeroes almost every qualifying lower
-    // bound and the bound walk buys nothing — return the zone survivors
-    // directly (a SUPERSET is always sound; the caller re-applies
-    // filter+sort+limit row-wise). The rare prunable tail on such a
-    // chain (a fresh append atop heavy upserts) is transient:
-    // maintenance compaction resets every capacity to zero at the next
-    // fold. An UNKNOWN capacity or row count (gc'd log entry, a legacy
-    // tombstone layer without a `t:` line) is NOT "heavy" — it attempts
-    // the walk: topKSelect already degrades those layers conservatively
-    // (an unknown loss proves no qualifying rows but the layer stays
-    // envelope-excludable, a missing count reads as always-kept), so a
-    // fresh append's tight envelope can still prune the legacy tail.
-    // Upsert-light chains — the production norm — keep the bounded path.
-    val caps = shadowCaps(tableDir, withLines)
+    // Routing heuristic — is this chain upsert-light enough to bother
+    // bounding? When the KNOWN total shadow capacity reaches half the
+    // recorded rows, the loss subtraction zeroes almost every qualifying
+    // lower bound and the walk buys nothing: return the zone survivors
+    // (a superset is always sound). Maintenance compaction resets every
+    // capacity to zero at the next fold. An UNKNOWN capacity or row count
+    // is not "heavy" — the walk degrades those layers conservatively, so
+    // a fresh append's tight envelope can still prune a legacy tail.
+    val caps = shadowCaps(origins, withLines.map(_._2))
     val recorded = dataLayers.map { case (_, lines) => nFromLines(lines) }
-    val knownHeavy = caps.forall(_.isDefined) &&
-      recorded.forall(_.isDefined) &&
-      caps.flatten.sum * 2 > recorded.flatten.sum
-    if (knownHeavy) return survivors.map(_._1)
+    if (caps.forall(_.isDefined) && recorded.forall(_.isDefined) &&
+        caps.flatten.sum * 2 > recorded.flatten.sum)
+      return survivors.map(_._1)
     val losses: Map[String, Option[Long]] = chain.zipWithIndex.map {
       case (l, i) =>
         val younger = caps.drop(i + 1)
         l -> (if (younger.exists(_.isEmpty)) None
               else Some(younger.flatten.sum))
     }.toMap
-    topKBound(survivors, column, k, descending, zone, losses)
+    if (survivors.exists(s => envFromLines(s._2, column).isDefined))
+      topKSelect[Double](survivors, envFromLines(_, column), column, k,
+        descending, zone, losses)
+    else if (survivors.exists(s => strEnvFromLines(s._2, column).isDefined))
+      topKSelect[String](survivors, strEnvFromLines(_, column), column, k,
+        descending, zone, losses)
+    else survivors.map(_._1)
   }
 
   /** Per-layer SHADOW CAPACITY: an upper bound on how many OLDER rows
@@ -1210,140 +1131,171 @@ object NdjsonIngest {
     * pk, and killers map injectively onto the dead rows they are
     * nearest-younger to); layers from UNIQUENESS-ENFORCED commits
     * (append — which aborts on any in-chain pk — and the chain-resetting
-    * snapshot/compact) have capacity ZERO. None = unknowable (gc'd log
-    * entry, unknown kind, missing count). Shared by the merged top-k
-    * bound and the merged count bracket.
+    * snapshot/compact) have capacity ZERO, which is what makes a
+    * merge-free chain the zero-capacity case of every bound below. None
+    * = unknowable (gc'd log entry, unknown kind, missing count). Shared
+    * by the top-k bound and the count bracket.
     */
-  private def shadowCaps(tableDir: String,
-      withLines: Seq[(String, Seq[Array[String]])]): Seq[Option[Long]] = {
-    // (layer → introducing commit kind), single-valued: a commit's chain
-    // ends with the layer it introduced
-    val intro: Map[String, String] =
-      commits(tableDir).map(logEntry(tableDir, _)).flatMap {
-        case (c, kind) => c.lastOption.map(_ -> kind)
-      }.toMap
-    val zeroCap = Set("snapshot", "append", "compact")
-    withLines.map { case (l, lines) =>
-      val hasTombs = new java.io.File(s"$tableDir/$l/_tombstones").isDirectory
-      intro.get(l) match {
-        case Some(kind) if zeroCap(kind) && !hasTombs => Some(0L)
-        case Some("upsert") if !hasTombs =>
-          if (layerHasData(tableDir, l)) nFromLines(lines) else Some(0L)
-        case Some("delete") if !layerHasData(tableDir, l) =>
-          if (hasTombs) tombFromLines(lines) else Some(0L)
+  private def shadowCaps(origins: Seq[LayerOrigin],
+      lines: Seq[Seq[Array[String]]]): Seq[Option[Long]] =
+    origins.zip(lines).map { case (o, ls) =>
+      o.kind match {
+        case Some(kind) if UnionKinds(kind) && !o.tombs => Some(0L)
+        case Some("upsert") if !o.tombs =>
+          if (o.data) nFromLines(ls) else Some(0L)
+        case Some("delete") if !o.data =>
+          if (o.tombs) tombFromLines(ls) else Some(0L)
         case _ => None // unknown kind / gc'd log / mixed layer
       }
     }
-  }
 
-  /** `[lo, hi]` BRACKET on a merge-on-read chain's FILTERED merged row
-    * count, from the sidecars + commit log alone (zero parquet footers).
-    * The exact merged count is unknowable from per-layer metadata —
-    * recorded rows may be shadowed or tombstoned — but two bounds are
-    * provable:
-    *  - UPPER: Σ per-layer hi-pass, where a zone-EXCLUDED layer passes 0
-    *    and a kept layer at most its tightest exact per-conjunct pass
-    *    count ([[conjunctPassCounts]]; an undecidable conjunct caps at
-    *    `n`). Sound: every matching merged row is one of exactly one
-    *    layer's recorded rows (whole-row upsert semantics never mutate
-    *    in place) and passes every conjunct there — shadowing only
-    *    shrinks the true count further.
-    *  - LOWER: max(0, Σ per-layer lo-pass − total shadow capacity):
-    *    a layer provably holds ≥ `n − Σ(n − pass)` qualifying rows when
-    *    EVERY conjunct's pass count is exact (else 0 — can't prove any),
-    *    and across the chain at most [[shadowCaps]]' total of them die
-    *    to younger upserts/tombstones (each dead recorded row is killed
-    *    by its nearest-younger same-pk upsert row or tombstone, an
-    *    injective mapping; a dead row that wasn't qualifying only makes
-    *    the subtraction more conservative). Any unknown capacity (gc'd
-    *    log) collapses the lower to 0.
-    * With the empty zone this brackets the whole merged count: `[Σ n −
-    * Σ capacity, Σ n]`, degenerately `[total, total]` on APPEND-ONLY
-    * chains (all capacities zero). None when a data layer lacks a row
-    * count (the upper is then unknowable — callers fall back to one
-    * exact counting pass). The `approxCount()` surface reads this and
-    * sums it leaf-wise across unions.
+  /** Per-GROUP `[lo, hi]` brackets on
+    * `filter(zone).groupBy(groupCols).count()` over a layer chain, from
+    * the `_stats` sidecars and the commit log alone — no parquet footer
+    * opens (the reference's CountFilterNode and Aggregated fast paths
+    * over bitmap cardinalities, at layer granularity). `groupCols` holds
+    * 0, 1 or 2 columns; a key is one sidecar token per group column
+    * (strings verbatim, dates and narrow integers as canonical doubles,
+    * None = the null group). The true count of every group lies in its
+    * bracket; lo == hi is the exact answer.
+    *
+    * Per kept data layer (a zone-EXCLUDED layer holds no match):
+    *  - `c(g)`, the rows of group g passing the GROUP-column conjuncts:
+    *    `n` for no group column; one column's complete value histogram
+    *    read entry-wise (a range keeps tokens inside it, an in-set its
+    *    members, isNotNull drops the null group, isNull keeps only it,
+    *    an or-group whose arms all constrain that column applies per
+    *    token); for two columns, one column's histogram paired with the
+    *    other column's layer-CONSTANT value (`constToken` — the
+    *    day-partitioned chain × type rollup);
+    *  - every OTHER conjunct i has an exact pass count `p_i`
+    *    ([[conjunctPassCounts]]): `hi(g) = min(c(g), p_i…)` (an unknown
+    *    `p_i` caps nothing) and `lo(g) = max(0, c(g) − Σ (n − p_i))`, or
+    *    0 when any `p_i` is unknown.
+    * Over the chain the per-layer values sum, and the TOTAL
+    * [[shadowCaps]] comes off every `lo` (at most that many recorded
+    * rows die to younger upserts/tombstones, each from one group; an
+    * unknown capacity collapses `lo` to 0). A merged row carries the
+    * values its supplying layer recorded (whole-row upserts), so `hi`
+    * stays an upper bound on a merge-on-read chain too. On a merge-free
+    * chain every capacity is zero, and lo == hi exactly when each layer
+    * has at most one loose conjunct (no group column) or every other
+    * conjunct passes all its rows (grouped) — the cases whose count
+    * per-column ledgers pin.
+    *
+    * Groups whose `hi` is 0 are not emitted; with no group column the
+    * one `Nil` row always is. None when a kept data layer lacks its row
+    * count or a group column's histogram/ledger (or a token is
+    * undecidable under a conjunct) — callers fall back to a counting
+    * pass.
     */
-  def chainMergedMatchBracket(tableDir: String, chain: Seq[String],
-      zone: Zone = Zone.empty): Option[(Long, Long)] = {
-    if (chain.isEmpty) return None
-    val withLines = chain.map(l =>
-      l -> statsLines(tableDir, l).getOrElse(Seq.empty))
-    val caps = shadowCaps(tableDir, withLines)
-    val capsTotal =
-      if (caps.exists(_.isEmpty)) None else Some(caps.flatten.sum)
-    val perLayer: Seq[Option[(Long, Long)]] = withLines
-      .filter { case (l, _) => layerHasData(tableDir, l) }
-      .map { case (_, lines) =>
-        if (!zoneKeep(lines, zone)) Some((0L, 0L))
-        else nFromLines(lines).map { n =>
-          val passes = conjunctPassCounts(lines, n, zone)
-          val hi = (n +: passes.flatten).min
-          val lo =
-            if (passes.exists(_.isEmpty)) 0L
-            else math.max(0L, n - passes.flatten.map(n - _).sum)
-          (lo, hi)
+  def chainCountBracket(tableDir: String, chain: Seq[String],
+      zone: Zone = Zone.empty, groupCols: Seq[String] = Nil)
+      : Option[Seq[(Seq[Option[String]], Long, Long)]] = {
+    require(groupCols.size <= 2, "chainCountBracket takes 0-2 group columns")
+    val origins = layerOrigins(tableDir, chain)
+    val lines = chain.map(l => statsLines(tableDir, l).getOrElse(Seq.empty))
+    val caps = shadowCaps(origins, lines)
+    // conjuncts not on a group column; or-groups not entirely on one
+    // group column included (their per-group split is unknowable)
+    val others = Zone(
+      zone.ranges.filterNot(r => groupCols.contains(r._1)),
+      zone.strEquals.filterNot(s => groupCols.contains(s._1)),
+      zone.nullCols.filterNot(groupCols.contains),
+      zone.notNullCols.filterNot(groupCols.contains),
+      zone.orGroups.filterNot(orGroupSingleColumn(_).exists(groupCols.contains)))
+    val preds = groupCols.map(groupPred(_, zone))
+    val perLayer = origins.zip(lines).collect { case (o, ls) if o.data =>
+      if (!zoneKeep(ls, zone)) Some(Nil)
+      else for {
+        n <- nFromLines(ls)
+        cs <- layerGroupCounts(ls, n, groupCols, preds)
+      } yield {
+        val passes = conjunctPassCounts(ls, n, others)
+        val fails =
+          if (passes.exists(_.isEmpty)) None
+          else Some(passes.flatten.map(n - _).sum)
+        cs.map { case (g, c) =>
+          (g, fails.fold(0L)(f => math.max(0L, c - f)),
+            (c +: passes.flatten).min)
         }
       }
+    }
     if (perLayer.exists(_.isEmpty)) None
     else {
-      val hi = perLayer.flatten.map(_._2).sum
-      val lo = capsTotal.fold(0L)(ct =>
-        math.max(0L, perLayer.flatten.map(_._1).sum - ct))
-      Some((lo, hi))
+      val capsTotal =
+        if (caps.exists(_.isEmpty)) None else Some(caps.flatten.sum)
+      val byKey = perLayer.flatten.flatten.groupBy(_._1)
+      val keys = if (groupCols.isEmpty) Seq(Nil) else byKey.keys.toSeq
+      Some(keys.map { g =>
+        val xs = byKey.getOrElse(g, Nil)
+        val lo = xs.map(_._2).sum
+        (g, capsTotal.fold(0L)(ct => math.max(0L, lo - ct)), xs.map(_._3).sum)
+      }.filter(b => groupCols.isEmpty || b._3 > 0))
     }
   }
 
-  /** Per-GROUP `[lo, hi]` brackets on a merge-on-read chain's merged
-    * grouped counts, from the sidecars + commit log alone — the grouped
-    * face of [[chainMergedMatchBracket]]. Exact grouped counts on a
-    * merged chain are genuinely unknowable from per-column ledgers
-    * (younger layers shadow unknown groups), but per group two bounds
-    * are provable when EVERY data layer carries a complete exact
-    * histogram of the group column:
-    *  - hi(g) = Σ per-layer histogram counts of g: a live merged row
-    *    carries the group value its SUPPLYING layer recorded (whole-row
-    *    upsert semantics — a re-grouped row is a younger layer's
-    *    recorded row), so every live g-row counts toward some layer's
-    *    g-entry;
-    *  - lo(g) = max(0, hi(g) − total shadow capacity): at most
-    *    [[shadowCaps]]' total of recorded rows die chain-wide (injective
-    *    kill mapping), and every dead g-row subtracts from g alone —
-    *    subtracting the whole capacity from each group individually is
-    *    conservative. Unknown capacity → lo collapses to 0.
-    * The null group rides the `n:`/`c:` ledgers (n − nn per layer).
-    * None when any data layer lacks a histogram/count — callers fall
-    * back to an exact grouping pass. The `approxGroupCount()` surface
-    * consumes this; nothing routes through it silently.
+  /** One layer's `c(g)` for [[chainCountBracket]]: its `n` rows keyed by
+    * the group columns' tokens, restricted to the rows passing the
+    * group-column conjuncts (`preds`). None when undecidable.
     */
-  def chainMergedGroupBracket(tableDir: String, chain: Seq[String],
-      groupCol: String): Option[Seq[(Option[String], Long, Long)]] = {
-    if (chain.isEmpty) return None
-    val withLines = chain.map(l =>
-      l -> statsLines(tableDir, l).getOrElse(Seq.empty))
-    val caps = shadowCaps(tableDir, withLines)
-    val capsTotal =
-      if (caps.exists(_.isEmpty)) None else Some(caps.flatten.sum)
-    val perLayer: Seq[Option[Seq[(Option[String], Long)]]] = withLines
-      .filter { case (l, _) => layerHasData(tableDir, l) }
-      .map { case (_, lines) =>
-        for {
-          hist <- histExactFromLines(lines, groupCol)
-          n <- nFromLines(lines)
-        } yield {
-          val nn = nnFromLines(lines, groupCol).getOrElse(hist.map(_._2).sum)
-          val entries = hist.map { case (tok, cnt) => (Option(tok), cnt) }
-          if (n - nn > 0) entries :+ ((None: Option[String]), n - nn)
-          else entries
-        }
+  private def layerGroupCounts(lines: Seq[Array[String]], n: Long,
+      groupCols: Seq[String], preds: Seq[GroupPred])
+      : Option[Seq[(Seq[Option[String]], Long)]] = {
+    // one column's histogram entries passing its conjuncts, plus the
+    // null group when no conjunct rejects it (the null ledger, or the
+    // complement of the complete histogram)
+    def histCounts(h: String, p: GroupPred)
+        : Option[Seq[(Option[String], Long)]] = {
+      val hist = histExactFromLines(lines, h)
+      val kept =
+        if (p.isNull) Some(Nil)
+        else hist.flatMap(histEntriesWhere(_, p.entryPasses))
+      kept.flatMap { k =>
+        if (!p.nullPasses) Some(k)
+        else nnFromLines(lines, h).orElse(hist.map(_.map(_._2).sum))
+          .map(nn => if (n - nn > 0) k :+ ((None: Option[String]), n - nn)
+                     else k)
       }
-    if (perLayer.exists(_.isEmpty)) None
-    else Some(perLayer.flatten.flatten
-      .groupBy(_._1).toSeq
-      .map { case (g, xs) =>
-        val hi = xs.map(_._2).sum
-        (g, capsTotal.fold(0L)(ct => math.max(0L, hi - ct)), hi)
-      })
+    }
+    // the column's single value across ALL n rows: Some(Some(tok)) when
+    // constant non-null, Some(None) when all-null, None when unprovable.
+    // Tokens use the histogram encoding (dates as epoch-day doubles), so
+    // envelope doubles stringify identically to histogram tokens.
+    def constToken(c: String): Option[Option[String]] =
+      nnFromLines(lines, c) match {
+        case Some(0L) => Some(None)
+        case Some(nn) if nn == n =>
+          envFromLines(lines, c) match {
+            // min==max proves a constant only inside the exactness
+            // window: a long column holding {2^60, 2^60+1} records a
+            // collapsed lo==hi envelope and is NOT constant (exactVal)
+            case Some((lo, hi)) if lo == hi && exactVal(lo) =>
+              Some(Some(lo.toString))
+            case Some(_) => None
+            case None => strEnvFromLines(lines, c) match {
+              case Some((lo, hi)) if lo == hi => Some(Some(lo))
+              case _ => None
+            }
+          }
+        case _ => None
+      }
+    // (histogram column h, constant column c), keys emitted in
+    // groupCols order via `swap`; a constant failing its conjuncts
+    // leaves the layer no rows, and an undecidable constant-column test
+    // (undecodable token under a range) declines the layer
+    def pairs(h: Int, c: Int, swap: Boolean) = for {
+      ct <- constToken(groupCols(c))
+      cPasses <- ct.fold(Option(preds(c).nullPasses))(preds(c).entryPasses)
+      kept <- if (!cPasses) Some(Nil) else histCounts(groupCols(h), preds(h))
+    } yield kept.map { case (hv, cnt) =>
+      (if (swap) Seq(ct, hv) else Seq(hv, ct)) -> cnt }
+    groupCols.size match {
+      case 0 => Some(Seq(Nil -> n))
+      case 1 => histCounts(groupCols.head, preds.head)
+        .map(_.map { case (g, cnt) => Seq(g) -> cnt })
+      case _ => pairs(0, 1, swap = false).orElse(pairs(1, 0, swap = true))
+    }
   }
 
   /** Core of [[chainTopKLayers]], generic over the sort key's envelope
@@ -1487,122 +1439,9 @@ object NdjsonIngest {
       zoneKeep(statsLines(tableDir, l).getOrElse(Seq.empty), zone)),
       pinSchema)
 
-  /** EXACT count of rows matching the conjuncts, from the `_stats`
-    * sidecars alone — no parquet footer opens (the reference's
-    * CountFilterNode intersected with RangeSelection, at layer
-    * granularity). Per layer the count is decidable when:
-    *  - the zone test EXCLUDES the layer → 0 (no row can match);
-    *  - every conjunct's pass count is pinned exactly AND AT MOST ONE
-    *    of them passes fewer than all `n` rows — rows failing the
-    *    conjunction then fail exactly that one conjunct, so the
-    *    intersection is its pass count (the all-pass and single-conjunct
-    *    cases fall out as the 0- and 1-loose specializations; with TWO
-    *    loose conjuncts the overlap of their failure sets is unknowable
-    *    from per-column ledgers).
-    * Any undecidable layer makes the whole answer None — callers fall
-    * back to the zone-narrowed counting scan they already had. APPEND-
-    * ONLY chains only (merge-on-read counts are argmax results, not
-    * layer sums) — gate on [[chainMergeFree]] first.
-    */
-  def chainMatchCount(tableDir: String, chain: Seq[String],
-      zone: Zone = Zone.empty): Option[Long] = {
-    if (zone.isEmpty) return chainRowCount(tableDir, chain)
-    val perLayer = chain.map { l =>
-      val lines = statsLines(tableDir, l).getOrElse(Seq.empty)
-      if (!zoneKeep(lines, zone)) Some(0L)
-      else nFromLines(lines).flatMap { n =>
-        val passes = conjunctPassCounts(lines, n, zone)
-        if (passes.exists(_.isEmpty)) None
-        else {
-          val loose = passes.flatten.filter(_ < n)
-          if (loose.size <= 1) Some(loose.headOption.getOrElse(n))
-          else None
-        }
-      }
-    }
-    if (perLayer.exists(_.isEmpty)) None else Some(perLayer.flatten.sum)
-  }
-
-  /** EXACT single-column GROUPED counts from the `_stats` sidecars alone
-    * — the layer-level analog of the reference's Aggregated action over
-    * per-value bitmap cardinalities: each layer's complete value
-    * histogram (written for low-cardinality string/date columns) sums
-    * across the chain, no parquet footer opens. Group tokens are the
-    * sidecar encoding (strings verbatim, dates as epoch-day doubles);
-    * None in the group slot is the null group.
-    *
-    * Filter conjuncts compose two ways:
-    *  - conjuncts ON the group column apply ENTRY-WISE to the histogram
-    *    (a range keeps entries inside [lo, hi], an in-set keeps members,
-    *    isNotNull drops the null group, isNull keeps ONLY it) — exact
-    *    for any layer with a histogram, no containment needed;
-    *  - every OTHER conjunct must provably pass ALL of the layer's rows
-    *    (envelope containment + zero nulls), else the per-group split is
-    *    unknowable and the layer decides the whole answer is None
-    *    (callers fall back to the zone-narrowed scan).
-    * Zone-excluded layers contribute nothing. APPEND-ONLY chains only —
-    * gate on [[chainMergeFree]] first.
-    */
-  def chainGroupCount(tableDir: String, chain: Seq[String],
-      groupCol: String, zone: Zone = Zone.empty)
-      : Option[Seq[(Option[String], Long)]] = {
-    // disjunctive conjuncts zone-narrow per layer; a group whose arms
-    // are all COMPLETE and constrain ONLY the group column applies
-    // ENTRY-WISE to the histogram tokens (the disjunction is then a
-    // function of the group value — exactly as sound as the plain
-    // group-column range test); every OTHER group must provably pass ALL
-    // of a layer's rows, since its per-group split is unknowable from
-    // per-column ledgers
-    val p = groupPred(groupCol, zone)
-    groupCountLayers(tableDir, chain, zone, Set(groupCol)) { (lines, n) =>
-      // isNull(g) keeps only the null group: no histogram needed
-      val kept =
-        if (p.isNull) Some(Nil)
-        else histExactFromLines(lines, groupCol)
-          .flatMap(histEntriesWhere(_, p.entryPasses))
-      kept.flatMap { k =>
-        if (!p.nullPasses) Some(k)
-        else nnFromLines(lines, groupCol).map(nn =>
-          if (n - nn > 0) k :+ ((None: Option[String]), n - nn) else k)
-      }
-    }
-  }
-
-  /** The per-layer skeleton of the sidecar grouped counts: a zone-
-    * excluded layer contributes nothing; a kept layer is decidable only
-    * when every conjunct NOT on a group column provably passes ALL its
-    * rows (or-groups not entirely on one group column included), and
-    * then `layer(lines, n)` gives its per-group counts. Any undecidable
-    * layer → None; otherwise the layers' counts sum group-wise.
-    */
-  private def groupCountLayers[K](tableDir: String, chain: Seq[String],
-      zone: Zone, groupCols: Set[String])(
-      layer: (Seq[Array[String]], Long) => Option[Seq[(K, Long)]])
-      : Option[Seq[(K, Long)]] = {
-    val others = Zone(
-      zone.ranges.filterNot(r => groupCols(r._1)),
-      zone.strEquals.filterNot(s => groupCols(s._1)),
-      zone.nullCols.filterNot(groupCols),
-      zone.notNullCols.filterNot(groupCols),
-      zone.orGroups.filterNot(orGroupSingleColumn(_).exists(groupCols)))
-    val perLayer = chain.map { l =>
-      val lines = statsLines(tableDir, l).getOrElse(Seq.empty)
-      if (!zoneKeep(lines, zone)) Some(Nil)
-      else nFromLines(lines).flatMap { n =>
-        if (conjunctPassCounts(lines, n, others).forall(_.exists(_ == n)))
-          layer(lines, n)
-        else None
-      }
-    }
-    if (perLayer.exists(_.isEmpty)) None
-    else Some(perLayer.flatten.flatten
-      .groupBy(_._1).toSeq
-      .map { case (g, xs) => (g, xs.map(_._2).sum) })
-  }
-
   /** Per-column slice of the filter conjuncts as they apply to a group
-    * column's histogram tokens — shared by the one- and two-column
-    * grouped metadata counts. Ranges only form on numeric/date columns,
+    * column's histogram tokens in [[chainCountBracket]]. Ranges only
+    * form on numeric/date columns,
     * so tokens under a range are epoch-day doubles by construction.
     */
   private final case class GroupPred(
@@ -1642,84 +1481,6 @@ object NdjsonIngest {
       zone.nullCols.contains(c), zone.notNullCols.contains(c),
       zone.orGroups.filter(orGroupSingleColumn(_).contains(c)))
 
-  /** EXACT TWO-column grouped counts from the sidecars alone: a layer is
-    * decidable when ONE group column has a complete value histogram and
-    * the OTHER is provably layer-CONSTANT (all `n` rows share one value —
-    * envelope min==max with a full non-null ledger — or all rows null),
-    * so every histogram entry pairs with that constant. The canonical
-    * win is a day-partitioned chain grouped by (day, type): day is
-    * constant per layer, type has a complete histogram — zero footers.
-    * Conjuncts on a group column apply entry-wise (constant columns test
-    * their single value) — or-groups whose arms all constrain ONE group
-    * column included, exactly like the one-column rollup; every other
-    * conjunct must provably pass ALL rows. Any undecidable layer → None
-    * (callers fall back to the grouping scan). APPEND-ONLY chains only —
-    * gate on [[chainMergeFree]].
-    */
-  def chainGroupCountTwo(tableDir: String, chain: Seq[String],
-      colA: String, colB: String, zone: Zone = Zone.empty)
-      : Option[Seq[((Option[String], Option[String]), Long)]] = {
-    val pA = groupPred(colA, zone)
-    val pB = groupPred(colB, zone)
-    // the column's single value across ALL n rows: Some(Some(tok)) when
-    // constant non-null, Some(None) when all-null, None when unprovable.
-    // Tokens use the histogram encoding (dates as epoch-day doubles), so
-    // envelope doubles stringify identically to histogram tokens.
-    def constToken(lines: Seq[Array[String]], n: Long,
-        c: String): Option[Option[String]] =
-      nnFromLines(lines, c) match {
-        case Some(0L) => Some(None)
-        case Some(nn) if nn == n =>
-          envFromLines(lines, c) match {
-            // min==max proves a constant only inside the exactness
-            // window: a long column holding {2^60, 2^60+1} records a
-            // collapsed lo==hi envelope and is NOT constant (exactVal)
-            case Some((lo, hi)) if lo == hi && exactVal(lo) =>
-              Some(Some(lo.toString))
-            case Some(_) => None
-            case None => strEnvFromLines(lines, c) match {
-              case Some((lo, hi)) if lo == hi => Some(Some(lo))
-              case _ => None
-            }
-          }
-        case _ => None
-      }
-    groupCountLayers(tableDir, chain, zone, Set(colA, colB)) { (lines, n) =>
-      // (histogram column h, constant column c); emit pairs in (A, B)
-      // order via `swap`
-      def oneWay(h: String, ph: GroupPred, c: String, pc: GroupPred,
-          swap: Boolean)
-          : Option[Seq[((Option[String], Option[String]), Long)]] =
-        for {
-          hist <- histExactFromLines(lines, h)
-          ct <- constToken(lines, n, c)
-          // an undecidable constant-column test (undecodable token under
-          // a range) declines the layer — never throw
-          cPasses <- ct match {
-            case Some(t) => pc.entryPasses(t)
-            case None => Some(pc.nullPasses)
-          }
-          kept <-
-            if (!cPasses) Some(Nil)
-            else histEntriesWhere(hist, ph.entryPasses)
-        } yield {
-          if (!cPasses) Nil
-          else {
-            val nnH = nnFromLines(lines, h).getOrElse(
-              hist.map(_._2).sum) // ledger implied by the histogram
-            val withNull =
-              if (ph.nullPasses && n - nnH > 0)
-                kept :+ ((None: Option[String]), n - nnH)
-              else kept
-            withNull.map { case (hv, cnt) =>
-              (if (swap) (ct, hv) else (hv, ct)) -> cnt }
-          }
-        }
-      oneWay(colA, pA, colB, pB, swap = false)
-        .orElse(oneWay(colB, pB, colA, pA, swap = true))
-    }
-  }
-
   /** Zone-pruned range read over a MERGE-ON-READ chain. A layer whose
     * envelope excludes the asked conjuncts can't SUPPLY a matching row,
     * but its rows still SHADOW same-key rows in older layers (and its
@@ -1743,7 +1504,7 @@ object NdjsonIngest {
   def readChainRangesMerged(spark: SparkSession, tableDir: String,
       chain: Seq[String], pk: String, zone: Zone,
       pinSchema: Option[StructType] = None,
-      // extra candidacy restriction (e.g. [[chainTopKLayersMerged]]):
+      // extra candidacy restriction (e.g. [[chainTopKLayers]]):
       // layers outside the set degrade to pk-only shadow scans exactly
       // like zone-excluded ones — they can't supply an emitted row but
       // still override older versions and carry tombstones
@@ -1792,8 +1553,7 @@ object NdjsonIngest {
     * exactly the complement, isNotNull exactly the non-null count —
     * None when only bounds are known (partial containment, missing
     * ledger). The single source of the containment rules shared by the
-    * filtered top-k (failure caps = n − pass), the filtered count, and
-    * the grouped count's whole-layer test.
+    * filtered top-k (failure caps = n − pass) and the count bracket.
     */
   private def conjunctPassCounts(lines: Seq[Array[String]], n: Long,
       zone: Zone): Seq[Option[Long]] =
@@ -1950,8 +1710,8 @@ object NdjsonIngest {
   /** Keep a histogram's entries passing `pass`, DECLINING the whole
     * histogram when any token is undecidable (None from the predicate):
     * the exact grouped/count paths must never consume a histogram they
-    * can't fully reason about. Shared by the one- and two-column
-    * grouped metadata counts.
+    * can't fully reason about. Shared by the count bracket's group
+    * columns and the or-group histogram count.
     */
   private def histEntriesWhere(hist: Seq[(String, Long)],
       pass: String => Option[Boolean])
@@ -2497,9 +2257,70 @@ object NdjsonIngest {
     (chain, kind)
   }
 
-  private val mergeFreeCache =
+  /** Commit kinds whose layers the plain layer-union readers read
+    * exactly: uniqueness-enforced appends and the chain-resetting
+    * snapshot/compact (zero shadow capacity).
+    */
+  private val UnionKinds = Set("snapshot", "append", "compact")
+
+  /** One chain layer as the commit log and its version dir describe it:
+    * the kind of the commit that introduced it (None when that entry was
+    * gc'd from the log), and whether the dir holds tombstones / data
+    * files. Committed layer dirs are immutable, so this is cacheable.
+    */
+  private final case class LayerOrigin(kind: Option[String], tombs: Boolean,
+      data: Boolean)
+
+  private val originCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (java.nio.file.attribute.FileTime, Long, Boolean)]()
+      (java.nio.file.attribute.FileTime, Long, Seq[LayerOrigin])]()
+
+  /** [[LayerOrigin]] per layer of `chain` — ONE commit-log walk shared by
+    * [[chainMergeFree]], [[shadowCaps]] and every bound built on them.
+    * Cached per (dir, chain) so per-query planning doesn't re-walk the
+    * log — but STAMP-validated by the newest log entry's (mtime, size),
+    * like sidecarCache: a table dir wiped and re-ingested at the same
+    * path can reproduce the same layer NAMES under different commit
+    * KINDS, and serving a stale merge-free=true for what is now an
+    * upsert chain would resurrect superseded rows through the plain
+    * union readers.
+    */
+  private def layerOrigins(tableDir: String,
+      chain: Seq[String]): Seq[LayerOrigin] = {
+    if (chain.isEmpty) return Nil
+    val stamp: Option[(java.nio.file.attribute.FileTime, Long)] =
+      commits(tableDir).lastOption.flatMap { s =>
+        scala.util.Try {
+          val a = java.nio.file.Files.readAttributes(
+            java.nio.file.Paths.get(tableDir, "_log", s.toString),
+            classOf[java.nio.file.attribute.BasicFileAttributes])
+          (a.lastModifiedTime, a.size)
+        }.toOption
+      }
+    def walk(): Seq[LayerOrigin] = {
+      // a commit's chain ends with the layer it introduced, so
+      // (layer → kind) is single-valued by construction
+      val intro = commits(tableDir).map(logEntry(tableDir, _)).flatMap {
+        case (c, kind) => c.lastOption.map(_ -> kind)
+      }.toMap
+      chain.map(l => LayerOrigin(intro.get(l),
+        new java.io.File(s"$tableDir/$l/_tombstones").isDirectory,
+        layerHasData(tableDir, l)))
+    }
+    stamp match {
+      case None => walk() // no/unreadable log: never cache
+      case Some((mt, sz)) =>
+        if (originCache.size > 1024) originCache.clear() // stale keys
+        val key = (tableDir, chain.mkString(","))
+        val c = originCache.get(key)
+        if (c != null && c._1 == mt && c._2 == sz) c._3
+        else {
+          val v = walk()
+          originCache.put(key, (mt, sz, v))
+          v
+        }
+    }
+  }
 
   /** True when every layer of `chain` was introduced by a plain-union
     * commit (snapshot/append/compact) and carries no tombstones — i.e.
@@ -2512,55 +2333,9 @@ object NdjsonIngest {
     * already using). Callers pass the chain they resolved once (see
     * [[readChainRanges]]).
     */
-  def chainMergeFree(tableDir: String, chain: Seq[String]): Boolean = {
-    if (chain.isEmpty) return true
-    // cached per (dir, chain) so per-query planning doesn't re-walk the
-    // commit log — but STAMP-validated by the newest log entry's
-    // (mtime, size), like sidecarCache: a table dir wiped and
-    // re-ingested at the same path can reproduce the same layer NAMES
-    // under different commit KINDS, and serving a stale merge-free=true
-    // for what is now an upsert chain would resurrect superseded rows
-    // through the plain union readers.
-    val stamp: Option[(java.nio.file.attribute.FileTime, Long)] =
-      commits(tableDir).lastOption.flatMap { s =>
-        scala.util.Try {
-          val a = java.nio.file.Files.readAttributes(
-            java.nio.file.Paths.get(tableDir, "_log", s.toString),
-            classOf[java.nio.file.attribute.BasicFileAttributes])
-          (a.lastModifiedTime, a.size)
-        }.toOption
-      }
-    def compute(): Boolean = mergeFreeWalk(tableDir, chain)
-    stamp match {
-      case None => compute() // no/unreadable log: never cache
-      case Some((mt, sz)) =>
-        if (mergeFreeCache.size > 1024) mergeFreeCache.clear() // stale keys
-        val key = (tableDir, chain.mkString(","))
-        val c = mergeFreeCache.get(key)
-        if (c != null && c._1 == mt && c._2 == sz) c._3
-        else {
-          val v = compute()
-          mergeFreeCache.put(key, (mt, sz, v))
-          v
-        }
-    }
-  }
-
-  private def mergeFreeWalk(tableDir: String, chain: Seq[String])
-      : Boolean = {
-    {
-      val union = Set("snapshot", "append", "compact")
-      // a commit's chain ends with the layer it introduced, so
-      // (layer → kind) is single-valued by construction
-      val intro = commits(tableDir).map(logEntry(tableDir, _)).flatMap {
-        case (c, kind) => c.lastOption.map(_ -> kind)
-      }.toMap
-      chain.forall { l =>
-        intro.get(l).exists(union) &&
-          !new java.io.File(s"$tableDir/$l/_tombstones").isDirectory
-      }
-    }
-  }
+  def chainMergeFree(tableDir: String, chain: Seq[String]): Boolean =
+    layerOrigins(tableDir, chain)
+      .forall(o => o.kind.exists(UnionKinds) && !o.tombs)
 
   /** The CHANGE FEED over `(fromSeq, toSeq]`: every row the table gained
     * or tombstoned in that commit range, tagged `_change_type`

@@ -5,7 +5,7 @@ import graft.sources.NdjsonIngest
 import graft.lang.Planner
 
 /** The merged-count bracket's two consumers: the top-k routing
-  * heuristic in [[NdjsonIngest.chainTopKLayersMerged]] (skip the bound
+  * heuristic in [[NdjsonIngest.chainTopKLayers]] (skip the bound
   * walk on shadow-heavy chains — the per-layer loss subtraction zeroes
   * every qualifying lower bound) and the `approxCount()` user surface.
   */
@@ -34,7 +34,7 @@ class BracketRoutingSpec extends SparkSpec {
         .toDF("id", "v"), light, "id"))
     NdjsonIngest.upsertDelta(Seq((0L, 5L)).toDF("id", "v"), light, "id")
     val lightChain = NdjsonIngest.latestLayers(light)
-    val keptLight = NdjsonIngest.chainTopKLayersMerged(
+    val keptLight = NdjsonIngest.chainTopKLayers(
       light, lightChain, "v", 3, descending = true)
     assert(keptLight.length < lightChain.length,
       s"upsert-light chain must bound its read: kept $keptLight " +
@@ -51,9 +51,10 @@ class BracketRoutingSpec extends SparkSpec {
       (0 until n).map(i => (i.toLong, (b * 1000 + i).toLong))
         .toDF("id", "v"), heavy, "id"))
     val heavyChain = NdjsonIngest.latestLayers(heavy)
-    val (lo, up) = NdjsonIngest.chainMergedMatchBracket(heavy, heavyChain).get
+    val Seq((_, lo, up)) =
+      NdjsonIngest.chainCountBracket(heavy, heavyChain).get
     assert(lo * 2 < up, s"chain must read shadow-heavy: [$lo, $up]")
-    val keptHeavy = NdjsonIngest.chainTopKLayersMerged(
+    val keptHeavy = NdjsonIngest.chainTopKLayers(
       heavy, heavyChain, "v", 3, descending = true)
     assert(keptHeavy.toSet === heavyChain.toSet,
       s"shadow-heavy chain must skip the bound: kept $keptHeavy")
@@ -94,7 +95,7 @@ class BracketRoutingSpec extends SparkSpec {
     // unknown capacity → the bracket's lower bound collapses, but the
     // walk must still run: the newest append (loss 0 — nothing younger)
     // proves k qualifying rows and its envelope excludes the old layers
-    val kept = NdjsonIngest.chainTopKLayersMerged(
+    val kept = NdjsonIngest.chainTopKLayers(
       dir, chain, "v", 3, descending = true)
     assert(kept.nonEmpty && !kept.contains(chain.head),
       s"the snapshot layer's envelope is excludable: kept $kept of $chain")
@@ -199,10 +200,10 @@ class BracketRoutingSpec extends SparkSpec {
         s"seed $seed: bracket $row must contain $truth")
       // the planner's answer IS the metadata bracket (not a disguised
       // exact counting fallback)
-      val direct = NdjsonIngest.chainMergedMatchBracket(
+      val direct = NdjsonIngest.chainCountBracket(
         dir, NdjsonIngest.latestLayers(dir),
         NdjsonIngest.Zone(ranges = Seq(("v", 20.0, 60.0))))
-      direct.foreach { case (lo, hi) =>
+      direct.foreach { case Seq((_, lo, hi)) =>
         assert(row.getLong(0) === lo && row.getLong(1) === hi,
           s"seed $seed: planner must surface the routed bracket " +
             s"($lo, $hi), got $row") }
@@ -298,9 +299,9 @@ class BracketRoutingSpec extends SparkSpec {
     assert(brackets.exists { case (_, lo, hi) => lo < hi },
       s"merged brackets must be strict somewhere: ${brackets.toSeq}")
     // the planner's answer IS the metadata bracket
-    val direct = NdjsonIngest.chainMergedGroupBracket(
-      merged, NdjsonIngest.latestLayers(merged), "g").get
-      .map { case (g, lo, hi) => (g.orNull, lo, hi) }.toSet
+    val direct = NdjsonIngest.chainCountBracket(
+      merged, NdjsonIngest.latestLayers(merged), groupCols = Seq("g")).get
+      .map { case (Seq(g), lo, hi) => (g.orNull, lo, hi) }.toSet
     assert(brackets.toSet === direct)
   }
 }

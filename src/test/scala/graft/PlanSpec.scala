@@ -196,7 +196,7 @@ class PlanSpec extends SparkSpec {
 
   test("q_zone_prune answers the windowed two-column rollup from layer " +
     "metadata alone — zero parquet footers (was 2 of 30 before " +
-    "chainGroupCountTwo)") {
+    "the two-column sidecar count)") {
     val df = SparkEntry.queries("q_zone_prune")(spark, sfDir)
     // the window's two layers are day-constant with complete event_type
     // histograms, every other layer is zone-excluded — the grouped count

@@ -146,8 +146,18 @@ class SourcesSpec extends SparkSpec {
     assert(rangeRead("country", 0, 1).count() === 6)
   }
 
-  test("readChainTopK: stats-bounded top-k opens only the layers that " +
+  test("chainTopKLayers: stats-bounded top-k opens only the layers that " +
     "can reach the k-th row") {
+    // the limit rewrite's read: the selected layers, re-sorted and cut
+    def topK(dir: String, chain: Seq[String], column: String, k: Int,
+        descending: Boolean, tiebreak: Seq[(String, Boolean)] = Nil) = {
+      val kept = NdjsonIngest.chainTopKLayers(dir, chain, column, k,
+        descending)
+      val keys = ((column, descending) +: tiebreak).map {
+        case (c, d) => if (d) col(c).desc else col(c).asc }
+      NdjsonIngest.readChainSubset(spark, dir, chain, kept)
+        .orderBy(keys: _*).limit(k)
+    }
     val dir = tmpDir() + "/t"
     // four layers clustered ascending by id, 3 rows each
     NdjsonIngest.appendVersion(
@@ -160,30 +170,26 @@ class SourcesSpec extends SparkSpec {
       Seq((31L, "j"), (32L, "k"), (33L, "l")).toDF("id", "s"), dir, "id")
     val chain = NdjsonIngest.latestLayers(dir)
     // ascending top-4: needs layers v1+v2 (3+3 ≥ 4 rows), never v3/v4
-    val asc4 = NdjsonIngest.readChainTopK(spark, dir, chain, "id", 4,
-      descending = false)
+    val asc4 = topK(dir, chain, "id", 4, descending = false)
     val ascFiles = asc4.inputFiles.toSeq
     assert(ascFiles.nonEmpty &&
       ascFiles.forall(f => f.contains("/v1/") || f.contains("/v2/")),
       s"expected only v1/v2, got ${ascFiles.mkString(", ")}")
     assert(asc4.select("id").as[Long].collect().toSeq === Seq(1L, 2L, 3L, 11L))
     // descending top-2: only the last layer can reach the 2nd-best row
-    val desc2 = NdjsonIngest.readChainTopK(spark, dir, chain, "id", 2,
-      descending = true)
+    val desc2 = topK(dir, chain, "id", 2, descending = true)
     assert(desc2.inputFiles.forall(_.contains("/v4/")))
     assert(desc2.select("id").as[Long].collect().toSeq === Seq(33L, 32L))
     // k past the row count: everything is read, full ordering intact
-    val all = NdjsonIngest.readChainTopK(spark, dir, chain, "id", 100,
-      descending = false)
+    val all = topK(dir, chain, "id", 100, descending = false)
     assert(all.count() === 12)
     // overlapping envelopes keep every intersecting layer (superset,
     // never a row loss): top-1 desc over overlapping ids
     val dir2 = tmpDir() + "/o"
     NdjsonIngest.appendVersion(Seq((1L, 5.0), (2L, 9.0)).toDF("id", "v"), dir2, "id")
     NdjsonIngest.appendDelta(Seq((3L, 8.0), (4L, 9.5)).toDF("id", "v"), dir2, "id")
-    val top1 = NdjsonIngest.readChainTopK(spark, dir2,
-      NdjsonIngest.latestLayers(dir2), "v", 1, descending = true,
-      tiebreak = Seq("id" -> false))
+    val top1 = topK(dir2, NdjsonIngest.latestLayers(dir2), "v", 1,
+      descending = true, tiebreak = Seq("id" -> false))
     assert(top1.select("id").as[Long].collect().toSeq === Seq(4L))
     // NULLS in the sort column: they sort FIRST under asc, so a pruned
     // layer may never hide one — layer v2 here holds only a null and a
@@ -195,13 +201,13 @@ class SourcesSpec extends SparkSpec {
       Seq((3L, Option.empty[Double]), (4L, Option(99.0))).toDF("id", "v"),
       dir3, "id")
     val chain3 = NdjsonIngest.latestLayers(dir3)
-    val ascNull = NdjsonIngest.readChainTopK(spark, dir3, chain3, "v", 2,
+    val ascNull = topK(dir3, chain3, "v", 2,
       descending = false, tiebreak = Seq("id" -> false))
     assert(ascNull.select("id").as[Long].collect().toSeq === Seq(3L, 1L))
     // desc: nulls sort LAST — with enough non-null rows the null layer's
     // count must not fake coverage; and when k exceeds the non-null
     // rows, the null still arrives at the tail
-    val descNull = NdjsonIngest.readChainTopK(spark, dir3, chain3, "v", 4,
+    val descNull = topK(dir3, chain3, "v", 4,
       descending = true, tiebreak = Seq("id" -> false))
     assert(descNull.select("id").as[Long].collect().toSeq ===
       Seq(4L, 2L, 1L, 3L))
